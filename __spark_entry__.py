@@ -92,6 +92,8 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     # r10 optimization touches
     "q133_novelty_profile": 10,
     "q128_keep_best_survivors": 10,
+    # r11: run_pipeline pins the merged cube (plan gains a checkpoint)
+    "q38_bloomy_end_to_end": 11,
 }
 
 

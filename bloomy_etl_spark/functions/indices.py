@@ -60,8 +60,21 @@ def ndvi_expr(nir: Column, red: Column) -> Column:
     return (nir - red) / (nir + red + F.lit(EPSILON))
 
 
+def _f32(v: float) -> Column:
+    return F.lit(v).cast("float")
+
+
 def evi_expr(nir: Column, red: Column, blue: Column) -> Column:
-    return 2.5 * (nir - red) / (nir + 6 * red - 7.5 * blue + F.lit(1.0))
+    """EVI in the bands' own precision. The constants are typed FLOAT
+    (all four are exact in float32): FLOAT bands then stay float32
+    end to end, like the reference's NumPy float32 arithmetic, and DOUBLE
+    bands widen them losslessly. Python-float constants would promote only
+    part of a float32 expression to double, which near a zero denominator
+    can clip to the opposite bound from the reference."""
+    return (
+        _f32(2.5) * (nir - red)
+        / (nir + _f32(6.0) * red - _f32(7.5) * blue + _f32(1.0))
+    )
 
 
 def clip(col: Column, lo: float, hi: float) -> Column:

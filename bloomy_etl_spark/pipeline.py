@@ -23,6 +23,17 @@ the per-granule STATS table, tiny at any scale) → semi-join back to
 pixels (broadcast: the kept-granule list is small) → merge (two hash
 aggs) → events (window over the per-day series). No collect touches
 pixel data; sinks write distributed.
+
+Materialization: the merged cube is pinned once (a lazy checkpoint, see
+``session.pin``), so ``series``, ``events``, every sink in
+``write_outputs`` and any later action read ONE materialization instead
+of each re-running scan → masks → stats → semi-join → merge (the
+reference likewise builds one cube object and writes it, its events and
+its index from that object, ``core/pipeline.py:166-176``). It also makes
+the sinks agree by construction: the float sums behind the cube, the
+index and the events come from one execution. The cube is bounded by
+(pixel grid × days), already collapsed over granules; the raw pixel table
+is not pinned (see the stats pin below).
 """
 
 from __future__ import annotations
@@ -31,6 +42,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from bloomy_etl_spark.session import pin
 
@@ -82,6 +94,14 @@ def run_pipeline(
     would re-execute the whole scan→stats chain, because column pruning
     projects each consumer differently and defeats exchange reuse.
     """
+    time_type = raw_pixels.schema["time"].dataType
+    if not isinstance(time_type, TimestampType):
+        # TIMESTAMP_NTZ would otherwise fail deep inside merge_all
+        # (unix_micros over a lambda variable), far from the cause
+        raise TypeError(
+            f"run_pipeline: pixel column 'time' has type "
+            f"{time_type.simpleString()}; expected TIMESTAMP (a UTC instant)"
+        )
     px = with_indices(with_masks(raw_pixels))
     # The per-granule stats table is bounded by granule COUNT (one row
     # per (tile, timestamp)) — tiny at any raster scale. The gate +
@@ -90,9 +110,12 @@ def run_pipeline(
     # un-reused reference re-runs the pixel scan + hash-agg underneath
     # it (measured: 4 source scans on the q38 plan, 0 reused). A LAZY
     # localCheckpoint truncates every reference to the materialized
-    # stats table while deferring compute to the first action; the
-    # full-size pixel table is deliberately NOT checkpointed — at 100 TB
-    # re-scanning pushed-down parquet is cheaper than caching it.
+    # stats table. The merged cube below is pinned the same way, so every
+    # downstream consumer reads it once. The full-size pixel table is
+    # deliberately NOT checkpointed: at 100 TB re-scanning pushed-down
+    # parquet is cheaper than caching it, and with both pins in place it
+    # is scanned twice per run (under this table and under the merge),
+    # however many sinks read the outputs.
     stats = pin(granule_stats(px), eager=False)
 
     # Granule gates: the reference's per-granule early return
@@ -123,10 +146,20 @@ def run_pipeline(
     good_px = px.filter(~F.col("mask")).join(
         F.broadcast(kept_sel), ["tile_id", "time"], "inner" if carry else "left_semi"
     )
-    cube = merge_all(
-        good_px.select("tile_id", "time", "y", "x", "ndvi", "evi", *carry),
-        merge_same_day=merge_same_day,
-        carry=carry,
+    # Every consumer (series → events, the three sinks, follow-up counts)
+    # reads the cube; unpinned, each one re-executes the whole chain above
+    # (measured: 5 pixel scans and 3× the merge shuffles per write_outputs).
+    # Building the lazy checkpoint's RDD prepares the kept-list broadcast,
+    # so the stats scan and the gates already run here, at construction
+    # (under AQE the merge's shuffle stages do too); the rest of the merge
+    # runs on the first action.
+    cube = pin(
+        merge_all(
+            good_px.select("tile_id", "time", "y", "x", "ndvi", "evi", *carry),
+            merge_same_day=merge_same_day,
+            carry=carry,
+        ),
+        eager=False,
     )
     series = ndvi_series(cube)
     events = (

@@ -55,24 +55,30 @@ def write_events_json(events: DataFrame, path: str, mode: str = "overwrite") -> 
 def write_index_json(cube: DataFrame, out_path: str, grid: dict | None = None) -> str:
     """Index JSON sink (S10): the exporter's ``_create_index``
     (``core/arcgis.py:103-153``) — crs, dims, bounds, per-date entries.
-    Built from a collected O(T) aggregate (timestamps + per-date stats),
-    never from pixels."""
-    per_date = (
+    Built from ONE collected O(T) aggregate (per-date stats plus per-date
+    grid extents, reduced to width/height and sorted on the driver), never
+    from pixels."""
+    per_date = sorted(
         cube.groupBy(F.to_date("time").alias("date"))
         .agg(
             F.count(F.lit(1)).alias("n_pixels"),
             F.round(F.avg("ndvi"), 6).alias("ndvi_mean"),
+            F.max("x").alias("max_x"),
+            F.max("y").alias("max_y"),
         )
-        .orderBy("date")
-        .collect()
+        .collect(),
+        # NULLS FIRST, like orderBy("date")
+        key=lambda r: (r["date"] is not None, r["date"]),
     )
-    dims = cube.agg(
-        (F.max("x") + 1).alias("width"), (F.max("y") + 1).alias("height")
-    ).first()
+
+    def extent(col: str):
+        vals = [r[col] for r in per_date if r[col] is not None]
+        return max(vals) + 1 if vals else None
+
     index = {
         "crs": (grid or {}).get("crs", "EPSG:4326"),
-        "width": dims["width"],
-        "height": dims["height"],
+        "width": extent("max_x"),
+        "height": extent("max_y"),
         "nodata": -9999.0,
         "bands": ["ndvi", "evi"],
         "dates": [

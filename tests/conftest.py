@@ -102,13 +102,17 @@ def pytest_collection_modifyitems(config, items):
         reason="slow (>=10 s measured): opt in with SPARK_GRAFT_SLOW=1"
     )
     for item in items:
-        # nodeid is cwd-relative ("tests/test_x.py::..." from the repo
-        # root); normalize to the bare-file form the list uses, and
-        # strip any parametrization suffix
-        nid = item.nodeid.split("/")[-1]
-        base = re.sub(r"\[.*\]$", "", nid)
-        if base in _SLOW_TESTS or "slow" in item.keywords:
+        if _slow_key(item.nodeid) in _SLOW_TESTS or "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def _slow_key(nodeid: str) -> str:
+    """``_SLOW_TESTS`` form of a nodeid: file basename + ``::`` + test
+    path, parametrization suffix stripped. The nodeid is cwd-relative
+    ("tests/test_x.py::..." from the repo root); the parameter id is cut
+    BEFORE taking the basename, since an id may itself contain ``/``."""
+    path, _, test = re.sub(r"\[.*\]$", "", nodeid).partition("::")
+    return f"{os.path.basename(path)}::{test}"
 
 
 @pytest.fixture(scope="session")

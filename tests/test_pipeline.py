@@ -6,9 +6,11 @@ tests cover the orchestrator itself: flag semantics, stage wiring, sinks.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from bloomy_etl_spark.operators.bloomy_queries import synthetic_pixels
@@ -63,3 +65,59 @@ def test_write_outputs(spark, tmp_path):
     assert idx["dates"] and idx["width"] > 0
     # events sink directory exists (may hold only _SUCCESS when no events)
     assert os.path.isdir(paths["events"])
+
+
+def _records_read(spark, group: str) -> int:
+    """Input records of every stage that ran under ``group``, read back
+    from the JVM status store (source scans and checkpoint-block reads)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    seen: set[int] = set()
+    n = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        it = store.job(jid).stageIds().iterator()
+        while it.hasNext():
+            sid = it.next()
+            if sid in seen:
+                continue
+            seen.add(sid)
+            st = store.lastStageAttempt(sid)
+            if st.status().toString() not in ("SKIPPED", "PENDING"):
+                n += st.inputRecords()
+    return n
+
+
+def test_write_outputs_reads_pixels_once_per_stage(spark, tmp_path):
+    """The cube is materialized once per run: the three sinks read it
+    instead of each re-running scan → masks → stats → semi-join → merge
+    (unpinned, one run + write_outputs read 5× the pixel table)."""
+    src = str(tmp_path / "pixels")
+    synthetic_pixels(spark, SF_SMOKE).write.parquet(src)
+    n_px = spark.read.parquet(src).count()
+    sc = spark.sparkContext
+    group = "test-write-outputs-scans"
+    sc.setJobGroup(group, "run_pipeline + write_outputs")
+    try:
+        res = run_pipeline(spark.read.parquet(src))
+        paths = write_outputs(res, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < _records_read(spark, group) <= 3 * n_px
+    # the sinks come from one execution, so they agree exactly
+    with open(paths["index"]) as f:
+        idx = json.load(f)
+    assert sum(d["n_pixels"] for d in idx["dates"]) == spark.read.parquet(
+        paths["cube"]).count()
+
+
+def test_naive_timestamps_fail_at_the_boundary(spark):
+    px = spark.createDataFrame(
+        [("T0", datetime.datetime(2024, 6, 1, 10), 0, 0, 500.0, 3000.0, 400.0, 0)],
+        "tile_id string, time timestamp_ntz, y int, x int, "
+        "red double, nir double, blue double, fmask int",
+    )
+    with pytest.raises(TypeError, match=r"'time'.*timestamp_ntz.*TIMESTAMP"):
+        run_pipeline(px)

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from bloomy_etl_spark.functions.indices import with_indices, with_masks
+from bloomy_etl_spark.functions.indices import evi_expr, with_indices, with_masks
 from bloomy_etl_spark.operators.events import detect_events
 from bloomy_etl_spark.operators.merge import merge_all, merge_spatial_tiles
 from bloomy_etl_spark.operators.quality import (
@@ -78,6 +78,42 @@ def test_evi_clip(spark):
     row = with_indices(with_masks(df)).collect()[0]
     assert not row["mask"]
     assert row["evi"] == 3.0
+
+
+def test_evi_float32_bands_near_zero_denominator(spark):
+    """FLOAT bands stay float32 end to end, like the reference's NumPy
+    float32 arithmetic. At this pixel (from a seeded float32 raster) the
+    float32 denominator rounds to exactly 0, so NumPy clips +inf to +3;
+    promoting only ``7.5 * blue`` and ``+ 1`` to double gave -2.44e-4 and
+    clipped to the OPPOSITE bound."""
+    import numpy as np
+
+    f32 = np.float32
+    red, nir, blue = f32(848.6898), f32(2689.0447), f32(1037.6245)
+    mixed = float(nir + f32(6) * red) - 7.5 * float(blue) + 1.0
+    assert mixed == pytest.approx(-2.44e-4, rel=1e-2)
+    with np.errstate(divide="ignore"):
+        want = np.clip(
+            f32(2.5) * (nir - red) / (nir + f32(6) * red - f32(7.5) * blue + f32(1)),
+            -3, 3,
+        )
+    df = spark.createDataFrame(
+        [px("T1", T0, 0, 0, float(red), float(nir), float(blue), 64)],
+        PIXEL_SCHEMA.replace("double", "float"),
+    )
+    row = with_indices(with_masks(df)).collect()[0]
+    assert not row["mask"]
+    assert row["evi"] == want == 3.0
+
+
+def test_evi_double_bands_unchanged(spark):
+    """The FLOAT-typed constants are exact in float32, so DOUBLE bands give
+    the all-double result bit for bit."""
+    rows = [(500.0 + 37.3 * i, 3000.0 - 11.9 * i, 400.0 + 7.7 * i) for i in range(20)]
+    df = spark.createDataFrame(rows, "red double, nir double, blue double")
+    got = [r[0] for r in df.select(
+        evi_expr(F.col("nir"), F.col("red"), F.col("blue"))).collect()]
+    assert got == [2.5 * (n - r) / (n + 6 * r - 7.5 * b + 1.0) for r, n, b in rows]
 
 
 def test_granule_stats_double_count(spark, masked):

@@ -182,3 +182,24 @@ def test_index_and_style_json(spark, tmp_path):
     assert idx["dates"][0]["n_pixels"] == 4
     style = json.load(open(write_style_json(str(tmp_path / "style.json"))))
     assert style["field"] == "ndvi" and len(style["classBreakInfos"]) == 5
+
+
+def _index_bytes(width, height, dates) -> str:
+    return json.dumps({
+        "crs": "EPSG:4326", "width": width, "height": height,
+        "nodata": -9999.0, "bands": ["ndvi", "evi"], "dates": dates,
+    }, indent=2)
+
+
+def test_index_json_exact_bytes(spark, tmp_path):
+    """The index is one per-date aggregate (grid extents reduced on the
+    driver); the file is byte-for-byte what the two-pass build wrote,
+    including the NULL width/height of an empty cube."""
+    cube = make_cube(spark)
+    full = open(write_index_json(cube, str(tmp_path / "full.json"))).read()
+    assert full == _index_bytes(2, 2, [
+        {"date": "2024-06-01", "n_pixels": 4, "ndvi_mean": 0.433333},
+        {"date": "2024-06-02", "n_pixels": 2, "ndvi_mean": 0.5},
+    ])
+    empty = open(write_index_json(cube.limit(0), str(tmp_path / "empty.json"))).read()
+    assert empty == _index_bytes(None, None, [])
