@@ -83,7 +83,6 @@ def _last_green_round(repo_dir: str | None = None) -> dict[str, int]:
 # CORRECTNESS_r*.json at or after that round records them green.
 _TOUCHED_IN_ROUND: dict[str, int] = {
     # r9 optimization commits; last driver-green r6–r8 (pre-touch)
-    "q32_simhash_neardups": 9,
     "q82_supplier_pagerank": 9,
     "q91_centroid_label_audit": 9,
     "q100_hist_quantiles": 9,
@@ -91,9 +90,27 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q126_ann_recall": 9,
     # r10 optimization touches
     "q133_novelty_profile": 10,
-    "q128_keep_best_survivors": 10,
     # r11: run_pipeline pins the merged cube (plan gains a checkpoint)
     "q38_bloomy_end_to_end": 11,
+    # r12: literal/identifier SQL text moved into functions/sqltext
+    # (k-means, PQ, LSH, k-center, power iteration), simhash's fold
+    # rendered as SQL, keep_best_per_cluster's id-type guard; this also
+    # registers the 2955556 construction rewrites that were never listed
+    "q32_simhash_neardups": 12,
+    "q34_embedding_neardups": 12,
+    "q36_ann_lsh_topk": 12,
+    "q52_embedding_quantization": 12,
+    "q54_kmeans_clusters": 12,
+    "q101_pq_codes": 12,
+    "q102_pq_adc_topk": 12,
+    "q103_semdedup_kept": 12,
+    "q104_ivfpq_topk": 12,
+    "q105_embedding_covariance": 12,
+    "q106_ivfpq_residual_topk": 12,
+    "q107_ivfpq_refined_topk": 12,
+    "q108_top_eigenvector": 12,
+    "q128_keep_best_survivors": 12,
+    "q139_kcenter_coreset": 12,
 }
 
 

@@ -18,32 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def lit_double_array(xs) -> Column:
-    """``array<double>`` literal built in ONE driver→JVM round trip.
-
-    Semantically identical to ``F.array(*[F.lit(float(x)) for x in xs])``
-    — both parse/construct to ``CreateArray`` over double ``Literal``s —
-    but O(1) py4j calls instead of O(len). Element-wise construction was
-    measured at ~1.3 ms per literal (py4j round trip): the ANN operators
-    embed thousands of plane/codebook constants per query, which made
-    DataFrame CONSTRUCTION the dominant cost of the whole query at
-    bench scale (q36: 12.5 s of py4j vs 1.1 s of Catalyst analysis).
-    ``repr(float)`` is the shortest round-trip rendering and Spark's SQL
-    parser reads double literals via ``Double.parseDouble``, so values
-    are preserved bit-exactly. Finite values only (the callers embed
-    trained constants; no NaN/Inf)."""
-    return F.expr("array(" + ",".join(f"{float(x)!r}D" for x in xs) + ")")
-
-
-def lit_double_matrix(rows) -> Column:
-    """``array<array<double>>`` literal in one round trip — the nested
-    companion of :func:`lit_double_array` (PQ codebooks)."""
-    inner = ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in r) + ")" for r in rows
-    )
-    return F.expr(f"array({inner})")
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),

@@ -615,7 +615,8 @@ _COS = (
 )
 
 # squared L2 between a (float) vector column and a double centroid list,
-# accumulated in index order — matches clustering._dist2 / pq._sub_dist2
+# accumulated in index order — matches clustering._dist2_sql /
+# pq._sub_dist2_sql
 _D2 = (
     "list_sum(list_transform(list_zip({a}, {b}), "
     "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"

@@ -33,41 +33,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dist2(vec_col, centroid: list[float]):
-    """Squared L2 distance to a literal centroid, summed in index order."""
-    from bloomy_etl_spark.functions.vectors import lit_double_array
-
-    carr = lit_double_array(centroid)
-    diffs = F.zip_with(
-        vec_col, carr,
-        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
+from bloomy_etl_spark.functions.sqltext import double_array, ident
 
 
 def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
-    """SQL text of :func:`_dist2` — identical zip_with/aggregate tree,
-    rendered so an argmin over k centroids costs ONE driver→JVM call
-    instead of ~k·(dim+10) (see functions.vectors.lit_double_array)."""
-    arr = "array(" + ",".join(f"{float(c)!r}D" for c in centroid) + ")"
+    """SQL text of the squared L2 distance to a literal centroid, summed
+    in index order, so an argmin over k centroids costs ONE driver→JVM
+    call instead of ~k·(dim+10) (see ``functions.sqltext``)."""
     return (
-        f"aggregate(zip_with({vec_sql}, {arr}, "
+        f"aggregate(zip_with({vec_sql}, {double_array(centroid)}, "
         "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         "0.0D, (acc, v) -> acc + v)"
     )
+
+
+def _dist2_e6(vec_col: str, centroid: list[float], scale: int):
+    """``floor(scale · d²)`` as int64 — the quantized squared distance
+    every k-center decision compares (exact integer ties, oracle-
+    replayable)."""
+    return F.floor(
+        F.expr(_dist2_sql(ident(vec_col), centroid)) * F.lit(float(scale))
+    ).cast("long")
 
 
 def assign_clusters(embs: DataFrame, centroids: list[list[float]],
                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Label every vector with its nearest centroid (squared L2, ties to
     the lower cluster index) and the distance: columns ``cluster``,
-    ``dist2`` appended. The scored array is rendered as one SQL string
-    (node-identical tree to the fluent form, same argmin/tie
-    semantics) — k-means rebuilds this expression EVERY Lloyd round, so
-    construction cost is per-round driver overhead."""
+    ``dist2`` appended. The scored array is rendered as one SQL string —
+    k-means rebuilds this expression EVERY Lloyd round, so construction
+    cost is per-round driver overhead."""
     scored = ",".join(
-        f"named_struct('d', {_dist2_sql(f'`{vec_col}`', c)}, 'c', {i})"
+        f"named_struct('d', {_dist2_sql(ident(vec_col), c)}, 'c', {i})"
         for i, c in enumerate(centroids)
     )
     best = F.expr(f"array_min(array({scored}))")
@@ -181,12 +178,10 @@ def kcenter_greedy(embs: DataFrame, k: int = 8, id_col: str = "vec_id",
     centers = [(0, first[0][id_col],
                 [float(x) for x in first[0][vec_col]], 0)]
 
-    def _d2_e6(c):
-        return F.floor(_dist2(F.col(vec_col), c) * F.lit(float(scale))) \
-                .cast("long")
-
     for r in range(1, k):
-        mind = F.array_min(F.array(*[_d2_e6(c) for _, _, c, _ in centers]))
+        mind = F.array_min(F.array(*[
+            _dist2_e6(vec_col, c, scale) for _, _, c, _ in centers
+        ]))
         pick = (
             embs.filter(
                 ~F.col(id_col).isin([i for _, i, _, _ in centers])
@@ -206,7 +201,8 @@ def kcenter_greedy(embs: DataFrame, k: int = 8, id_col: str = "vec_id",
 
     nearest = F.array_min(
         F.array(*[
-            F.struct(_d2_e6(c).alias("d"), F.lit(r).alias("r"))
+            F.struct(_dist2_e6(vec_col, c, scale).alias("d"),
+                     F.lit(r).alias("r"))
             for r, _, c, _ in centers
         ])
     )

@@ -27,9 +27,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from bloomy_etl_spark.session import pin
 
+from bloomy_etl_spark.functions.sqltext import ident
 from bloomy_etl_spark.functions.text import md5_int, tokens, word_shingles
 from bloomy_etl_spark.functions.vectors import dot, norm, normalize
 
@@ -135,15 +137,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 # ---------------------------------------------------------------------------
 # shingle inverted index + exact Jaccard
 # ---------------------------------------------------------------------------
-
-def shingle_index(docs: DataFrame, n: int = 3, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """(id, shingle) inverted index — distinct n-word shingles per doc."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
                         text_col: str = "text", id_col: str = "doc_id",
@@ -922,16 +915,14 @@ def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text",
     row = docs.select(
         F.col(id_col).alias("doc_id"), hashes.alias("hs"), F.size(hashes).alias("n")
     )
-    fingerprint = None
-    for b in range(bits):
-        n_set = F.size(
-            F.filter(F.col("hs"), lambda h: F.shiftright(h, b).bitwiseAND(1) == 1)
-        )
-        term = F.when(n_set * 2 > F.col("n"), F.lit(2 ** b).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return row.select("doc_id", fingerprint.alias("simhash"))
+    # one SQL string over the projected hs/n columns: built fluently the
+    # 32-bit fold cost ~150 py4j round trips per bit
+    fingerprint = " + ".join(
+        f"(CASE WHEN size(filter(hs, h -> (shiftright(h, {b}) & 1) = 1)) * 2 > n "
+        f"THEN CAST({2 ** b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        for b in range(bits)
+    )
+    return row.select("doc_id", F.expr(fingerprint).alias("simhash"))
 
 
 def simhash_block_layout(bits: int, n_blocks: int) -> list[tuple[int, int]]:
@@ -1095,7 +1086,7 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.4,
     ``block_col`` names any coarse cluster column (the oracle-checked q34
     path uses ``label``, which DuckDB can reproduce exactly). Passing
     ``block_col=None`` switches to the REAL scale path: random-hyperplane
-    LSH buckets (``similarity.lsh_bucket``) — each vector lands in one
+    LSH buckets (``similarity._bucket_sql``) — each vector lands in one
     bucket per hash table, pairs are generated per (table, bucket), and
     multi-table collisions collapse with a scalar groupBy. Within-block
     all-pairs on a low-cardinality label column is quadratic in block
@@ -1127,7 +1118,7 @@ def embedding_near_dups(embs: DataFrame, threshold: float = 0.4,
         )
     else:
         # shared bucket derivation with lsh_topk — one definition, no drift
-        stacked = stacked_lsh_buckets(f"`{vec_col}`", lsh_tables, lsh_bits, dim)
+        stacked = stacked_lsh_buckets(ident(vec_col), lsh_tables, lsh_bits, dim)
         block_src = embs.select(
             F.col(id_col).alias("_id"), stacked.alias("blk"), prepped.alias("_nv"), *extra
         )
@@ -1306,7 +1297,16 @@ def keep_best_per_cluster(labels: DataFrame, docs: DataFrame,
     order-flip — which the exact-quality contract above already
     implies; a pathological giant cluster now costs one combiner cell
     instead of serializing its members through one window partition.
+    Any other id type raises ``TypeError`` rather than come back as a
+    silent ``kept_id = NULL`` (what a string id did).
     """
+    id_type = docs.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"keep_best_per_cluster: id_col {id_col!r} is "
+            f"{id_type.simpleString()}; the arg-max negates the id, so it "
+            "must be an integral type (tinyint, smallint, int or bigint)"
+        )
     members = labels.join(
         docs.select(F.col(id_col).alias("node"), quality_col), "node"
     )

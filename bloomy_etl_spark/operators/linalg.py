@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bloomy_etl_spark.functions.sqltext import lit_double_array
+
 
 def _moment_partials(dim: int, vec_col: str):
     tri = dim * (dim + 1) // 2
@@ -231,8 +233,6 @@ def power_iteration_long(cov_long: DataFrame, dim: int, iters: int = 3,
     )
 
     def matvec_df(v_int: list[int]) -> DataFrame:
-        from bloomy_etl_spark.functions.vectors import lit_double_array
-
         vlit = lit_double_array(v_int)
         return (
             full.withColumn(
@@ -257,8 +257,6 @@ def power_iteration_long(cov_long: DataFrame, dim: int, iters: int = 3,
         v = [float(int(np.floor(x / nrm * scale))) for x in w]
     # final step in-plan: mat-vec -> one-row w array (pos-sorted) ->
     # index-order norm fold -> re-quantize -> Rayleigh quotient
-    from bloomy_etl_spark.functions.vectors import lit_double_array
-
     vlit = lit_double_array(v)
     warr = matvec_df([int(x) for x in v]).agg(
         F.transform(

@@ -1929,7 +1929,7 @@ LLM_ORACLE_SQL_Q55 = f"""
 
 
 def _km_dist2(cent_expr: str) -> str:
-    """Squared-L2 SQL fragment matching clustering._dist2's index-order
+    """Squared-L2 SQL fragment matching clustering._dist2_sql's index-order
     accumulation (float element cast to double, then multiply)."""
     return (
         "list_sum(list_transform(list_zip(e.embedding, " + cent_expr + "), "

@@ -126,12 +126,3 @@ def merge_all(pixels: DataFrame, merge_same_day: bool = True,
         merge_same_day,
         carry=carry,
     )
-
-
-def merged_stats(stats: DataFrame) -> DataFrame:
-    """Same-day stats roll-up: valid_pixels_pct = mean of member attrs
-    (merger.py:85-88)."""
-    return stats.groupBy(F.to_date("time").alias("date")).agg(
-        F.avg("valid_pixels_pct").alias("valid_pixels_pct"),
-        F.count(F.lit(1)).alias("num_granules_merged"),
-    )

@@ -35,6 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bloomy_etl_spark.functions.sqltext import (
+    double_array, ident, lit_double_array, lit_double_matrix,
+)
 from bloomy_etl_spark.operators.clustering import kmeans_lloyd
 
 __all__ = ["train_pq", "pq_encode", "pq_search", "pq_search_batch",
@@ -74,32 +77,16 @@ def train_pq(embs: DataFrame, m: int = 4, ksub: int = 16, iters: int = 2,
     return codebooks
 
 
-def _sub_dist2(vec_col, s: int, dsub: int, centroid: list[float]):
-    """Squared L2 from subvector ``s`` of ``vec_col`` to a literal
-    centroid, summed in index order (engine-stable)."""
-    from bloomy_etl_spark.functions.vectors import lit_double_array
-
-    sub = F.slice(vec_col, s * dsub + 1, dsub)
-    # one py4j call per centroid array (see lit_double_array): PQ encode
-    # embeds m*ksub*dsub literals and was construction-bound element-wise
-    carr = lit_double_array(centroid)
-    return F.aggregate(
-        F.zip_with(sub, carr, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 def _sub_dist2_sql(vec_sql: str, s: int, dsub: int,
                    centroid: list[float]) -> str:
-    """SQL text of :func:`_sub_dist2` — the identical
-    slice/zip_with/aggregate tree rendered as a string (see
-    ``lit_double_array`` for why: encode embeds m·ksub·dsub literals and
-    was construction-bound on py4j round trips when built fluently)."""
-    arr = "array(" + ",".join(f"{float(c)!r}D" for c in centroid) + ")"
+    """SQL text of the squared L2 from subvector ``s`` of ``vec_sql`` to a
+    literal centroid, summed in index order (engine-stable). Rendered as
+    a string because encode embeds m·ksub·dsub literals (see
+    ``functions.sqltext``)."""
     return (
         f"aggregate(zip_with(slice({vec_sql}, {s * dsub + 1}, {dsub}), "
-        f"{arr}, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, d) -> acc + d)"
+        f"{double_array(centroid)}, (a, b) -> (a - b) * (a - b)), 0.0D, "
+        "(acc, d) -> acc + d)"
     )
 
 
@@ -109,12 +96,11 @@ def pq_encode(embs: DataFrame, codebooks: list[list[list[float]]],
     """Encode every vector as ``codes: array<int>`` (one code per
     subspace, nearest centroid, ties to the lower index). Expression-
     only — pipelines with the scan at any corpus size. The whole codes
-    expression is rendered as ONE SQL string (node-identical tree to
-    the fluent form, same argmin/tie semantics) so construction costs
-    one driver→JVM call instead of ~m·ksub·dsub."""
+    expression is rendered as ONE SQL string so construction costs one
+    driver→JVM call instead of ~m·ksub·dsub."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-    vec_sql = f"`{vec_col}`"
+    vec_sql = ident(vec_col)
     subs = []
     for s in range(m):
         scored = ",".join(
@@ -152,8 +138,6 @@ def pq_search(codes: DataFrame, codebooks: list[list[list[float]]],
         ])
     score = None
     for s in range(m):
-        from bloomy_etl_spark.functions.vectors import lit_double_array
-
         lut = lit_double_array(luts[s])
         term = F.element_at(lut, F.element_at(F.col("codes"), s + 1) + 1)
         score = term if score is None else score + term
@@ -192,8 +176,6 @@ def _decoded_expr(codebooks: list[list[list[float]]], codes_col="codes"):
     code row represents, usable in any distance expression with zero
     Python in the plan."""
     m = len(codebooks)
-    from bloomy_etl_spark.functions.vectors import lit_double_matrix
-
     cb_lits = [lit_double_matrix(book) for book in codebooks]
     return F.flatten(F.array(*[
         F.element_at(cb_lits[s], F.element_at(F.col(codes_col), s + 1) + 1)
@@ -631,8 +613,6 @@ def reconstruction_mse(embs: DataFrame, codebooks: list[list[list[float]]],
     joined = embs.select(F.col(id_col), F.col(vec_col)).join(enc, id_col)
     err = None
     for s in range(m):
-        from bloomy_etl_spark.functions.vectors import lit_double_matrix
-
         cb = lit_double_matrix(codebooks[s])
         rec = F.element_at(cb, F.element_at(F.col("codes"), s + 1) + 1)
         sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)

@@ -72,15 +72,6 @@ def apply_granule_gates(
     )
 
 
-def gate_pixels(
-    pixels: DataFrame, stats: DataFrame, q: QualityThresholds = DEFAULT_QUALITY
-) -> DataFrame:
-    """Keep only pixels of granules that pass the gates (semi-join back,
-    the relational form of the reference's early ``return None``)."""
-    ok = apply_granule_gates(stats, q).select("tile_id", "time")
-    return pixels.join(ok, ["tile_id", "time"], "left_semi")
-
-
 def filter_timestamps(
     stats: DataFrame,
     q: QualityThresholds = DEFAULT_QUALITY,

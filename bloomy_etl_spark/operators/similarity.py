@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 from bloomy_etl_spark.session import pin
 
-from bloomy_etl_spark.functions.vectors import dot, lit_double_array, norm
+from bloomy_etl_spark.functions.sqltext import double_array, ident
+from bloomy_etl_spark.functions.vectors import dot, norm
 
 
 def cosine_topk(embs: DataFrame, queries: DataFrame, k: int = 5,
@@ -176,40 +177,24 @@ def _hyperplane(table: int, bit: int, dim: int) -> list[float]:
 
 def _dot_plane_sql(vec_sql: str, plane: list[float]) -> str:
     """SQL text of ``functions.vectors.dot(vec, <literal plane>)`` —
-    the identical aggregate/zip_with/cast tree the fluent builder
-    produces, rendered as one string so the whole bucket derivation
-    costs ONE driver→JVM round trip instead of ~70 per (table, bit).
-    repr(float) round-trips double literals bit-exactly through the SQL
-    parser."""
-    arr = "array(" + ",".join(f"{float(w)!r}D" for w in plane) + ")"
+    the same aggregate/zip_with/cast tree, rendered as one string so the
+    whole bucket derivation costs ONE driver→JVM round trip instead of
+    ~70 per (table, bit)."""
     return (
-        f"aggregate(zip_with({vec_sql}, {arr}, "
+        f"aggregate(zip_with({vec_sql}, {double_array(plane)}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "0.0D, (acc, v) -> acc + v)"
     )
 
 
 def _bucket_sql(vec_sql: str, table: int, bits: int, dim: int) -> str:
-    """SQL text of :func:`lsh_bucket` for one table: the same
-    ``0 + CASE WHEN proj > 0 THEN 2^b ELSE 0 END`` chain, left-assoc."""
+    """Sign-pattern bucket id of one hash table, an integer in
+    [0, 2^bits): the ``0 + CASE WHEN proj > 0 THEN 2^b ELSE 0 END``
+    chain, left-assoc."""
     acc = "0"
     for b in range(bits):
         proj = _dot_plane_sql(vec_sql, _hyperplane(table, b, dim))
         acc += f" + (CASE WHEN {proj} > 0 THEN {2 ** b} ELSE 0 END)"
-    return acc
-
-
-def lsh_bucket(vec_col, table: int, bits: int, dim: int):
-    """Sign-pattern bucket id of one hash table: integer in [0, 2^bits)."""
-    acc = F.lit(0)
-    for b in range(bits):
-        plane = _hyperplane(table, b, dim)
-        # lit_double_array: one py4j call per plane, not one per weight
-        # (bucket derivation embeds tables*bits*dim literals; measured
-        # at ~1.3 ms/literal the element-wise form made CONSTRUCTION
-        # the dominant cost of q36 — 12.5 s of py4j round trips)
-        proj = dot(vec_col, lit_double_array(plane))
-        acc = acc + F.when(proj > 0, F.lit(2 ** b)).otherwise(F.lit(0))
     return acc
 
 
@@ -314,19 +299,19 @@ def ivf_topk(embs: DataFrame, queries: DataFrame, k: int = 5,
 def stacked_lsh_buckets(vec_sql: str, tables: int, bits: int, dim: int):
     """One exploded ``(t, bucket)`` struct per hash table — the shared
     bucket-derivation expression for ANN search (:func:`lsh_topk`) and
-    near-dup blocking (``dedup.embedding_near_dups``). Defined once so
-    the two can never silently diverge on bits layout or hyperplane
+    near-dup blocking (``dedup.embedding_near_dups``). The bucket
+    definition lives only here (:func:`_bucket_sql` over
+    :func:`_hyperplane`, literals from ``functions.sqltext``), so the
+    two can never silently diverge on bits layout or hyperplane
     seeding. Stacking all tables into one explode keeps candidate
     generation a single join instead of ``tables`` sequential ones.
 
-    ``vec_sql`` is the vector column as a SQL reference (column name or
-    expression text): the whole derivation — ``tables × bits`` plane
-    dots over ``dim`` literals each — is rendered as ONE SQL string and
-    parsed in a single driver→JVM call. Built fluently this expression
-    cost ~12.5 s of py4j round trips per q36 construction (measured
-    r10) against ~1 s of Catalyst analysis; the parsed tree is
-    node-identical (same CreateArray/Literal/CASE/aggregate shapes), so
-    buckets, plans and results are unchanged."""
+    ``vec_sql`` is the vector column as a SQL reference (``sqltext.ident``
+    of a column name, or expression text): the whole derivation —
+    ``tables × bits`` plane dots over ``dim`` literals each — is rendered
+    as ONE SQL string and parsed in a single driver→JVM call. Built
+    fluently this expression cost ~12.5 s of py4j round trips per q36
+    construction (measured r10) against ~1 s of Catalyst analysis."""
     body = ",".join(
         f"named_struct('t', {t}, 'bucket', "
         f"{_bucket_sql(vec_sql, t, bits, dim)})"
@@ -350,7 +335,7 @@ def lsh_topk(embs: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
         with a single explode so ALL tables join in one pass — a per-table
         join loop would run ``tables`` sequential shuffle stages over the
         same corpus; stacked, the whole candidate generation is one join."""
-        stacked = stacked_lsh_buckets(f"`{vec_col}`", tables, bits, dim)
+        stacked = stacked_lsh_buckets(ident(vec_col), tables, bits, dim)
         return df.select(
             F.col(id_col).alias(id_alias),
             F.col(vec_col).alias(vec_alias),

@@ -31,6 +31,8 @@ without changing the flow.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -694,6 +696,16 @@ def read_novelty_store(spark: SparkSession, gram_dir: str, doc_dir: str,
     )
 
 
+def _pairwise_d2_e6(a: list[float], b: list[float], scale: int) -> int:
+    """Driver-side replay of ``clustering._dist2_e6`` for two center
+    vectors: the same index-order squared-L2 fold, then ``floor(scale·d²)``."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc += d * d
+    return int(math.floor(acc * scale))
+
+
 def streaming_kcenter_ingest(
     embs_stream: DataFrame,
     state_dir: str,
@@ -738,29 +750,15 @@ def streaming_kcenter_ingest(
     latest-snapshot read is replay-stable, like every durable ingest
     here.
     """
-    from bloomy_etl_spark.operators.clustering import _dist2
-
-    def _d2_e6(vec, c):
-        return F.floor(
-            _dist2(vec, c) * F.lit(float(scale))
-        ).cast("long")
-
-    def _pairwise_d2_e6(a: list[float], b: list[float]) -> int:
-        # the same index-order fold as _dist2, replayed driver-side
-        acc = 0.0
-        for x, y in zip(a, b):
-            d = float(x) - float(y)
-            acc += d * d
-        import math
-
-        return int(math.floor(acc * scale))
+    from bloomy_etl_spark.operators.clustering import _dist2_e6
 
     def _thin(centers: list, tau2: int) -> list:
         """Greedy subset pairwise > tau2, scanning in admission order
         (stable: earlier centers win), driver-side over ≤ k+1 rows."""
         kept: list = []
         for cid, vec in centers:
-            if all(_pairwise_d2_e6(vec, kv) > tau2 for _, kv in kept):
+            if all(_pairwise_d2_e6(vec, kv, scale) > tau2
+                   for _, kv in kept):
                 kept.append((cid, vec))
         return kept
 
@@ -793,7 +791,7 @@ def streaming_kcenter_ingest(
         while True:
             if centers:
                 mind = F.array_min(
-                    F.array(*[_d2_e6(F.col(vec_col), c)
+                    F.array(*[_dist2_e6(vec_col, c, scale)
                               for _, c in centers])
                 )
                 cand = pts.filter(
@@ -820,7 +818,7 @@ def streaming_kcenter_ingest(
                 # repeat until the thinned set fits the budget
                 if tau2 == 0:
                     pair_min = min(
-                        _pairwise_d2_e6(a, b)
+                        _pairwise_d2_e6(a, b, scale)
                         for i, (_, a) in enumerate(centers)
                         for _, b in centers[i + 1:]
                     )

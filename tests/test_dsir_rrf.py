@@ -187,6 +187,20 @@ class TestKeepBest:
         assert out[7]["kept_id"] == 7  # tie at 50 -> lower id
         assert out[7]["kept_n_chars"] == 50 and out[7]["n_docs"] == 2
 
+    def test_string_ids_fail_at_the_boundary(self, spark):
+        """The arg-max negates the id; a string id used to come back as
+        a silent ``kept_id = NULL`` instead of an error."""
+        from bloomy_etl_spark.operators.dedup import keep_best_per_cluster
+
+        labels = spark.createDataFrame(
+            [("a", "a"), ("b", "a")], "node string, label string"
+        )
+        docs = spark.createDataFrame(
+            [("a", 100), ("b", 250)], "doc_id string, n_chars long"
+        )
+        with pytest.raises(TypeError, match=r"'doc_id' is string.*integral"):
+            keep_best_per_cluster(labels, docs, "n_chars")
+
 
 class TestQualityPercentileGate:
     def test_exact_quota_per_lang(self, spark):

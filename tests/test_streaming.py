@@ -1712,6 +1712,28 @@ class TestKCenterIngest:
                          r["tau2_e6"])
         assert sorted(map(key, c1)) == sorted(map(key, c2))
 
+    def test_driver_replay_matches_sql_distance(self, spark):
+        """Center thinning replays the quantized squared-L2 on the
+        driver; it must equal the SQL expression that scores batch
+        points, bit for bit, on components with no exact binary form."""
+        from bloomy_etl_spark.operators.clustering import _dist2_e6
+        from bloomy_etl_spark.streaming.ingest import _pairwise_d2_e6
+
+        vecs = [[0.1, 0.2, 0.3], [1 / 3, -2 / 3, 0.7],
+                [1e-7, 123.456, -0.1], [0.3, 0.1, 0.2]]
+        scale = 1_000_000
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+        got = df.select(
+            "vec_id", *[_dist2_e6("embedding", c, scale).alias(f"d{j}")
+                        for j, c in enumerate(vecs)]
+        ).collect()
+        for r in got:
+            for j, c in enumerate(vecs):
+                want = _pairwise_d2_e6(vecs[r["vec_id"]], c, scale)
+                assert r[f"d{j}"] == want, (r["vec_id"], j)
+
 
 class TestEwmaIngest:
     """Incremental EWMA (streaming/ingest.py::streaming_ewma_ingest):
