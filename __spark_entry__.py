@@ -104,13 +104,25 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q101_pq_codes": 12,
     "q102_pq_adc_topk": 12,
     "q103_semdedup_kept": 12,
-    "q104_ivfpq_topk": 12,
     "q105_embedding_covariance": 12,
-    "q106_ivfpq_residual_topk": 12,
-    "q107_ivfpq_refined_topk": 12,
     "q108_top_eigenvector": 12,
     "q128_keep_best_survivors": 12,
     "q139_kcenter_coreset": 12,
+    # r13: built artifacts (IVF-PQ indexes, the GDPR scratch table, the
+    # stream replays) moved onto session.artifact's per-process root;
+    # the eight replays share _replay_state
+    "q104_ivfpq_topk": 13,
+    "q106_ivfpq_residual_topk": 13,
+    "q107_ivfpq_refined_topk": 13,
+    "q131_gdpr_delete": 13,
+    "q144_streaming_ewma_state": 13,
+    "q148_streaming_cluster_state": 13,
+    "q153_streaming_cusum_state": 13,
+    "q156_streaming_scd2_state": 13,
+    "q158_streaming_leaderboard": 13,
+    "q161_streaming_zonemaps": 13,
+    "q165_streaming_attribution": 13,
+    "q173_streaming_engagement": 13,
 }
 
 

@@ -12,12 +12,13 @@ complete train→encode→search pipelines as CTE chains (the q54 k-means /
 q41 IVF replay pattern) and the full rows+schema+hash gate applies.
 
 Plan-build economics: PQ/k-means TRAINING is a driver-synchronized loop
-of small jobs (like q54/q62), so trained artifacts — codebooks,
-centroids, the IVF-PQ index directory — are memoized per ``sf_dir``
-(they are pure deterministic floats / parquet derived from the fixture,
-identical on every rebuild). The bench harness builds each plan four
-times; without the memo it would retrain four times and time none of it
-consistently.
+of small jobs (like q54/q62), so trained artifacts are memoized per
+``sf_dir`` and fixture mtime (they are pure deterministic floats /
+parquet derived from the fixture, identical on every rebuild): the
+codebooks and centroids in ``_CB_MEMO``/``_KM_MEMO``, the IVF-PQ index
+directories as ``session.artifact``s under the process's one temp root,
+removed at exit. The bench harness builds each plan four times; without
+the memo it would retrain four times and time none of it consistently.
 
 Bench transparency (the q62 note applies here too): training/build jobs
 run when the callable BUILDS the plan; the timed materialization covers
@@ -30,9 +31,7 @@ production shape.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,7 +46,7 @@ from bloomy_etl_spark.operators.pq import (
 )
 from bloomy_etl_spark.operators.semdedup import semantic_dedup
 from bloomy_etl_spark.output import presentation_sort as _psort
-from bloomy_etl_spark.session import pin
+from bloomy_etl_spark.session import artifact, pin
 from bloomy_etl_spark.sources.tables import load_table
 
 # PQ geometry for the 64-dim fixture embeddings: 4 subspaces x 16 dims,
@@ -65,47 +64,6 @@ IVF_SHORTLIST = 20
 
 _CB_MEMO: dict[tuple, list[list[list[float]]]] = {}
 _KM_MEMO: dict[tuple, list[list[float]]] = {}
-_IDX_MEMO: dict[tuple, str] = {}
-
-
-def _cleanup_idx_dirs() -> None:
-    """atexit hook: remove this process's temp index directories (they
-    are keyed by PID, so no other process can be reading them)."""
-    import shutil
-
-    for memo in (_IDX_MEMO, _RIDX_MEMO):
-        for d in memo.values():
-            shutil.rmtree(d, ignore_errors=True)
-        memo.clear()
-
-
-import atexit  # noqa: E402 — registration belongs next to the hook
-
-atexit.register(_cleanup_idx_dirs)
-
-
-def _memo_dir(memo: dict, key: tuple, prefix: str, builder) -> str:
-    """Memoized per-process index directory with liveness re-validation:
-    if a /tmp cleaner removed the directory — or aged out individual
-    part files inside it — mid-session, rebuild instead of handing out
-    a dangling or TRUNCATED path. The ``_BUILD_OK`` marker is written
-    only after the builder returns, so a directory whose contents were
-    partially reaped (file-at-a-time cleaners age the marker like any
-    other file) or whose build crashed half-way fails the check and
-    rebuilds; a bare ``isdir`` would silently search a partial index."""
-    d = memo.get(key)
-    if d is not None and os.path.isfile(os.path.join(d, "_BUILD_OK")):
-        return d
-    d = os.path.join(
-        tempfile.gettempdir(), "bloomy_ann_idx",
-        f"{prefix}{os.getpid()}-"
-        + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-    )
-    builder(d)
-    with open(os.path.join(d, "_BUILD_OK"), "w") as f:
-        f.write("ok")
-    memo[key] = d
-    return d
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,14 +104,11 @@ def _sem_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
 
 
 def _ivfpq_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process) the IVF-PQ index for ``sf_dir`` under
-    the system temp dir. The path is scoped by PID and fixture mtime:
-    concurrent processes never build into (or read) each other's
-    half-written directory, and a rewritten fixture gets a fresh
-    index rather than a stale one."""
-    key = _fixture_key(sf_dir)
-    return _memo_dir(
-        _IDX_MEMO, key, "",
+    """Build (once per process) the IVF-PQ index for ``sf_dir`` as a
+    ``session.artifact`` keyed by fixture mtime: a rewritten fixture
+    gets a fresh index rather than a stale one."""
+    return artifact(
+        ("ivfpq", *_fixture_key(sf_dir)),
         lambda d: build_ivfpq_index(
             _embs(spark, sf_dir), d, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS,
             centroid_stride=IVF_STRIDE, max_centroids=IVF_MAXC,
@@ -219,16 +174,12 @@ def q104_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.transform(_psort, "query_id", "rank")
 
 
-_RIDX_MEMO: dict[tuple, str] = {}
-
-
 def _ivfpq_residual_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Residual-encoded sibling of :func:`_ivfpq_dir` (its own memo —
-    residual codebooks train on v − coarse_centroid, so they cannot be
+    """Residual-encoded sibling of :func:`_ivfpq_dir` (its own artifact
+    — residual codebooks train on v − coarse_centroid, so they cannot be
     shared with the raw index)."""
-    key = _fixture_key(sf_dir)
-    return _memo_dir(
-        _RIDX_MEMO, key, "res",
+    return artifact(
+        ("ivfpq_res", *_fixture_key(sf_dir)),
         lambda d: build_ivfpq_index(
             _embs(spark, sf_dir), d, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS,
             centroid_stride=IVF_STRIDE, max_centroids=IVF_MAXC,

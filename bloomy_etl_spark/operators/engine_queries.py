@@ -13,6 +13,8 @@ column aliases in the Spark builder and the DuckDB oracle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,7 +26,7 @@ from bloomy_etl_spark.operators.incremental import (
 )
 from bloomy_etl_spark.operators.joins import binned_range_join, salted_join
 from bloomy_etl_spark.output import presentation_sort as _psort
-from bloomy_etl_spark.session import pin
+from bloomy_etl_spark.session import artifact, pin
 from bloomy_etl_spark.sources.tables import load_table as _load
 
 
@@ -1145,22 +1147,6 @@ def q135_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GDPR_MEMO: dict[tuple, str] = {}
-
-
-def _cleanup_gdpr_dirs() -> None:
-    import shutil
-
-    for d in _GDPR_MEMO.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _GDPR_MEMO.clear()
-
-
-import atexit  # noqa: E402 — registration belongs next to the hook
-
-atexit.register(_cleanup_gdpr_dirs)
-
-
 def q131_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDPR right-to-be-forgotten, hash-gated END TO END
     (sinks.layout.propagate_deletes + apply_tombstones — reference has
@@ -1179,29 +1165,16 @@ def q131_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle replays the whole flow as plain anti-join aggregates.
     Scale: probe + rewrite touch only the deleted ids' partitions; the
-    id set broadcasts; the scratch build is memoized per (process,
-    fixture mtime) so repeated driver calls read stable files."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    id set broadcasts; the scratch build is a ``session.artifact`` per
+    (session, fixture mtime), so repeated driver calls read stable
+    files."""
     from bloomy_etl_spark.sinks.layout import (
         apply_tombstones,
         propagate_deletes,
         write_date_partitioned,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), sf_dir, os.stat(src).st_mtime_ns)
-    base = _GDPR_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_gdpr",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         tbl, tomb, store = (os.path.join(base, d)
                             for d in ("events", "tomb", "store"))
         ev = _t(spark, sf_dir, "events")
@@ -1221,9 +1194,10 @@ def q131_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         removed = apply_tombstones(spark, store, tomb, "user_id")
         with open(os.path.join(base, "_REMOVED"), "w") as f:
             f.write(str(removed))
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _GDPR_MEMO[key] = base
+
+    base = artifact(
+        ("q131", id(spark), sf_dir, _mtime(sf_dir, "events")), build
+    )
     tbl, tomb, store = (os.path.join(base, d)
                         for d in ("events", "tomb", "store"))
     with open(os.path.join(base, "_REMOVED")) as f:
@@ -1505,18 +1479,43 @@ def q143_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_MEMO: dict[tuple, str] = {}
+def _mtime(sf_dir: str, table: str) -> int:
+    return os.stat(os.path.join(sf_dir, f"{table}.parquet")).st_mtime_ns
 
 
-def _cleanup_stream_dirs() -> None:
-    import shutil
+def _replay_state(spark: SparkSession, key: tuple, start) -> str:
+    """Build-once stream replay: ``start(base)`` writes its replay
+    slices under ``base`` and returns the running ``StreamingQuery``;
+    the replay is a ``session.artifact`` per (``key``, session), so
+    repeated driver calls read stable files. ``key[0]`` names the query
+    in the error raised when the stream does not finish."""
+    def build(base: str) -> None:
+        q = start(base)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(f"{key[0]} replay stream did not finish")
 
-    for d in _STREAM_MEMO.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STREAM_MEMO.clear()
+    return artifact((key[0], id(spark), *key[1:]), build)
 
 
-atexit.register(_cleanup_stream_dirs)
+def _ordered_events(spark: SparkSession, sf_dir: str, base: str,
+                    col) -> DataFrame:
+    """The events fixture as a stream of three time-ordered
+    micro-batches (``replay_dir_ordered`` under ``base/replay``, one
+    file per trigger), projected to (user_id, eus, event_id, ``col``).
+    The schema is inferred from the replay files rather than taken from
+    ``_EVENTS_RAW_SCHEMA``: fixture generations differ."""
+    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
+
+    replay = replay_dir_ordered(
+        spark, sf_dir, os.path.join(base, "replay"), n_files=3
+    )
+    return (
+        spark.readStream.schema(spark.read.parquet(replay).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(replay)
+        .select("user_id", F.unix_micros("ts").alias("eus"), "event_id", col)
+    )
 
 
 def q144_streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1530,56 +1529,29 @@ def q144_streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract, driver-checked end-to-end rather than only unit-pinned.
 
     Scratch build (replay slices → availableNow query → state store) is
-    memoized per (session, fixture mtime) like q131's GDPR build, so
-    repeated driver calls read stable files; dirs are cleaned at exit.
+    a ``session.artifact`` per (session, fixture mtime) through
+    ``_replay_state``, like q131's GDPR build, so repeated driver calls
+    read stable files.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_ewma_state,
         streaming_ewma_ingest,
     )
-    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
+    def start(base: str):
+        stream = _ordered_events(
+            spark, sf_dir, base,
+            F.floor(F.col("value") * 10000).cast("long").alias("v"),
         )
-        shutil.rmtree(base, ignore_errors=True)
-        replay = replay_dir_ordered(
-            spark, sf_dir, os.path.join(base, "replay"), n_files=3
-        )
-        schema = spark.read.parquet(replay).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("eus"),
-                "event_id",
-                F.floor(F.col("value") * 10000).cast("long").alias("v"),
-            )
-        )
-        q = streaming_ewma_ingest(
+        return streaming_ewma_ingest(
             stream,
             os.path.join(base, "state"),
             checkpoint_dir=os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q144 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q144", sf_dir, _mtime(sf_dir, "events")), start
+    )
     return read_ewma_state(spark, os.path.join(base, "state")).transform(
         _psort, "user_id"
     )
@@ -1694,27 +1666,13 @@ def q148_streaming_cluster_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     how a 100 TB corpus keeps its duplicate clusters current as dumps
     arrive, without re-reading prior pair history (per-batch cost is
     bounded by the batch graph + one star per live component)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.operators.dedup import ngram_jaccard_pairs
     from bloomy_etl_spark.streaming.ingest import (
         read_cc_state,
         streaming_cc_ingest,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (id(spark), "q148", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
+    def start(base: str):
         docs = _t(spark, sf_dir, "documents", fan_out=True)
         pairs = ngram_jaccard_pairs(docs).select("i", "j")
         replay = os.path.join(base, "replay")
@@ -1731,17 +1689,15 @@ def q148_streaming_cluster_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(replay, "b*"))
         )
-        q = streaming_cc_ingest(
+        return streaming_cc_ingest(
             stream,
             os.path.join(base, "state"),
             os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q148 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q148", sf_dir, _mtime(sf_dir, "documents")), start
+    )
     return (
         read_cc_state(spark, os.path.join(base, "state"))
         .select(F.col("node").cast("long").alias("doc_id"),
@@ -1859,53 +1815,25 @@ def q153_streaming_cusum_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     The packed recurrence composes exactly across batches, so the
     hash match IS the stream ≡ batch bit-identity contract for the
     alerting path, end-to-end."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_cusum_state,
         streaming_cusum_ingest,
     )
-    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), "q153", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
+    def start(base: str):
+        stream = _ordered_events(
+            spark, sf_dir, base,
+            F.floor(F.col("value") * 10000).cast("long").alias("v"),
         )
-        shutil.rmtree(base, ignore_errors=True)
-        replay = replay_dir_ordered(
-            spark, sf_dir, os.path.join(base, "replay"), n_files=3
-        )
-        schema = spark.read.parquet(replay).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("eus"),
-                "event_id",
-                F.floor(F.col("value") * 10000).cast("long").alias("v"),
-            )
-        )
-        q = streaming_cusum_ingest(
+        return streaming_cusum_ingest(
             stream,
             os.path.join(base, "state"),
             checkpoint_dir=os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q153 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q153", sf_dir, _mtime(sf_dir, "events")), start
+    )
     return read_cusum_state(spark, os.path.join(base, "state")).transform(
         _psort, "user_id"
     )
@@ -2011,53 +1939,24 @@ def q156_streaming_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPAN batch boundaries are the hard case (independent per-batch
     compaction splits them); the hash match proves the open-run merge
     heals every seam."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_scd2_state,
         streaming_scd2_ingest,
     )
-    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), "q156", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
+    def start(base: str):
+        stream = _ordered_events(
+            spark, sf_dir, base, F.col("event_type").alias("state")
         )
-        shutil.rmtree(base, ignore_errors=True)
-        replay = replay_dir_ordered(
-            spark, sf_dir, os.path.join(base, "replay"), n_files=3
-        )
-        schema = spark.read.parquet(replay).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("eus"),
-                "event_id",
-                F.col("event_type").alias("state"),
-            )
-        )
-        q = streaming_scd2_ingest(
+        return streaming_scd2_ingest(
             stream,
             os.path.join(base, "state"),
             checkpoint_dir=os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q156 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q156", sf_dir, _mtime(sf_dir, "events")), start
+    )
     return read_scd2_state(spark, os.path.join(base, "state")).transform(
         _psort, "user_id", "version"
     )
@@ -2072,11 +1971,6 @@ def q158_streaming_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle.  The contract this gates: a leaderboard maintained
     incrementally forever equals the batch fit over all history, with
     per-batch cost that never grows with that history."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.operators.preference import (
         bradley_terry_from_counts,
     )
@@ -2085,16 +1979,7 @@ def q158_streaming_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_duel_ingest,
     )
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    key = (id(spark), "q158", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
+    def start(base: str):
         li = _t(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ok"), "l_partkey", "l_quantity"
         )
@@ -2132,17 +2017,15 @@ def q158_streaming_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(replay, "b*"))
         )
-        q = streaming_duel_ingest(
+        return streaming_duel_ingest(
             stream,
             os.path.join(base, "state"),
             os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q158 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q158", sf_dir, _mtime(sf_dir, "lineitem")), start
+    )
     counts = read_duel_counts(spark, os.path.join(base, "state"))
     return bradley_terry_from_counts(counts, rounds=3).transform(
         _psort, "item"
@@ -2224,26 +2107,12 @@ def q161_streaming_zonemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts with a per-slice sequential rank.  This gates the real lake
     write path between OPTIMIZE runs: per-batch layout + an O(files)
     skipping index, with q150 as the full-rewrite endpoint."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_zonemap_state,
         streaming_zonemap_ingest,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), "q161", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
+    def start(base: str):
         ev = _t(spark, sf_dir, "events").select(
             "event_id",
             F.pmod(F.col("user_id"), F.lit(256)).cast("long").alias("xb"),
@@ -2270,17 +2139,15 @@ def q161_streaming_zonemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(replay, "b*"))
         )
-        q = streaming_zonemap_ingest(
+        return streaming_zonemap_ingest(
             stream,
             os.path.join(base, "state"),
             os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q161 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q161", sf_dir, _mtime(sf_dir, "events")), start
+    )
     return read_zonemap_state(spark, os.path.join(base, "state")).transform(
         _psort, "batch_id", "file_id"
     )
@@ -2423,54 +2290,23 @@ def q165_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle.  Facts are final on emission (the monotone-touch
     argument); the hash match proves no purchase was attributed
     differently than the batch pass would, across every batch seam."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_attributed_facts,
         streaming_attribution_ingest,
     )
-    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), "q165", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
-        replay = replay_dir_ordered(
-            spark, sf_dir, os.path.join(base, "replay"), n_files=3
-        )
-        schema = spark.read.parquet(replay).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("eus"),
-                "event_id",
-                "event_type",
-            )
-        )
-        q = streaming_attribution_ingest(
+    def start(base: str):
+        stream = _ordered_events(spark, sf_dir, base, "event_type")
+        return streaming_attribution_ingest(
             stream,
             os.path.join(base, "facts"),
             os.path.join(base, "state"),
             checkpoint_dir=os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q165 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q165", sf_dir, _mtime(sf_dir, "events")), start
+    )
     return read_attributed_facts(
         spark, os.path.join(base, "facts")
     ).transform(_psort, "purchase_id")
@@ -2833,26 +2669,12 @@ def q173_streaming_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged store is hashed against q168's batch oracle.  The live
     dashboard equals the batch report, forever, at domain-sized
     per-batch cost."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from bloomy_etl_spark.streaming.ingest import (
         read_active_pairs,
         streaming_active_ingest,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (id(spark), "q173", sf_dir, os.stat(src).st_mtime_ns)
-    base = _STREAM_MEMO.get(key)
-    if base is None or not os.path.isfile(os.path.join(base, "_BUILD_OK")):
-        base = os.path.join(
-            tempfile.gettempdir(), "bloomy_stream",
-            f"{os.getpid()}-"
-            + hashlib.md5(repr(key).encode()).hexdigest()[:12],
-        )
-        shutil.rmtree(base, ignore_errors=True)
+    def start(base: str):
         ev = _t(spark, sf_dir, "events").select(
             F.expr("unix_micros(ts) DIV 86400000000").alias("day"),
             "user_id",
@@ -2870,17 +2692,15 @@ def q173_streaming_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(replay, "b*"))
         )
-        q = streaming_active_ingest(
+        return streaming_active_ingest(
             stream,
             os.path.join(base, "state"),
             os.path.join(base, "ckpt"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("q173 replay stream did not finish")
-        with open(os.path.join(base, "_BUILD_OK"), "w") as f:
-            f.write("ok")
-        _STREAM_MEMO[key] = base
+
+    base = _replay_state(
+        spark, ("q173", sf_dir, _mtime(sf_dir, "events")), start
+    )
     du = read_active_pairs(spark, os.path.join(base, "state"))
     contrib = du.select(
         F.explode(

@@ -15,7 +15,12 @@ shrink per-stage.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -155,3 +160,48 @@ def pin(df, eager: bool = True):
     if not sc.master.startswith("local") and sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+_ARTIFACT_ROOT: str | None = None
+_ARTIFACTS: dict[tuple, str] = {}
+
+
+def artifact(key: tuple, build: Callable[[str], object]) -> str:
+    """Build-once directory for ``key``: run ``build(path)`` the first
+    time, hand back the same ``path`` afterwards.
+
+    ``key`` is a tuple whose first element names the artifact (``"q144"``,
+    ``"ivfpq"``); it must carry everything the contents depend on (the
+    fixture's mtime, the session's ``id``), since a changed key is the
+    only thing that triggers a rebuild. Directories live under one
+    process-private root (``mkdtemp``), removed as a whole at exit, so no
+    process ever reads another's half-written or reaped directory and a
+    build that raised leaves nothing behind either.
+
+    Liveness is re-validated on every call: if a /tmp cleaner removed the
+    directory — or aged out individual part files inside it — mid-session,
+    rebuild instead of handing out a dangling or TRUNCATED path. The
+    ``_BUILD_OK`` marker is written only after ``build`` returns, so a
+    directory whose contents were partially reaped (file-at-a-time
+    cleaners age the marker like any other file) or whose build crashed
+    half-way fails the check and rebuilds; a bare ``isdir`` would
+    silently read a partial artifact. Every (re)build starts from an
+    empty directory."""
+    global _ARTIFACT_ROOT
+    path = _ARTIFACTS.get(key)
+    if path is not None and os.path.isfile(os.path.join(path, "_BUILD_OK")):
+        return path
+    if _ARTIFACT_ROOT is None:
+        _ARTIFACT_ROOT = tempfile.mkdtemp(prefix="bloomy-artifacts-")
+        atexit.register(shutil.rmtree, _ARTIFACT_ROOT, ignore_errors=True)
+    path = os.path.join(
+        _ARTIFACT_ROOT,
+        f"{key[0]}-" + hashlib.md5(repr(key).encode()).hexdigest()[:12],
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    build(path)
+    with open(os.path.join(path, "_BUILD_OK"), "w") as f:
+        f.write("ok")
+    _ARTIFACTS[key] = path
+    return path

@@ -89,31 +89,3 @@ def test_q104_adc_is_upper_bounded_by_probe_set(spark):
         by_q.setdefault(r["query_id"], []).append(r["rank"])
     for qid, ranks in by_q.items():
         assert sorted(ranks) == [1, 2, 3, 4, 5], f"query {qid}: {ranks}"
-
-
-def test_memo_dir_revalidates_partial_builds(tmp_path, monkeypatch):
-    """_memo_dir must rebuild when the _BUILD_OK marker is missing —
-    both for a /tmp-cleaner-reaped directory and for a builder that
-    crashed before completing — and must reuse a marked build."""
-    import os
-    import tempfile
-
-    from bloomy_etl_spark.operators.ann_queries import _memo_dir
-
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    calls = []
-
-    def builder(d):
-        os.makedirs(d, exist_ok=True)
-        calls.append(d)
-
-    memo = {}
-    d1 = _memo_dir(memo, ("k",), "t-", builder)
-    assert len(calls) == 1 and os.path.isfile(os.path.join(d1, "_BUILD_OK"))
-    # warm memo + live marker → no rebuild
-    assert _memo_dir(memo, ("k",), "t-", builder) == d1 and len(calls) == 1
-    # a file-at-a-time cleaner reaped the contents (marker included)
-    # but left the directory: isdir alone would hand out the stub
-    os.remove(os.path.join(d1, "_BUILD_OK"))
-    d2 = _memo_dir(memo, ("k",), "t-", builder)
-    assert len(calls) == 2 and os.path.isfile(os.path.join(d2, "_BUILD_OK"))
