@@ -163,7 +163,6 @@ def pin(df, eager: bool = True):
 
 
 _ARTIFACT_ROOT: str | None = None
-_ARTIFACTS: dict[tuple, str] = {}
 
 
 def artifact(key: tuple, build: Callable[[str], object]) -> str:
@@ -173,10 +172,12 @@ def artifact(key: tuple, build: Callable[[str], object]) -> str:
     ``key`` is a tuple whose first element names the artifact (``"q144"``,
     ``"ivfpq"``); it must carry everything the contents depend on (the
     fixture's mtime, the session's ``id``), since a changed key is the
-    only thing that triggers a rebuild. Directories live under one
-    process-private root (``mkdtemp``), removed as a whole at exit, so no
-    process ever reads another's half-written or reaped directory and a
-    build that raised leaves nothing behind either.
+    only thing that triggers a rebuild. The path is a pure function of
+    the key, so the marker at that path is the whole lookup. Directories
+    live under one process-private root (``mkdtemp``), removed as a
+    whole at exit, so no process ever reads another's half-written or
+    reaped directory and a build that raised leaves nothing behind
+    either.
 
     Liveness is re-validated on every call: if a /tmp cleaner removed the
     directory — or aged out individual part files inside it — mid-session,
@@ -188,9 +189,6 @@ def artifact(key: tuple, build: Callable[[str], object]) -> str:
     silently read a partial artifact. Every (re)build starts from an
     empty directory."""
     global _ARTIFACT_ROOT
-    path = _ARTIFACTS.get(key)
-    if path is not None and os.path.isfile(os.path.join(path, "_BUILD_OK")):
-        return path
     if _ARTIFACT_ROOT is None:
         _ARTIFACT_ROOT = tempfile.mkdtemp(prefix="bloomy-artifacts-")
         atexit.register(shutil.rmtree, _ARTIFACT_ROOT, ignore_errors=True)
@@ -198,10 +196,11 @@ def artifact(key: tuple, build: Callable[[str], object]) -> str:
         _ARTIFACT_ROOT,
         f"{key[0]}-" + hashlib.md5(repr(key).encode()).hexdigest()[:12],
     )
+    if os.path.isfile(os.path.join(path, "_BUILD_OK")):
+        return path
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     build(path)
     with open(os.path.join(path, "_BUILD_OK"), "w") as f:
         f.write("ok")
-    _ARTIFACTS[key] = path
     return path

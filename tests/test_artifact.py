@@ -26,7 +26,6 @@ PKG = REPO / "bloomy_etl_spark"
 def root(tmp_path, monkeypatch):
     """A fresh, empty store rooted in ``tmp_path``."""
     monkeypatch.setattr(session, "_ARTIFACT_ROOT", str(tmp_path / "root"))
-    monkeypatch.setattr(session, "_ARTIFACTS", {})
     return tmp_path / "root"
 
 
@@ -43,7 +42,7 @@ def test_artifact_revalidates_partial_builds(root):
 
     d1 = session.artifact(("k",), build)
     assert len(calls) == 1 and os.path.isfile(os.path.join(d1, "_BUILD_OK"))
-    # warm memo + live marker → no rebuild
+    # live marker → no rebuild
     assert session.artifact(("k",), build) == d1 and len(calls) == 1
     # a file-at-a-time cleaner reaped the contents (marker included)
     # but left the directory: isdir alone would hand out the stub; a
