@@ -96,17 +96,14 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     # (k-means, PQ, LSH, k-center, power iteration), simhash's fold
     # rendered as SQL, keep_best_per_cluster's id-type guard; this also
     # registers the 2955556 construction rewrites that were never listed
-    "q32_simhash_neardups": 12,
     "q34_embedding_neardups": 12,
     "q36_ann_lsh_topk": 12,
     "q52_embedding_quantization": 12,
     "q54_kmeans_clusters": 12,
     "q101_pq_codes": 12,
     "q102_pq_adc_topk": 12,
-    "q103_semdedup_kept": 12,
     "q105_embedding_covariance": 12,
     "q108_top_eigenvector": 12,
-    "q128_keep_best_survivors": 12,
     "q139_kcenter_coreset": 12,
     # r13: built artifacts (IVF-PQ indexes, the GDPR scratch table, the
     # stream replays) moved onto session.artifact's per-process root;
@@ -116,13 +113,28 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q107_ivfpq_refined_topk": 13,
     "q131_gdpr_delete": 13,
     "q144_streaming_ewma_state": 13,
-    "q148_streaming_cluster_state": 13,
     "q153_streaming_cusum_state": 13,
     "q156_streaming_scd2_state": 13,
     "q158_streaming_leaderboard": 13,
     "q161_streaming_zonemaps": 13,
     "q165_streaming_attribution": 13,
     "q173_streaming_engagement": 13,
+    # r14: dedup.bucket_pairs sizes its hot-bucket repartition from the
+    # chunk-pair count (one sizing job) instead of the core count;
+    # every query whose call graph reaches it (q32, q103, q128 moved up
+    # from 12, q148 from 13)
+    "q30_minhash_lsh_neardups": 14,
+    "q31_ngram_jaccard_neardups": 14,
+    "q32_simhash_neardups": 14,
+    "q42_dedup_clusters": 14,
+    "q61_shared_spans": 14,
+    "q67_dedup_kept_corpus": 14,
+    "q103_semdedup_kept": 14,
+    "q113_prefix_jaccard_join": 14,
+    "q118_winnow_fingerprints": 14,
+    "q128_keep_best_survivors": 14,
+    "q148_streaming_cluster_state": 14,
+    "q171_split_leakage": 14,
 }
 
 

@@ -54,11 +54,17 @@ def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
     LSH blocking at scale (a stop-shingle band, a dominant SimHash block
     that can hold most of the corpus) — would build a single C(n,2) array
     in a single task that way, so they are chunked instead: the member
-    array is cut into cap-sized slices, every (chunk_i ≤ chunk_j) slice
-    pair becomes its own row, a round-robin repartition spreads those rows
-    across the cluster, and each expands to ≤ cap² pairs in-row. Per-task
-    pair work is bounded by cap² regardless of bucket size, with no salted
-    self-join and no driver involvement.
+    array is cut into k = ceil(n/cap) slices, every (chunk_i ≤ chunk_j)
+    slice pair becomes its own row (k(k+1)/2 per bucket), and each row
+    expands to ≤ cap² pairs in-row. The chunk-pair rows are spread by a
+    round-robin repartition into one task per row, so the task count
+    follows the hot buckets, not the cluster's core count. Sizing it costs
+    one job: a single-row integer aggregate, Σ k(k+1)/2 over the buckets
+    with more than ``cap`` members. Round-robin deals each input
+    partition's rows to consecutive tasks, so a task receives at most one
+    row from each input partition: per-task pair work is at most (input
+    partitions that hold hot buckets) × cap², whatever the bucket sizes,
+    with no salted self-join and no driver-side pair work.
 
     Returns columns ``a``, ``b`` with a < b in member sort order.
     """
@@ -93,11 +99,15 @@ def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
             ),
         )
     )
-    big = buckets.filter(F.size(ms) > cap).select(
-        *carry, F.explode(chunk_rows).alias("c")
+    hot = buckets.filter(F.size(ms) > cap)
+    # k(k+1) is always even, so the halving stays exact
+    k_long = k.cast("long")
+    n_chunk_pairs = (
+        hot.agg(F.sum(k_long * (k_long + 1))).first()[0] or 0
+    ) // 2
+    big = hot.select(*carry, F.explode(chunk_rows).alias("c")).repartition(
+        max(1, n_chunk_pairs)
     )
-    parallelism = buckets.sparkSession.sparkContext.defaultParallelism
-    big = big.repartition(parallelism)
     ma, mb = F.col("c.ma"), F.col("c.mb")
     # chunks come from one sorted array: same-chunk → combinations,
     # ci<cj cross-chunk → full cross product (every ma member < every mb)

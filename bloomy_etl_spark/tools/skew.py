@@ -8,9 +8,15 @@ for the hitter list, everything else is arithmetic on O(top) rows.
 The recommendation mirrors what an engineer reads off the Spark UI:
 a key whose row share exceeds several average task shares will
 straggle its task; ``n_salts`` is sized so the hottest key spreads to
-roughly average-task granularity, capped to the parallelism (more
+roughly average-task granularity, capped to the task count (more
 salts than tasks buys nothing and multiplies the small side's
-replication in ``salted_join``)."""
+replication in ``salted_join``).
+
+The task count is the one the advised join's shuffle runs with,
+``spark.sql.shuffle.partitions`` (8 under the local profile, 2048
+under the cluster profile), not the number of cores. Under the
+cluster profile AQE may coalesce the shuffle to fewer tasks at run
+time; the report uses the planned count."""
 
 from __future__ import annotations
 
@@ -37,11 +43,12 @@ def key_skew_report(
     max_share, skew_factor, recommendation: {strategy, n_salts}}``.
 
     ``skew_factor`` = hottest key's rows ÷ average rows per shuffle
-    task.  Strategy: ``"broadcast"`` when the whole table fits the
-    broadcast bound (skew is then irrelevant), ``"salt"`` when the
-    hottest key would straggle (factor > ``straggler_factor``) with
-    ``n_salts = ceil(factor)`` capped at the parallelism, else
-    ``"none"``.
+    task, where the shuffle runs ``spark.sql.shuffle.partitions``
+    tasks (the planned count; AQE may coalesce it).  Strategy:
+    ``"broadcast"`` when the whole table fits the broadcast bound (skew
+    is then irrelevant), ``"salt"`` when the hottest key would straggle
+    (factor > ``straggler_factor``) with ``n_salts = ceil(factor)``
+    capped at ``spark.sql.shuffle.partitions``, else ``"none"``.
     """
     keys = list(key_cols)
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
@@ -59,15 +66,15 @@ def key_skew_report(
         }
         for r in counts.orderBy(F.col("n").desc(), *keys).take(top)
     ]
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    avg_task = n_rows / parallelism if n_rows else 0.0
+    tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    avg_task = n_rows / tasks if n_rows else 0.0
     skew_factor = (mx / avg_task) if avg_task else 0.0
     if n_rows and n_rows < broadcast_rows:
         rec = {"strategy": "broadcast", "n_salts": 1}
     elif skew_factor > straggler_factor:
         rec = {
             "strategy": "salt",
-            "n_salts": min(parallelism, math.ceil(skew_factor)),
+            "n_salts": min(tasks, math.ceil(skew_factor)),
         }
     else:
         rec = {"strategy": "none", "n_salts": 1}

@@ -15,13 +15,20 @@ def test_hot_key_detected_and_salt_sized(spark):
         .otherwise(F.col("id") % 1000 + 1)
         .alias("k")
     )
-    rep = key_skew_report(df, ["k"], broadcast_rows=10)
+    # the join being advised runs 32 shuffle tasks: the hot key holds
+    # 50,000 rows against 100,000/32 per task, a factor of 16 > 4
+    par = 32
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(par))
+    try:
+        rep = key_skew_report(df, ["k"], broadcast_rows=10)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert rep["n_rows"] == 100_000
     assert rep["top"][0]["key"] == (0,)
     assert rep["top"][0]["share"] == pytest.approx(0.5)
     assert rep["recommendation"]["strategy"] == "salt"
-    par = spark.sparkContext.defaultParallelism
-    # hottest key ≈ half the table ⇒ factor ≈ parallelism/2, capped
+    # hottest key ≈ half the table ⇒ factor ≈ task count/2, capped
     assert 1 < rep["recommendation"]["n_salts"] <= par
     assert rep["recommendation"]["n_salts"] >= min(par, par // 2)
 
