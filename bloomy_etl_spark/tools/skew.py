@@ -13,10 +13,10 @@ salts than tasks buys nothing and multiplies the small side's
 replication in ``salted_join``).
 
 The task count is the one the advised join's shuffle runs with,
-``spark.sql.shuffle.partitions`` (8 under the local profile, 2048
-under the cluster profile), not the number of cores. Under the
-cluster profile AQE may coalesce the shuffle to fewer tasks at run
-time; the report uses the planned count."""
+``spark.sql.shuffle.partitions`` (see the session profiles), not the
+number of cores. Under the cluster profile AQE may coalesce the
+shuffle to fewer tasks at run time; the report uses the planned
+count."""
 
 from __future__ import annotations
 
