@@ -25,7 +25,7 @@ builds shingle strings or shuffles them.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
@@ -40,6 +40,14 @@ MERSENNE = 2147483647  # 2^31 - 1
 # in-row pair construction is capped at this many members; larger (hot)
 # buckets switch to the chunked distributed path
 BUCKET_PAIR_CAP = 64
+# upper limit on the tasks the chunked path spreads its chunk-pair rows
+# over. One row is at most cap² pairs (4,096 at the default cap), far less
+# work than Spark's per-task scheduling, and every map task writes one
+# shuffle-index entry per task while the driver tracks each one; past a
+# few thousand tasks more of them only add that overhead. Up to this many
+# rows there is one task per row (hot buckets of up to ~5,700 members at
+# the default cap); above it rows share tasks (bound in bucket_pairs).
+BUCKET_PAIR_MAX_TASKS = 4096
 
 
 def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
@@ -57,14 +65,25 @@ def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
     array is cut into k = ceil(n/cap) slices, every (chunk_i ≤ chunk_j)
     slice pair becomes its own row (k(k+1)/2 per bucket), and each row
     expands to ≤ cap² pairs in-row. The chunk-pair rows are spread by a
-    round-robin repartition into one task per row, so the task count
-    follows the hot buckets, not the cluster's core count. Sizing it costs
-    one job: a single-row integer aggregate, Σ k(k+1)/2 over the buckets
-    with more than ``cap`` members. Round-robin deals each input
-    partition's rows to consecutive tasks, so a task receives at most one
-    row from each input partition: per-task pair work is at most (input
-    partitions that hold hot buckets) × cap², whatever the bucket sizes,
-    with no salted self-join and no driver-side pair work.
+    round-robin repartition into R = min(n, ``BUCKET_PAIR_MAX_TASKS``)
+    tasks, where n = Σ k(k+1)/2 over the buckets with more than ``cap``
+    members, so the task count follows the hot buckets, not the cluster's
+    core count. Sizing it costs one job: ``buckets`` is pinned eagerly,
+    and n is a single-row integer aggregate observed by that same pinning
+    job; the expansion reads the pin, so the caller's lineage runs once.
+    The pin must be eager: a lazy checkpoint publishes every
+    ``Observation`` upstream of it (this count, ``ngram_jaccard_pairs``'
+    dropped-shingle count) with empty metrics before anything has run.
+
+    Round-robin deals each input partition's rows to consecutive tasks,
+    so a task receives at most ceil(n/R) rows from each input partition:
+    per-task pair work is at most (input partitions that hold hot
+    buckets) × ceil(n/R) × cap². Up to ``BUCKET_PAIR_MAX_TASKS`` rows that
+    is one row per task and (input partitions that hold hot buckets) ×
+    cap², whatever the bucket sizes; above it the per-task work grows
+    with n/R instead of the task count (a 10⁶-member bucket at cap 64 is
+    ≈1.2·10⁸ rows, ≈3·10⁴ per task). No salted self-join, no driver-side
+    pair work.
 
     Returns columns ``a``, ``b`` with a < b in member sort order.
     """
@@ -81,11 +100,18 @@ def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
             )
         )
 
+    k = F.ceil(F.size(ms) / cap).cast("int")
+    hot_k = F.when(F.size(ms) > cap, k.cast("long"))
+    sizing = Observation()
+    buckets = pin(buckets.observe(
+        sizing, F.sum(hot_k * (hot_k + 1)).alias("k_k1")
+    ))
+    # k(k+1) is always even, so the halving stays exact
+    n_chunk_pairs = (sizing.get["k_k1"] or 0) // 2
+
     small = buckets.filter(F.size(ms) <= cap).select(
         *carry, F.explode(combos(ms)).alias("p")
     )
-
-    k = F.ceil(F.size(ms) / cap).cast("int")
     chunk_rows = F.flatten(
         F.transform(
             F.sequence(F.lit(0), k - 1),
@@ -99,14 +125,10 @@ def bucket_pairs(buckets: DataFrame, cap: int = BUCKET_PAIR_CAP,
             ),
         )
     )
-    hot = buckets.filter(F.size(ms) > cap)
-    # k(k+1) is always even, so the halving stays exact
-    k_long = k.cast("long")
-    n_chunk_pairs = (
-        hot.agg(F.sum(k_long * (k_long + 1))).first()[0] or 0
-    ) // 2
-    big = hot.select(*carry, F.explode(chunk_rows).alias("c")).repartition(
-        max(1, n_chunk_pairs)
+    big = (
+        buckets.filter(F.size(ms) > cap)
+        .select(*carry, F.explode(chunk_rows).alias("c"))
+        .repartition(min(max(1, n_chunk_pairs), BUCKET_PAIR_MAX_TASKS))
     )
     ma, mb = F.col("c.ma"), F.col("c.mb")
     # chunks come from one sorted array: same-chunk → combinations,
@@ -176,7 +198,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     that shared a dropped shingle — the standard stop-shingle tradeoff,
     and exactly how production MinHash/Jaccard dedup is run. Default
     ``None`` (no cap) keeps oracle parity; pass a pyspark ``Observation``
-    as ``dropped_obs`` to count dropped shingles without a second job.
+    as ``dropped_obs`` to count dropped shingles without a second job
+    (it is filled before this function returns, by ``bucket_pairs``'
+    eager pin of the postings, which the query then reads).
     """
     # Shingles enter the exchange as int64 FINGERPRINTS from the same
     # Arrow-batched pass as shared_span_pairs (r6): blake2b per UNIQUE

@@ -12,10 +12,13 @@ roughly average-task granularity, capped to the task count (more
 salts than tasks buys nothing and multiplies the small side's
 replication in ``salted_join``).
 
-The task count is the one the advised join's shuffle runs with,
-``spark.sql.shuffle.partitions`` (see the session profiles), not the
-number of cores. Under the cluster profile AQE may coalesce the
-shuffle to fewer tasks at run time; the report uses the planned
+The task count is the one the advised join's shuffle is planned with,
+not the number of cores: ``spark.sql.shuffle.partitions``, or, when AQE
+and its partition coalescing are on and
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` is set,
+that value (Spark plans the shuffle with it, and the session module
+names it as the way to size shuffles at scale). AQE may still coalesce
+the shuffle to fewer tasks at run time; the report uses the planned
 count."""
 
 from __future__ import annotations
@@ -27,6 +30,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["key_skew_report"]
+
+
+def _planned_shuffle_tasks(spark) -> int:
+    """Partition count Spark plans a shuffle with (its
+    ``SQLConf.numShufflePartitions``): AQE's ``initialPartitionNum`` when
+    AQE and coalescing are both on and it is set, else
+    ``spark.sql.shuffle.partitions``."""
+    conf = spark.conf
+    initial = conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
+    )
+    if (
+        initial is not None
+        and conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
+        and conf.get(
+            "spark.sql.adaptive.coalescePartitions.enabled", "true"
+        ).lower() == "true"
+    ):
+        return int(initial)
+    return int(conf.get("spark.sql.shuffle.partitions"))
 
 
 def key_skew_report(
@@ -43,12 +66,14 @@ def key_skew_report(
     max_share, skew_factor, recommendation: {strategy, n_salts}}``.
 
     ``skew_factor`` = hottest key's rows ÷ average rows per shuffle
-    task, where the shuffle runs ``spark.sql.shuffle.partitions``
-    tasks (the planned count; AQE may coalesce it).  Strategy:
-    ``"broadcast"`` when the whole table fits the broadcast bound (skew
-    is then irrelevant), ``"salt"`` when the hottest key would straggle
-    (factor > ``straggler_factor``) with ``n_salts = ceil(factor)``
-    capped at ``spark.sql.shuffle.partitions``, else ``"none"``.
+    task, where the shuffle runs the planned task count of
+    :func:`_planned_shuffle_tasks` (``spark.sql.shuffle.partitions``,
+    or AQE's ``initialPartitionNum`` when that is set and in effect).
+    Strategy: ``"broadcast"`` when the whole table fits the broadcast
+    bound (skew is then irrelevant), ``"salt"`` when the hottest key
+    would straggle (factor > ``straggler_factor``) with
+    ``n_salts = ceil(factor)`` capped at that task count, else
+    ``"none"``.
     """
     keys = list(key_cols)
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
@@ -66,7 +91,7 @@ def key_skew_report(
         }
         for r in counts.orderBy(F.col("n").desc(), *keys).take(top)
     ]
-    tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    tasks = _planned_shuffle_tasks(df.sparkSession)
     avg_task = n_rows / tasks if n_rows else 0.0
     skew_factor = (mx / avg_task) if avg_task else 0.0
     if n_rows and n_rows < broadcast_rows:

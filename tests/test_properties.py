@@ -215,6 +215,62 @@ def test_bucket_pairs_carry_passthrough(spark):
     assert sorted(by_key[9]) == sorted(itertools.combinations(range(10), 2))
 
 
+def _pairs_per_task(pairs):
+    return {
+        r["pid"]: r["n"]
+        for r in pairs.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
+def test_bucket_pairs_one_task_per_chunk_pair(spark, monkeypatch):
+    """A hot bucket's chunk-pair rows get one task each up to
+    BUCKET_PAIR_MAX_TASKS; above it they share that many tasks, each
+    holding at most ceil(rows / limit) of them, and the pairs are the
+    same either way."""
+    from bloomy_etl_spark.operators import dedup
+
+    cap, members = 8, list(range(80))  # k = 10 chunks → 55 chunk-pair rows
+    df = spark.createDataFrame([(members,)], "ms array<int>")
+    want = sorted(itertools.combinations(members, 2))
+
+    pairs = dedup.bucket_pairs(df, cap=cap)
+    per_task = _pairs_per_task(pairs)
+    assert len(per_task) == 55
+    assert max(per_task.values()) <= cap * cap
+    assert sorted((r["a"], r["b"]) for r in pairs.collect()) == want
+
+    monkeypatch.setattr(dedup, "BUCKET_PAIR_MAX_TASKS", 4)
+    pairs = dedup.bucket_pairs(df, cap=cap)
+    per_task = _pairs_per_task(pairs)
+    assert len(per_task) == 4
+    assert max(per_task.values()) <= math.ceil(55 / 4) * cap * cap
+    assert sorted((r["a"], r["b"]) for r in pairs.collect()) == want
+
+
+def test_bucket_pairs_computes_its_input_once(spark):
+    """The sizing count is observed by the job that pins the buckets and
+    the expansion reads that pin, so the caller's lineage (here a Python
+    UDF) runs once, not once for sizing and again for the pairs."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def member(i):
+        calls.add(1)
+        return i
+
+    buckets = (
+        spark.range(100)
+        .select((F.col("id") % 2).alias("key"),
+                F.udf(member, "long")("id").alias("m"))
+        .groupBy("key")
+        .agg(F.array_sort(F.collect_list("m")).alias("ms"))
+    )
+    pairs = bucket_pairs(buckets, cap=8, carry=("key",))
+    assert pairs.count() == 2 * math.comb(50, 2)
+    assert calls.value == 100
+
+
 def test_word_shingles_edges(spark):
     """Shingling edge semantics: short docs collapse to one joined-token
     shingle; exactly-n docs give one shingle; repeats dedupe but keep

@@ -33,6 +33,45 @@ def test_hot_key_detected_and_salt_sized(spark):
     assert rep["recommendation"]["n_salts"] >= min(par, par // 2)
 
 
+def test_task_count_follows_aqe_initial_partition_num(spark):
+    """With AQE and its coalescing on, Spark plans a shuffle with
+    ``initialPartitionNum`` when that is set; with AQE off it ignores it."""
+    df = spark.range(100_000).select(
+        F.when(F.col("id") < 50_000, 0)
+        .otherwise(F.col("id") % 1000 + 1)
+        .alias("k")
+    )
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        spark.conf.set(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32"
+        )
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        on = key_skew_report(df, ["k"], broadcast_rows=10)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        off = key_skew_report(df, ["k"], broadcast_rows=10)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # 50,000 rows against 100,000/32 per task: factor 16
+    assert on["skew_factor"] == pytest.approx(16.0)
+    assert on["recommendation"] == {"strategy": "salt", "n_salts": 16}
+    # against 100,000/4 per task: factor 2, below the straggler factor 4
+    assert off["skew_factor"] == pytest.approx(2.0)
+    assert off["recommendation"]["strategy"] == "none"
+
+
 def test_uniform_keys_no_action(spark):
     df = spark.range(100_000).select((F.col("id") % 1000).alias("k"))
     rep = key_skew_report(df, ["k"], broadcast_rows=10)
