@@ -164,10 +164,13 @@ def _ship_package(spark: SparkSession) -> None:
     pickle module references that workers must re-import. Shipping the
     package once per SparkContext via ``addPyFile`` covers any driver
     environment — equivalent to ``--py-files`` on a real cluster submit.
+    The zip is built once per process as a ``session.artifact``, so it
+    lives under the process-private root and is removed at exit.
     """
     import os
-    import tempfile
     import zipfile
+
+    from bloomy_etl_spark.session import artifact
 
     sc = spark.sparkContext
     key = id(sc)
@@ -175,14 +178,17 @@ def _ship_package(spark: SparkSession) -> None:
         return
     base = os.path.dirname(os.path.abspath(__file__))
     pkg = os.path.join(base, "bloomy_etl_spark")
-    zpath = os.path.join(tempfile.gettempdir(), "bloomy_etl_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    z.write(full, os.path.relpath(full, base))
-    sc.addPyFile(zpath)
+    name = "bloomy_etl_spark_pkg.zip"
+
+    def build(out_dir: str) -> None:
+        with zipfile.ZipFile(os.path.join(out_dir, name), "w") as z:
+            for root, _, files in os.walk(pkg):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        z.write(full, os.path.relpath(full, base))
+
+    sc.addPyFile(os.path.join(artifact(("pkg",), build), name))
     _SHIPPED.add(key)
 
 

@@ -88,9 +88,6 @@ def non_negative(col: str) -> Constraint:
     return {"name": f"non_negative({col})", "metric": bad, "ok": bad == 0}
 
 
-REPORT_COLS = ("constraint", "metric", "passed")
-
-
 def check_constraints(df: DataFrame, constraints: list[Constraint]) -> DataFrame:
     """Evaluate every constraint in ONE aggregate pass over ``df``.
 

@@ -1508,113 +1508,6 @@ def first_seen_novelty(docs: DataFrame, n: int = 2, scale: int = 1_000_000,
     )
 
 
-def strip_template_prefix(docs: DataFrame, min_share_e6: int = 800_000,
-                          max_prefix: int = 16, group_col: str = "source",
-                          text_col: str = "text",
-                          side: str = "prefix") -> DataFrame:
-    """De-templating: detect and REMOVE the per-group boilerplate token
-    prefix (crawl templates, scraped headers, licence banners) — the
-    transform downstream of the q136 positional profile. A position
-    belongs to the template iff its MODAL token covers at least
-    ``min_share_e6``/10⁶ of the group's documents; the template is the
-    longest such run from position 1 (a gap ends it — organic text
-    after the banner must survive), capped at ``max_prefix``.
-
-    Only documents whose prefix MATCHES the modal tokens are cut (a doc
-    that organically starts differently keeps its words — share ≥ 0.8
-    still leaves 20% non-template openers). Exact integer share
-    arithmetic throughout.
-
-    ``side='suffix'`` runs the identical detection/cut on the REVERSED
-    token arrays — footers and trailing licence banners are the same
-    problem from the other end — and reports ``suffix_len`` instead.
-
-    Shape: one (group, pos, token)-keyed hash-agg (positions × vocab
-    bounded), a rank window per (group, pos) frame, a G-row prefix
-    reduction, then ONE in-row pass over the corpus with the ≤
-    ``max_prefix``-token template arrays broadcast — the corpus never
-    shuffles.
-
-    Returns every document: ``(…docs columns…, {side}_len, cleaned)``.
-    """
-    if not 0 < min_share_e6 <= 1_000_000:
-        raise ValueError(f"min_share_e6 must be in (0, 1e6], got {min_share_e6}")
-    if max_prefix < 1:
-        raise ValueError(f"max_prefix must be >= 1, got {max_prefix}")
-    if side not in ("prefix", "suffix"):
-        raise ValueError(f"side must be 'prefix' or 'suffix', got {side!r}")
-    # suffix templates (footers, licence banners at the END) are the
-    # same problem on the reversed token array: profile, run-detect and
-    # cut in reversed space, then flip the survivors back
-    rev = side == "suffix"
-
-    def _dir(ws_col):
-        return F.reverse(ws_col) if rev else ws_col
-
-    n_grp = docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n"))
-    toks = docs.select(
-        group_col,
-        F.posexplode(
-            F.slice(_dir(T.tokens(F.col(text_col))), 1, max_prefix)
-        ).alias("__p0", "__tok"),
-    ).select(group_col, (F.col("__p0") + 1).alias("__pos"), "__tok")
-    counts = toks.groupBy(group_col, "__pos", "__tok").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    w = Window.partitionBy(group_col, "__pos").orderBy(
-        F.col("__c").desc(), F.col("__tok").asc()
-    )
-    num = F.lit(1_000_000) * F.col("__c")
-    modal = (
-        counts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .join(F.broadcast(n_grp), group_col)
-        .select(
-            group_col, "__pos", "__tok",
-            (((num - num % F.col("__n")) / F.col("__n")).cast("long")
-             >= min_share_e6).alias("__hot"),
-        )
-    )
-    # longest hot run from position 1: prefix_len = min(cold pos) − 1,
-    # capped at the group's longest observed prefix (an all-hot 2-token
-    # group is a 2-token template, not a max_prefix one)
-    tmpl = modal.groupBy(group_col).agg(
-        F.least(
-            F.coalesce(
-                F.min(F.when(~F.col("__hot"), F.col("__pos"))),
-                F.lit(max_prefix + 1),
-            ) - 1,
-            F.max("__pos"),
-        ).alias("prefix_len"),
-        F.expr(
-            "transform(array_sort(collect_list(struct(__pos, __tok))),"
-            " s -> s.__tok)"
-        ).alias("__template"),
-    )
-    ws = _dir(T.tokens(F.col(text_col)))  # reversed space when suffix
-    # match test: the doc's first prefix_len directed tokens equal the
-    # template's (slice lengths come from a column → expression form)
-    eq = F.expr("slice(__ws, 1, prefix_len) == slice(__template, 1, prefix_len)")
-    kept = F.expr("slice(__ws, __cut + 1, greatest(size(__ws) - __cut, 0))")
-    return (
-        docs.join(F.broadcast(tmpl), group_col, "left")
-        .na.fill({"prefix_len": 0})
-        .withColumn("__ws", ws)
-        .withColumn(
-            "__cut",
-            F.when((F.col("prefix_len") > 0) & eq, F.col("prefix_len"))
-            .otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "cleaned",
-            F.array_join(F.reverse(kept) if rev else kept, " "),
-        )
-        .withColumn(side + "_len", F.col("__cut"))
-        .drop("__template", "__cut", "__ws",
-              *(["prefix_len"] if rev else []))
-    )
-
-
 def gopher_repetition(docs: DataFrame, scale: int = 1_000_000,
                       top2_max_e6: int = 200_000,
                       dup3_max_e6: int = 600_000,

@@ -2773,7 +2773,7 @@ def q174_contribution_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q175_catalog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style catalog statistics — the table profile a
-    cost-based optimizer (and q56's join-order advisor) feeds on: one
+    cost-based optimizer feeds on: one
     row per table with row count, exact key-column NDV, and the key
     min/max zone. Each table is one hash-agg; the report is the
     10-row union."""

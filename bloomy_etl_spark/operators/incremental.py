@@ -6,8 +6,7 @@ sum-of-squares) that merge associatively, fold each new batch into the
 store, and finalize (avg / stddev) only at read time. This is exactly
 the map-side-combine contract Spark's own hash aggregate uses
 internally, exposed as a durable table the pipeline owns — the same
-durable-state posture as the CMS store (``streaming/quota.py``) and the
-dedup signature store (``streaming/ingest.py``).
+durable-state posture as the per-batch stores of ``streaming/ingest.py``.
 
 Algebra: states form a commutative monoid under ``merge_states`` (sum
 the sums, min the mins, …), so batch order, batching granularity, and
@@ -92,7 +91,7 @@ def incremental_store(store_dir: str):
     batch's states with provenance; ``current(spark)`` reads the merged
     state (one partial-agg pass over the store — compact periodically).
     batch_id makes at-least-once replays detectable and reversible
-    (delete-by-batch_id), matching the CMS/signature store contract."""
+    (delete-by-batch_id), matching the ``streaming/ingest.py`` stores."""
 
     class _Store:
         def append(self, states: DataFrame, batch_id: int) -> None:

@@ -405,44 +405,3 @@ def fuzzy_value_pairs(df: DataFrame, col: str, k: int = 2,
     return cand.withColumn("dist", F.levenshtein("a", "b")).filter(
         F.col("dist") <= k
     )
-
-
-def interval_overlap_join(left: DataFrame, right: DataFrame,
-                          l_lo: str, l_hi: str, r_lo: str, r_hi: str,
-                          bin_width: int) -> DataFrame:
-    """Interval×interval overlap join (``l_lo <= r_hi AND r_lo <= l_hi``)
-    via the same binning rewrite: both sides explode to bins, overlap
-    implies sharing at least one bin, and in-row dedup keeps each
-    overlapping pair exactly once (the pair is attributed to the FIRST
-    shared bin — ``greatest(floor(l_lo/w), floor(r_lo/w))`` — so no
-    ``distinct()`` over the pair stream is needed, same trick as the
-    SimHash block dedup in ``operators/dedup.py``)."""
-    if bin_width < 1:
-        raise ValueError(f"bin_width must be >= 1, got {bin_width}")
-    shared = set(left.columns) & set(right.columns)
-    if shared:
-        raise ValueError(
-            f"left and right share column names {sorted(shared)}; "
-            "rename one side — the joined output keeps both sides' columns"
-        )
-    lb = left.withColumn(
-        "__bin",
-        F.explode(
-            F.sequence(F.floor(F.col(l_lo) / bin_width),
-                       F.floor(F.col(l_hi) / bin_width))
-        ),
-    )
-    rb = right.withColumn(
-        "__bin",
-        F.explode(
-            F.sequence(F.floor(F.col(r_lo) / bin_width),
-                       F.floor(F.col(r_hi) / bin_width))
-        ),
-    )
-    joined = lb.join(rb, on=["__bin"]).filter(
-        (F.col(l_lo) <= F.col(r_hi)) & (F.col(r_lo) <= F.col(l_hi))
-    )
-    first_shared = F.greatest(
-        F.floor(F.col(l_lo) / bin_width), F.floor(F.col(r_lo) / bin_width)
-    )
-    return joined.filter(F.col("__bin") == first_shared).drop("__bin")

@@ -5,9 +5,8 @@ posture the reference takes for raster bands (download bytes, decode
 per-granule; ``/root/reference/core/processor.py:96-180``), generalized:
 
   * storage schema: ``(media_id, kind, payload BINARY, meta STRUCT)``;
-  * decode / feature-extract / resize / frame-sample run as Arrow-batched
-    ``mapInPandas`` stages, one task per partition, bytes never touch the
-    driver;
+  * decode runs as an Arrow-batched ``mapInPandas`` stage, one task per
+    partition, bytes never touch the driver;
   * the actual codec call sits behind ``_decode_payload`` — real codecs
     (PIL/librosa/av) are not in this container, so decode falls back to a
     deterministic byte-statistics fake, clearly marked. The Spark-side
@@ -26,7 +25,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as STypes
 
 MEDIA_SCHEMA = STypes.StructType(
@@ -119,62 +117,3 @@ def decode_stats(media: DataFrame, codec: str = "auto") -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-FEATURE_DIM = 16
-FEATURES_SCHEMA = f"media_id long, features array<double>"
-
-
-def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """Fixed-dim feature vector per item (deterministic byte-block means in
-    lieu of a real encoder). The output shape matches what an image/audio
-    encoder stage would emit, so similarity/dedup operators compose."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized block means: reshape the first dim*step bytes to
-        # (dim, step) and mean along axis 1 — one numpy pass per payload
-        # instead of dim python slice-sum loops.
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"].to_numpy(), pdf["payload"]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if arr.size == 0:
-                    vec = [0.0] * dim
-                elif arr.size < dim:
-                    padded = np.zeros(dim)
-                    padded[: arr.size] = arr / 255.0
-                    vec = padded.tolist()
-                else:
-                    step = arr.size // dim
-                    vec = (
-                        arr[: dim * step].reshape(dim, step).mean(axis=1) / 255.0
-                    ).tolist()
-                rows.append({"media_id": media_id, "features": vec})
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
-    """Frame sampling for video rows: strided selection over n_frames
-    (metadata-level; payload slicing happens at decode in a real codec).
-    Relational analogue of the reference's strided downsample
-    (core/arcgis.py:59-61)."""
-    frames = F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_k))
-    return (
-        # n_frames=0 would make sequence(0,-1,k) illegal — zero-frame rows
-        # simply emit no frames.
-        media.filter((F.col("kind") == "video") & (F.col("meta.n_frames") > 0))
-        .select("media_id", F.explode(frames).alias("frame_idx"), "meta")
-        .select("media_id", "frame_idx")
-    )
-
-
-def resize_meta(media: DataFrame, scale: int = 2) -> DataFrame:
-    """Resize as a metadata transform + downstream decode hint — the
-    actual pixel resample belongs in the decode UDF with a real codec."""
-    return media.filter(F.col("kind") == "image").select(
-        "media_id",
-        (F.col("meta.width") / scale).cast("int").alias("width"),
-        (F.col("meta.height") / scale).cast("int").alias("height"),
-    )

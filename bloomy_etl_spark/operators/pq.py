@@ -41,8 +41,7 @@ from bloomy_etl_spark.functions.sqltext import (
 from bloomy_etl_spark.operators.clustering import kmeans_lloyd
 
 __all__ = ["train_pq", "pq_encode", "pq_search", "pq_search_batch",
-           "reconstruction_mse", "build_ivfpq_index", "search_ivfpq_index",
-           "search_ivfpq_refined", "add_to_ivfpq_index"]
+           "build_ivfpq_index", "search_ivfpq_index", "search_ivfpq_refined"]
 
 
 def _check_dims(dim: int, m: int) -> int:
@@ -370,58 +369,6 @@ def _encode_input(assigned: DataFrame, cents: DataFrame,
     )
 
 
-def add_to_ivfpq_index(embs_new: DataFrame, index_dir: str,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> None:
-    """Incremental add: assign new vectors against the STORED coarse
-    quantizer, encode them with the STORED codebooks (frozen model —
-    re-train and rebuild when the distribution drifts, the standard IVF
-    ingest contract shared with ``similarity.add_to_ivf_index``), and
-    APPEND the codes into the cluster partitions. An add touches only
-    the partitions its vectors land in; a post-add search equals a
-    from-scratch encode of old∪new under the same frozen
-    centroids+codebooks (equivalence-tested via build's ``codebooks``
-    pass-through). Residual indexes encode v − centroid exactly like
-    the build. Ids are the caller's dedup contract, as in IVF. Indexes
-    built with ``keep_raw=True`` get their raw lists appended too, so
-    :func:`search_ivfpq_refined` sees the added vectors."""
-    import os
-
-    spark = embs_new.sparkSession
-    cents = spark.read.parquet(f"{index_dir}/centroids")
-    codebooks = _load_codebooks(spark, index_dir)
-    residual = _load_residual_flag(spark, index_dir)
-    from bloomy_etl_spark.operators.similarity import _assign_to_centroids
-
-    from bloomy_etl_spark.session import pin
-
-    assigned = _assign_to_centroids(embs_new, cents, id_col, vec_col)
-    has_raw = os.path.isdir(f"{index_dir}/raw")
-    if has_raw:
-        # second consumer (raw append) → pin so the assignment cross
-        # join executes once
-        assigned = pin(assigned, eager=False)
-    if has_raw:
-        (
-            assigned.select("neighbor_id", "cluster_id",
-                            F.col("nv").alias("vec"))
-            .write.mode("append")
-            .partitionBy("cluster_id")
-            .parquet(f"{index_dir}/raw")
-        )
-    # referenced by both the encode and the id/cluster spine below
-    enc_input = pin(_encode_input(assigned, cents, residual), eager=False)
-    coded = pq_encode(enc_input, codebooks, id_col="neighbor_id",
-                      vec_col="nv")
-    (
-        enc_input.select("neighbor_id", "cluster_id")
-        .join(coded, "neighbor_id")
-        .write.mode("append")
-        .partitionBy("cluster_id")
-        .parquet(f"{index_dir}/corpus")
-    )
-
-
 def search_ivfpq_index(spark, index_dir: str, queries: DataFrame,
                        k: int = 5, nprobe: int = 8,
                        id_col: str = "vec_id",
@@ -599,28 +546,3 @@ def search_ivfpq_refined(spark, index_dir: str, queries: DataFrame,
         .select("query_id", "neighbor_id",
                 F.round("exact_dist2", 6).alias("exact_dist2"), "rank")
     )
-
-
-def reconstruction_mse(embs: DataFrame, codebooks: list[list[list[float]]],
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> float:
-    """Mean squared reconstruction error over the corpus — the PQ
-    quality metric (lower = codebooks fit the distribution better).
-    One encode + one aggregate; returns a single driver float."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    enc = pq_encode(embs, codebooks, id_col, vec_col)
-    joined = embs.select(F.col(id_col), F.col(vec_col)).join(enc, id_col)
-    err = None
-    for s in range(m):
-        cb = lit_double_matrix(codebooks[s])
-        rec = F.element_at(cb, F.element_at(F.col("codes"), s + 1) + 1)
-        sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)
-        e = F.aggregate(
-            F.zip_with(sub, rec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-        err = e if err is None else err + e
-    row = joined.select(F.avg(err).alias("mse")).first()
-    return float(row["mse"])

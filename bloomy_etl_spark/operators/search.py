@@ -1,161 +1,10 @@
-"""Persisted inverted text index: build once, search many, read little.
-
-The retrieval-side companion to the IVF vector index
-(``similarity.py::build_ivf_index``): term postings are laid out in
-hash buckets on disk so a query touches only its terms' partitions —
-at 100 TB the index is big but a search reads O(probed buckets), not
-the corpus.  Scoring is Okapi BM25 over the same tokenizer and idf
-model as ``corpus.py::bm25_score`` (reference:
-``/root/reference/analysis/relevance.py`` seed-term scoring surface).
-
-Layout under ``path``:
-  * ``postings/`` — (w, doc_id, tf) partitioned by
-    ``bucket = pmod(xxhash64(w), n_buckets)`` — the pruning key;
-  * ``lens/``     — (doc_id, dl) document lengths (corpus-keyed, used
-    by the length normalization — joined, never broadcast);
-  * ``_index_meta.json`` — n_docs, total_len, n_buckets.
-
-Search cost: probed-bucket postings scan (PartitionFilters-asserted in
-tests) → per-term df aggregate (exact, from the pruned read) → per-doc
-tf rows joined with idf (tiny broadcast) and lens (keyed join) → one
-top-k.  ``mode='and'`` keeps only docs matching every term (count of
-distinct matched terms — no per-term join chain)."""
+"""Hybrid-retrieval fusion: combine a lexical and a semantic ranking
+(q122)."""
 
 from __future__ import annotations
 
-import json
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from bloomy_etl_spark.functions import text as T
-
-__all__ = ["build_text_index", "search_text_index"]
-
-
-def _meta_path(path: str) -> str:
-    return os.path.join(path, "_index_meta.json")
-
-
-def build_text_index(
-    docs: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> None:
-    """Tokenize, aggregate per-(term, doc) tf, and persist postings
-    hash-bucketed by term.  One shuffle (the tf aggregate); the bucket
-    column is map-side."""
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(T.tokens(F.col(text_col))).alias("w"),
-    )
-    postings = (
-        tok.groupBy("w", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64("w"), F.lit(n_buckets)))
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "postings")
-    )
-    lens = docs.select(
-        F.col(id_col).alias("doc_id"),
-        T.token_count(F.col(text_col)).cast("long").alias("dl"),
-    )
-    lens.write.mode("overwrite").parquet(os.path.join(path, "lens"))
-    stats = lens.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total")
-    ).first()
-    with open(_meta_path(path), "w") as f:
-        json.dump(
-            {
-                "n_docs": stats["n"],
-                "total_len": int(stats["total"] or 0),
-                "n_buckets": n_buckets,
-            },
-            f,
-        )
-
-
-def search_text_index(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    *,
-    mode: str = "and",
-    top_k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k over the persisted index, reading only the probed
-    term buckets.  Returns (doc_id, n_hits, bm25) — ties broken by
-    doc_id for a deterministic cut."""
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if mode not in ("and", "or"):
-        raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
-    tset = sorted(set(terms))
-    with open(_meta_path(path)) as f:
-        meta = json.load(f)
-    n_docs, n_buckets = meta["n_docs"], meta["n_buckets"]
-    avgdl = meta["total_len"] / n_docs if n_docs else 0.0
-
-    # bucket ids via the same JVM hash the writer used (tiny job)
-    probe = spark.createDataFrame([(t,) for t in tset], "w string").select(
-        "w", F.pmod(F.xxhash64("w"), F.lit(n_buckets)).alias("bucket")
-    )
-    buckets = sorted({r["bucket"] for r in probe.collect()})
-
-    postings = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .filter(F.col("bucket").isin(buckets))  # PartitionFilters prune
-        .filter(F.col("w").isin(tset))
-        .select("w", "doc_id", "tf")
-    )
-    # exact df per term from the pruned read (a bucket holds ALL of a
-    # term's postings, so the count is global-exact)
-    dfc = {
-        r["w"]: r["df"]
-        for r in postings.groupBy("w")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .collect()
-    }
-    idf = spark.createDataFrame(
-        [
-            (
-                t,
-                math.log(
-                    (n_docs - dfc.get(t, 0) + 0.5) / (dfc.get(t, 0) + 0.5)
-                    + 1.0
-                ),
-            )
-            for t in tset
-        ],
-        "w string, idf double",
-    )
-    lens = spark.read.parquet(os.path.join(path, "lens"))
-    tf, dl = F.col("tf"), F.col("dl")
-    contrib = F.col("idf") * (
-        tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
-    )
-    scored = (
-        postings.join(F.broadcast(idf), "w")
-        .join(lens, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_hits"),
-            F.sum(contrib).alias("bm25"),
-        )
-    )
-    if mode == "and":
-        scored = scored.filter(F.col("n_hits") == len(tset))
-    return scored.orderBy(F.col("bm25").desc(), F.col("doc_id")).limit(top_k)
 
 
 def rrf_fuse(ranked_a: DataFrame, ranked_b: DataFrame,

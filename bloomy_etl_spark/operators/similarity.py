@@ -420,10 +420,10 @@ def build_ivf_index(embs: DataFrame, index_dir: str,
 
 def _assign_to_centroids(embs: DataFrame, cents: DataFrame,
                          id_col: str, vec_col: str) -> DataFrame:
-    """Coarse-quantizer assignment shared by the initial build and
-    incremental adds — argmax cosine, ties to the smaller cid, the same
-    math as :func:`ivf_topk`, so every write path lands vectors in the
-    cluster a search will probe for them."""
+    """Coarse-quantizer assignment shared by the IVF and IVF-PQ index
+    builds — argmax cosine, ties to the smaller cid, the same math as
+    :func:`ivf_topk`, so every write path lands vectors in the cluster a
+    search will probe for them."""
     corpus = embs.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"),
         norm(F.col(vec_col)).alias("_nn"),
@@ -437,26 +437,6 @@ def _assign_to_centroids(embs: DataFrame, cents: DataFrame,
         ),
         F.any_value(F.col("nv")).alias("nv"),
         F.any_value(F.col("_nn")).alias("_nn"),
-    )
-
-
-def add_to_ivf_index(embs_new: DataFrame, index_dir: str,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
-    """Incremental add: assign new vectors against the STORED quantizer
-    (frozen centroids — standard IVF ingest; re-train and rebuild when
-    the distribution drifts) and APPEND into the cluster partitions.
-    Search semantics and pruning are unchanged: an add touches only the
-    partitions its vectors land in, never rewrites history, and a
-    post-add search equals a from-scratch build over old∪new vectors
-    under the same centroids (equivalence-tested). Ids are the caller's
-    contract — re-adding an existing id duplicates it (dedup upstream,
-    e.g. the exact-dedup operator, exactly like any append-only store)."""
-    spark = embs_new.sparkSession
-    cents = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = _assign_to_centroids(embs_new, cents, id_col, vec_col)
-    assigned.write.mode("append").partitionBy("cluster_id").parquet(
-        f"{index_dir}/corpus"
     )
 
 

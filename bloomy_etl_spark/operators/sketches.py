@@ -68,15 +68,6 @@ def cms_build(items: DataFrame, item_col: str, depth: int = 4,
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two same-shape sketches (disjoint-slice merge)."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_estimate(sketch: DataFrame, keys: DataFrame, item_col: str,
                  depth: int = 4, width: int = 256) -> DataFrame:
     """Point estimates for ``keys``: join each key's d cells against the
@@ -106,60 +97,10 @@ def cms_estimate(sketch: DataFrame, keys: DataFrame, item_col: str,
 
 
 # ---------------------------------------------------------------------------
-# HyperLogLog distinct-count store (Spark's native DataSketches HLL).
-#
-# The CMS answers "how OFTEN does X occur"; the HLL store answers "how
-# many DISTINCT values does group g have" — per-domain distinct URLs,
-# per-language distinct documents — with bounded state per group
-# (~2^lgk bytes) instead of a distinct-shuffle of the raw keys.
-# ``approx_count_distinct`` alone gives the number but not a MERGEABLE
-# artifact; ``hll_sketch_agg`` gives a binary sketch that unions across
-# batches/slices losslessly w.r.t. the registers (unions promote the
-# internal representation, so estimates track the one-shot build to
-# ~1%, unit-measured), so daily sketches roll up to monthly without
-# touching the raw data. Same durable-table posture as the CMS store;
-# no DuckDB-replayable oracle (sketch bytes are library-internal) →
-# unit-verified: slice merge within 2% of one-shot, both within HLL
-# error of the exact distinct count.
-# ---------------------------------------------------------------------------
-def hll_build(df: DataFrame, keys: list[str], item_col: str,
-              lgk: int = 12) -> DataFrame:
-    """Per-group HLL sketch over ``item_col`` (binary column ``hll``).
-    One aggregation; shuffle volume = one ~2^lgk-byte sketch per group.
-    ``lgk`` 12 → ~1.6% relative standard error."""
-    grouped = df.groupBy(*keys) if keys else df.groupBy()
-    return grouped.agg(
-        F.hll_sketch_agg(F.col(item_col), F.lit(lgk)).alias("hll")
-    )
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union any number of per-group sketch tables (monoid reduce, like
-    ``incremental.merge_states``): same group in several inputs unions
-    cell-wise; the result is again a sketch table."""
-    if not sketches:
-        raise ValueError("no sketches given")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    keys = [c for c in u.columns if c != "hll"]
-    grouped = u.groupBy(*keys) if keys else u.groupBy()
-    return grouped.agg(F.hll_union_agg(F.col("hll")).alias("hll"))
-
-
-def hll_estimate(sketch: DataFrame) -> DataFrame:
-    """Sketch table → (keys…, n_distinct long). Pure projection."""
-    keys = [c for c in sketch.columns if c != "hll"]
-    return sketch.select(
-        *keys, F.hll_sketch_estimate(F.col("hll")).alias("n_distinct")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Portable register-level HLL (Flajolet et al. 2007).
 #
-# The DataSketches store above is the production path but its sketch
-# bytes are library-internal — no cross-engine oracle can replay them.
+# Spark's own DataSketches HLL (``hll_sketch_agg``) keeps its sketch
+# bytes library-internal — no cross-engine oracle can replay them.
 # This variant keeps the REGISTERS themselves as rows
 # (keys…, bucket, r): bucket = low-p bits of the portable md5 int,
 # r = max over the group's items of (leading zeros of the remaining
@@ -316,26 +257,6 @@ def kmv_merge_col(a, b, k: int):
         ),
         1,
         k,
-    )
-
-
-def kmv_merge(*sketches: DataFrame, k: int) -> DataFrame:
-    """Union any number of per-group sketch tables (monoid reduce, same
-    contract as :func:`hll_merge`): one union + one bounded groupBy;
-    every array involved is ≤ k elements."""
-    if not sketches:
-        raise ValueError("no sketches given")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    keys = [c for c in u.columns if c != "kmv"]
-    grouped = u.groupBy(*keys) if keys else u.groupBy()
-    return grouped.agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("kmv")))),
-            1,
-            k,
-        ).alias("kmv")
     )
 
 

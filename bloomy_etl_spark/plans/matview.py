@@ -1,64 +1,36 @@
-"""Materialized aggregate views: build, incremental refresh, rewrite.
+"""Mergeable aggregate states and the rewrite that answers from them.
 
-The lakehouse answer to "the same rollup is computed every morning over
-100 TB": persist the aggregate once at a chosen grain, keep it current
-by folding in new batches (never recomputing history), and answer any
-query AT OR ABOVE that grain from the view instead of the base table.
-The algebra is the mergeable-state monoid of ``operators/incremental.py``
-(count / sum / min / max / sum-of-squares per measure), generalized to
-multiple measures and wired to a rewrite rule.
+The algebra behind materialized aggregate views: keep an aggregate at a
+fine grain as PARTIAL STATES and answer any query AT OR ABOVE that grain
+from them instead of the base table (q87). It is the mergeable-state
+monoid of ``operators/incremental.py`` (count / sum / min / max /
+sum-of-squares per measure, plus HLL registers and histogram bins),
+generalized to multiple measures and wired to a rewrite rule.
 
-Why this shape at scale
------------------------
-* The view stores PARTIAL STATES, not finalized values — so any coarser
+* The state stores PARTIAL STATES, not finalized values — so any coarser
   grouping re-aggregates exactly (``avg``/``stddev_pop`` finalize from
-  merged sums; a view of finalized averages could not be re-averaged).
-* Refresh is append-only per batch: one ``partitionBy(batch_id)``
-  dynamic overwrite makes re-delivered batches idempotent (same id →
-  same partition replaced, never doubled) — the txlog/rollup-store
-  posture without a coordinator.
-* Rewrite legality is static metadata: a query is answerable iff its
-  group keys ⊆ view keys, its filter columns ⊆ view keys (filters on
-  grouped-out columns would need base rows), and its measures derive
-  from stored states.  The rewritten plan scans ``|groups|`` rows
-  instead of ``|base|`` — the entire point at 100 TB — and an optional
-  key partitioning of the view gives partition pruning on top.
+  merged sums; finalized averages could not be re-averaged).
+* Rewrite legality is static: a query is answerable iff its group keys
+  ⊆ state keys, its filter columns ⊆ state keys (filters on grouped-out
+  columns would need base rows), and its measures derive from stored
+  states. The rewritten plan scans ``|groups|`` rows instead of
+  ``|base|``.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bloomy_etl_spark.session import pin
-
-__all__ = [
-    "AggQuery",
-    "streaming_matview_sink",
-    "build_state",
-    "answer_from_state",
-    "create_matview",
-    "refresh_matview",
-    "matview_meta",
-    "matview_state",
-    "can_answer",
-    "answer_from_matview",
-    "answer_direct",
-    "answer",
-    "compact_matview",
-]
+__all__ = ["AggQuery", "build_state", "answer_from_state"]
 
 _FNS = frozenset(
     {"count_rows", "count", "sum", "min", "max", "avg", "stddev_pop",
      "approx_count_distinct", "approx_percentile"}
 )
-# codegen bound for the inline per-bin sum expressions in build_state
-_MAX_PCTL_BINS = 512
 _OPS = {
     "=": lambda c, v: c == v,
     "!=": lambda c, v: c != v,
@@ -198,174 +170,6 @@ def _merge_state(state: DataFrame, keys: Sequence[str],
     return merged
 
 
-def _meta_path(path: str) -> str:
-    return os.path.join(path, "_mv_meta.json")
-
-
-def create_matview(
-    df: DataFrame,
-    keys: Sequence[str],
-    measure_cols: Sequence[str],
-    path: str,
-    *,
-    approx_distinct_cols: Sequence[str] = (),
-    percentile_cols: dict[str, Sequence[float]] | None = None,
-    partition_by: Sequence[str] = (),
-) -> None:
-    """Materialize partial states of ``df`` at grain ``keys`` for every
-    column in ``measure_cols``.  ``partition_by`` (⊆ keys) lays the view
-    out for partition pruning on those keys.  ``percentile_cols`` maps
-    col → (lo, hi, n_bins): those columns additionally store a mergeable
-    histogram so ``approx_percentile`` measures answer from the view
-    with value error ≤ (hi−lo)/n_bins.  The initial load is batch 0 of
-    the refresh log."""
-    if not set(partition_by) <= set(keys):
-        raise ValueError("partition_by must be a subset of keys")
-    percentile_cols = dict(percentile_cols or {})
-    for c, (lo, hi, nb) in percentile_cols.items():
-        if not float(hi) > float(lo):
-            raise ValueError(f"percentile col {c}: need hi > lo")
-        if not 1 <= int(nb) <= _MAX_PCTL_BINS:
-            raise ValueError(
-                f"percentile col {c}: n_bins must be in [1, {_MAX_PCTL_BINS}]")
-    state = build_state(
-        df, keys, measure_cols, approx_distinct_cols, percentile_cols
-    ).withColumn("batch_id", F.lit(0))
-    (
-        state.write.mode("overwrite")
-        .partitionBy("batch_id", *partition_by)
-        .parquet(path)
-    )
-    meta = {
-        "keys": list(keys),
-        "measure_cols": list(measure_cols),
-        "approx_distinct_cols": list(approx_distinct_cols),
-        "percentile_cols": {c: [float(lo), float(hi), int(nb)]
-                            for c, (lo, hi, nb) in percentile_cols.items()},
-        "partition_by": list(partition_by),
-    }
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
-
-
-def refresh_matview(df_batch: DataFrame, path: str, batch_id: int) -> None:
-    """Fold one new batch into the view.  Idempotent per ``batch_id``:
-    the batch's states land in their own partition via dynamic
-    overwrite, so an at-least-once redelivery replaces rather than
-    doubles (same contract as ``incremental_store``, enforced by
-    layout instead of by exclusion)."""
-    if int(batch_id) <= 0:
-        raise ValueError("batch_id must be positive (0 is the initial load)")
-    meta = matview_meta(path)
-    state = build_state(df_batch, meta["keys"], meta["measure_cols"],
-                        meta.get("approx_distinct_cols", ()),
-                        meta.get("percentile_cols") or None)
-    spark = df_batch.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            state.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", *meta["partition_by"])
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def streaming_matview_sink(stream: DataFrame, path: str,
-                           checkpoint_dir: str):
-    """Live materialized view: every micro-batch folds into the view
-    via :func:`refresh_matview` with ``batch_id = epoch + 1`` (the
-    initial ``create_matview`` load owns batch 0).  Exactly-once per
-    epoch without a coordinator: a crashed epoch replays under the SAME
-    id and the dynamic-overwrite idempotency replaces its partition
-    instead of doubling it — the ``streaming_rollup_ingest`` posture,
-    pointed at the multi-measure rewrite-capable view."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        refresh_matview(batch, path, int(epoch_id) + 1)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def compact_matview(spark: SparkSession, path: str) -> int:
-    """Fold every refresh batch into a single batch-0 state and rewrite
-    the view. Each ``refresh_matview`` adds one ``batch_id`` partition;
-    after thousands of refreshes the read-side merge pays for all of
-    them — compaction restores O(groups) read cost. State merging is
-    the monoid, so answers are bit-identical before and after (tested).
-
-    Returns the number of batch partitions folded. Single-writer: run
-    from the same maintenance job that issues refreshes (a refresh
-    landing DURING the rewrite would be lost with it); afterwards,
-    refresh ids may restart anywhere > 0 — idempotent redelivery only
-    needs ids not to collide going forward, which epoch-derived ids
-    (``streaming_matview_sink``) never do."""
-    meta = matview_meta(path)
-    raw = spark.read.parquet(path)
-    n_batches = raw.select("batch_id").distinct().count()
-    merged = _merge_state(
-        raw.drop("batch_id"), meta["keys"], meta["measure_cols"],
-        meta.get("approx_distinct_cols", ()),
-        meta.get("percentile_cols") or None,
-    ).withColumn("batch_id", F.lit(0))
-    # materialize BEFORE the overwrite truncates the input it reads from
-    merged = pin(merged, eager=True)
-    (
-        merged.write.mode("overwrite")
-        .partitionBy("batch_id", *meta["partition_by"])
-        .parquet(path)
-    )
-    # the whole-path overwrite removed the sidecar meta — restore it
-    with open(_meta_path(path), "w") as f:
-        json.dump(meta, f)
-    return n_batches
-
-
-def matview_meta(path: str) -> dict:
-    with open(_meta_path(path)) as f:
-        return json.load(f)
-
-
-def matview_state(spark: SparkSession, path: str) -> DataFrame:
-    """Current state at the view's own grain (all batches merged)."""
-    meta = matview_meta(path)
-    raw = spark.read.parquet(path).drop("batch_id")
-    return _merge_state(raw, meta["keys"], meta["measure_cols"],
-                        meta.get("approx_distinct_cols", ()),
-                        meta.get("percentile_cols") or None)
-
-
-def can_answer(meta: dict, q: AggQuery) -> bool:
-    """Static rewrite legality — see module docstring for the rule."""
-    keys = set(meta["keys"])
-    if not set(q.keys) <= keys:
-        return False
-    if not {c for c, _, _ in q.filters} <= keys:
-        return False
-    stored = set(meta["measure_cols"])
-    stored_hll = set(meta.get("approx_distinct_cols", ()))
-    stored_pctl = set(meta.get("percentile_cols", ()) or ())
-    ok = []
-    for m in q.measures.values():
-        fn, col, _ = _mfc(m)
-        if fn == "count_rows":
-            ok.append(True)
-        elif fn == "approx_count_distinct":
-            ok.append(col in stored_hll)
-        elif fn == "approx_percentile":
-            ok.append(col in stored_pctl)
-        else:
-            ok.append(col in stored)
-    return all(ok)
-
-
 def _apply_filters(df: DataFrame, q: AggQuery) -> DataFrame:
     for col, op, val in q.filters:
         df = df.filter(_OPS[op](F.col(col), val))
@@ -417,26 +221,6 @@ def _finalize_measures(q: AggQuery, round_dp: int,
     return out
 
 
-def answer_from_matview(
-    spark: SparkSession, path: str, q: AggQuery, *, round_dp: int = 4
-) -> DataFrame:
-    """Rewrite ``q`` against the view: filter states (partition-pruned
-    when the filter column is in ``partition_by``), re-aggregate to the
-    query grain, finalize.  Scan size is the view's group count, never
-    the base row count."""
-    q.validate()
-    meta = matview_meta(path)
-    if not can_answer(meta, q):
-        raise ValueError("matview cannot answer this query "
-                         f"(keys={meta['keys']}, measures="
-                         f"{meta['measure_cols']})")
-    raw = spark.read.parquet(path).drop("batch_id")
-    return answer_from_state(
-        raw, q, round_dp=round_dp,
-        percentile_cols=meta.get("percentile_cols") or None,
-    )
-
-
 def _measure_col_sets(q: AggQuery):
     plain, approx, pctl = set(), set(), set()
     for m in q.measures.values():
@@ -454,13 +238,13 @@ def answer_from_state(state: DataFrame, q: AggQuery, *,
                       round_dp: int = 4,
                       percentile_cols: dict | None = None) -> DataFrame:
     """Rewrite ``q`` against an in-memory/loaded state table at a finer
-    grain: filter states, merge to the query grain, finalize.  This is
-    the storage-free core of ``answer_from_matview`` — also the shape a
-    caller uses when the fine-grain state arrives from somewhere else
-    (a streaming rollup store, a shuffle-stage byproduct).
+    grain: filter states, merge to the query grain, finalize. The
+    fine-grain state may come from ``build_state`` or from anywhere
+    else that stores the same columns (a streaming store, a
+    shuffle-stage byproduct).
     ``percentile_cols`` (col → (lo, hi, n_bins)) is required iff the
-    query has ``approx_percentile`` measures — it is the view's
-    histogram contract, carried by the matview meta."""
+    query has ``approx_percentile`` measures — it is the state's
+    histogram contract, the one ``build_state`` was given."""
     from bloomy_etl_spark.operators.sketches import hist_cum_col
 
     q.validate()
@@ -480,81 +264,3 @@ def answer_from_state(state: DataFrame, q: AggQuery, *,
     return merged.select(
         *q.keys, *_finalize_measures(q, round_dp, percentile_cols)
     )
-
-
-def answer_direct(base: DataFrame, q: AggQuery, *,
-                  round_dp: int = 4) -> DataFrame:
-    """The same query evaluated directly on base rows (the no-view
-    plan, and the semantics oracle for the rewrite).
-
-    ``approx_percentile`` measures are served EXACTLY here, under the
-    SAME rank convention the histogram estimator uses (type-1: the
-    smallest value whose cumulative count reaches ``q·n``, read off a
-    ``cume_dist`` window). Convention parity is what makes the
-    documented |view − direct| ≤ one-bin-width contract a theorem: the
-    true type-1 quantile lives in the estimator's landing bin, and the
-    clamped interpolation cannot leave it. (Spark's native
-    ``percentile`` interpolates BETWEEN order statistics — against
-    that convention the gap is unbounded on gappy data.)"""
-    q.validate()
-    plain, approx, pctl = _measure_col_sets(q)
-    state = build_state(_apply_filters(base, q), q.keys, plain, approx)
-    if not pctl:
-        return state.select(*q.keys, *_finalize_measures(q, round_dp))
-    # exact type-1 quantiles need base rows at a total order: one
-    # window pass per percentile column (NULLs excluded, matching the
-    # sketch's null-skip), then a conditional-min per requested q —
-    # every side of the final join is |groups|-sized
-    base_f = _apply_filters(base, q)
-    exact: DataFrame | None = None
-    for c in pctl:
-        w = Window.partitionBy(*q.keys).orderBy(F.col(c).cast("double"))
-        cd = (
-            base_f.filter(F.col(c).isNotNull())
-            .withColumn("__cd", F.cume_dist().over(w))
-        )
-        aggs = [
-            F.round(
-                F.min(F.when(F.col("__cd") >= float(qq),
-                             F.col(c).cast("double"))),
-                round_dp,
-            ).alias(name)
-            for name, m in q.measures.items()
-            for fn, col, qq in [_mfc(m)]
-            if fn == "approx_percentile" and col == c
-        ]
-        part = cd.groupBy(*q.keys).agg(*aggs)
-        if exact is None:
-            exact = part
-        elif q.keys:
-            exact = exact.join(part, list(q.keys))
-        else:
-            exact = exact.crossJoin(part)
-    q_rest = AggQuery(q.keys,
-                      {n: m for n, m in q.measures.items()
-                       if _mfc(m)[0] != "approx_percentile"},
-                      q.filters)
-    rest = (state.select(*q.keys, *_finalize_measures(q_rest, round_dp))
-            if q_rest.measures else state.select(*q.keys))
-    joined = (rest.join(exact, list(q.keys)) if q.keys
-              else rest.crossJoin(exact))
-    return joined.select(*q.keys, *q.measures)
-
-
-def answer(
-    spark: SparkSession,
-    q: AggQuery,
-    base: DataFrame,
-    matview_paths: Sequence[str] = (),
-    *,
-    round_dp: int = 4,
-) -> tuple[DataFrame, str | None]:
-    """Route ``q`` to the first view that can answer it, else the base
-    table.  Returns ``(result, chosen_path_or_None)`` so callers (and
-    tests) can see the routing decision."""
-    q.validate()
-    for path in matview_paths:
-        if can_answer(matview_meta(path), q):
-            return answer_from_matview(spark, path, q,
-                                       round_dp=round_dp), path
-    return answer_direct(base, q, round_dp=round_dp), None

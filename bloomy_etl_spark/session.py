@@ -129,10 +129,9 @@ def pin(df, eager: bool = True):
 
     Every branch is a CHECKPOINT (never ``persist``): callers rely on
     the pinned contents being NON-RECOMPUTABLE-from-lineage — range-id
-    numbering reads the same physical partitions twice, ``__rid``
-    stamps must never be reassigned, and matview compaction overwrites
-    the path its own input was read from. A recomputable ``persist``
-    would silently violate all three on a lost block, and persisted
+    numbering reads the same physical partitions twice and ``__rid``
+    stamps must never be reassigned. A recomputable ``persist`` would
+    silently violate both on a lost block, and persisted
     plans also accumulate in the session CacheManager for iterative
     callers (k-means/CC/pagerank rounds, streaming microbatches) with
     no reclamation — checkpoint blocks are reclaimed by the
@@ -155,6 +154,12 @@ def pin(df, eager: bool = True):
     ``eager=True`` materializes before returning (callers that need the
     pinned contents physically identical across later jobs);
     ``eager=False`` just cuts lineage, materializing on first use.
+
+    Observations: every ``DataFrame.observe`` upstream of the pin is
+    published by the pin. An eager pin publishes the computed metrics;
+    a lazy pin publishes them at once with NULL values, and they stay
+    NULL after the checkpoint is filled. Count stages with ``observe``
+    only upstream of an eager pin, or downstream of a lazy one.
     """
     sc = df.sparkSession.sparkContext
     if not sc.master.startswith("local") and sc.getCheckpointDir() is not None:

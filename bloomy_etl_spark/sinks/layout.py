@@ -1,31 +1,22 @@
-"""Storage layout for cluster-scale tables: date partitioning and hash
-bucketing.
+"""Storage layout for cluster-scale tables, decided at WRITE time.
 
 At 100 TB the single-file fixture model becomes a partitioned lakehouse
-table, and the two layout decisions that dominate query cost are made at
-WRITE time:
+table, and layout dominates query cost:
 
 * **Date partitioning** (`partitionBy(date)`): time-range predicates
   become partition PRUNING — the scan never lists, opens, or reads
   out-of-range files. Every time-sliced query in the corpus (absolute
   timestamp filters F14, event-window queries, day merges) turns from
   full-scan + filter into touching only matching directories.
-* **Hash bucketing** (`bucketBy(n, key)`): both sides of a recurring
-  equi-join written with the same bucket count and key are CO-LOCATED —
-  the join compiles with no Exchange on either side. This is how the
-  fact-fact joins (events ⋈ orders on user/custkey) drop their shuffle
-  at scale; tests assert the exchange-free plan, not just the result.
+* **Clustering** (Z-order, range-sorted writes): files cover narrow
+  value ranges, so parquet min/max statistics skip files.
+* **Maintenance**: compaction, partition-scoped upsert, SCD2 history
+  and deletion propagation rewrite only the partitions they touch.
 
 The reference keeps its cache as one NetCDF per AOI-year
 (`/root/reference/core/pipeline.py:163-177` writes a single file); this
 module is the distributed replacement for that layout decision.
-
-Write-side notes: ``maxRecordsPerFile`` bounds file size under skewed
-partitions; bucket counts should be sized so one bucket of the LARGER
-table fits an executor core's working set (tests use small counts). A
-bucketed table must be registered in a catalog (Spark derives the
-no-shuffle plan from catalog metadata, not file names) — the functions
-here register external tables at an explicit path.
+``maxRecordsPerFile`` bounds file size under skewed partitions.
 """
 
 from __future__ import annotations
@@ -49,55 +40,6 @@ def write_date_partitioned(df: DataFrame, path: str, ts_col: str = "ts",
         .partitionBy("p_date")
         .parquet(path)
     )
-
-
-def read_date_pruned(spark: SparkSession, path: str,
-                     start: str | None = None,
-                     end: str | None = None) -> DataFrame:
-    """Read a date-partitioned table with partition-pruning filters.
-
-    The ``p_date`` comparisons bind to the partition column, so Catalyst
-    turns them into PartitionFilters (directory pruning) rather than data
-    filters — asserted in tests/test_layout.py.
-    """
-    df = spark.read.parquet(path)
-    if start is not None:
-        df = df.filter(F.col("p_date") >= F.lit(start).cast("date"))
-    if end is not None:
-        df = df.filter(F.col("p_date") <= F.lit(end).cast("date"))
-    return df
-
-
-def write_bucketed_table(df: DataFrame, name: str, path: str,
-                         bucket_col: str, n_buckets: int = 32,
-                         sort: bool = True) -> None:
-    """Register ``df`` as an external bucketed table at ``path``.
-
-    ``sortBy`` the bucket key too: a sort-merge join between two tables
-    bucketed AND sorted on the key needs neither exchange nor sort —
-    the scan satisfies both requirements.
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    writer = (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, bucket_col)
-    )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(name)
-
-
-def cocluster_join(spark: SparkSession, left_name: str, right_name: str,
-                   key: str, how: str = "inner") -> DataFrame:
-    """Join two co-bucketed catalog tables on their bucket key.
-
-    With matching bucket counts the plan contains NO Exchange: each task
-    reads bucket i of both tables and joins locally. This is the layout
-    the recurring fact-fact joins should be written into at scale.
-    """
-    return spark.table(left_name).join(spark.table(right_name), key, how)
 
 
 # ---------------------------------------------------------------------------
@@ -468,9 +410,9 @@ def apply_tombstones(spark: SparkSession, table_dir: str,
                      tombstone_dir: str, id_col: str,
                      out_dir: str | None = None) -> int:
     """Propagate a :func:`propagate_deletes` tombstone log into a
-    DERIVED table (dedup signature store, DSIR score store, feature
-    cache …): anti-join the table against the distinct tombstoned ids
-    and rewrite. Returns the number of rows removed.
+    DERIVED table (DSIR score store, feature cache …): anti-join the
+    table against the distinct tombstoned ids and rewrite. Returns the
+    number of rows removed.
 
     Idempotent (a second application removes 0 rows) and at-least-once
     safe — exactly the property the tombstone-first crash protocol in

@@ -1,6 +1,6 @@
 """Versioned parquet tables with an atomic commit log: snapshot
 isolation, time travel, rollback, and idempotent (exactly-once)
-streaming commits — the transaction layer the lakehouse surface
+commits — the transaction layer the lakehouse surface
 (``sinks/layout.py``) writes into.
 
 The design is the open-table-format core (Delta/Iceberg shape), kept
@@ -39,7 +39,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -198,86 +197,6 @@ def history(table_dir: str) -> list[dict]:
     return out
 
 
-def table_diff(spark: SparkSession, table_dir: str, from_version: int,
-               to_version: int, key_cols: list[str] | None = None) -> DataFrame:
-    """Change-data-feed derivation between two snapshots: every row of
-    the ``to_version`` snapshot not present in ``from_version`` comes
-    back tagged ``_change = 'insert'``, every vanished row ``'delete'``
-    (whole-row, multiset semantics: ``_delta`` carries how many copies
-    appeared/vanished; one output row per distinct changed row value).
-    With ``key_cols``, an insert+delete pair sharing a key collapses to
-    one ``'update_new'``/``'update_old'`` pair — the shape a downstream
-    merge consumes.
-
-    Scale shape: one xxhash64 over the row per side, an aggregate to
-    (hash, count) per side, a full-outer hash-join of the two count
-    tables, and a semi join back to fetch surviving rows — shuffle
-    volume is O(changed + distinct hashes), never a row-by-row
-    driver-side compare. Time travel makes this pure metadata: both
-    snapshots are file lists from the commit log, so only files that
-    changed between the versions are even scanned (unchanged files
-    hash to identical (hash, count) partials on both sides and cancel).
-    """
-    a = read_table(spark, table_dir, from_version)
-    b = read_table(spark, table_dir, to_version)
-    cols = a.columns
-
-    def counted(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("__h", F.xxhash64(*[F.col(c) for c in cols]))
-            .groupBy("__h")
-            .agg(F.count(F.lit(1)).alias("__n"))
-        )
-
-    ca = counted(a).select(F.col("__h"), F.col("__n").alias("__na"))
-    cb = counted(b).select(F.col("__h"), F.col("__n").alias("__nb"))
-    delta = (
-        ca.join(cb, "__h", "full_outer")
-        .select(
-            "__h",
-            (F.coalesce("__nb", F.lit(0)) - F.coalesce("__na", F.lit(0)))
-            .alias("__d"),
-        )
-        .filter(F.col("__d") != 0)
-    )
-    ins_h = delta.filter(F.col("__d") > 0).withColumn("__delta", F.col("__d"))
-    del_h = delta.filter(F.col("__d") < 0).withColumn(
-        "__delta", -F.col("__d")
-    )
-
-    # plain keyed joins — the changed-hash set is unbounded (a full
-    # rewrite changes every row), so AQE decides broadcast, not us
-    def tag(df: DataFrame, hashes: DataFrame, label: str) -> DataFrame:
-        rows = df.withColumn(
-            "__h", F.xxhash64(*[F.col(c) for c in cols])
-        ).join(hashes.select("__h", "__delta"), "__h")
-        return (
-            rows.dropDuplicates(["__h"])
-            .drop("__h")
-            .withColumn("_change", F.lit(label))
-            .withColumnRenamed("__delta", "_delta")
-        )
-
-    inserts = tag(b, ins_h, "insert")
-    deletes = tag(a, del_h, "delete")
-    if key_cols:
-        ik = inserts.select(*key_cols).distinct()
-        dk = deletes.select(*key_cols).distinct()
-        upd_keys = ik.join(dk, key_cols, "left_semi")
-        upd_new = inserts.join(upd_keys, key_cols, "left_semi").withColumn(
-            "_change", F.lit("update_new")
-        )
-        upd_old = deletes.join(upd_keys, key_cols, "left_semi").withColumn(
-            "_change", F.lit("update_old")
-        )
-        inserts = inserts.join(upd_keys, key_cols, "left_anti")
-        deletes = deletes.join(upd_keys, key_cols, "left_anti")
-        return inserts.unionByName(deletes).unionByName(upd_new).unionByName(
-            upd_old
-        )
-    return inserts.unionByName(deletes)
-
-
 def rollback(spark: SparkSession, table_dir: str, to_version: int) -> int:
     """Restore the table to ``to_version``'s content as a NEW commit
     (history stays immutable; the bad versions remain inspectable).
@@ -320,17 +239,3 @@ def vacuum(table_dir: str, keep_versions: int = 1) -> list[str]:
                 os.remove(os.path.join(subdir, f))
                 deleted.append(rel)
     return deleted
-
-
-def streaming_commit_sink(table_dir: str, mode: str = "append"):
-    """``foreachBatch`` adapter: each micro-batch commits with
-    ``txn_id=f"batch-{batch_id}"`` so Structured Streaming's replay of
-    an already-committed batch (restart after a sink-side success but
-    driver-side failure) is skipped — exactly-once table updates from
-    an at-least-once stream."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        commit(batch_df, table_dir, mode=mode, txn_id=f"batch-{batch_id}",
-               operation=f"stream-batch-{batch_id}")
-
-    return sink

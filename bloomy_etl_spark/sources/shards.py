@@ -228,28 +228,6 @@ def _group_in_task(members: DataFrame) -> DataFrame:
     )
 
 
-def to_media_table(samples: DataFrame, media_ext: tuple[str, ...] = ("jpg", "png", "wav", "mp4")) -> DataFrame:
-    """Adapt grouped samples to the multimodal MEDIA_SCHEMA shape used by
-    ``operators/multimodal.py``: one row per (sample, media part) with an
-    opaque payload and a kind derived from the extension."""
-    kind = (
-        F.when(F.col("ext").isin("jpg", "jpeg", "png"), "image")
-        .when(F.col("ext").isin("wav", "flac", "mp3"), "audio")
-        .when(F.col("ext").isin("mp4", "mkv", "webm"), "video")
-        .otherwise("other")
-    )
-    exploded = samples.select(
-        "shard", "sample_key", F.explode("parts").alias("ext", "payload")
-    ).filter(F.col("ext").isin(*media_ext))
-    return exploded.select(
-        F.abs(F.xxhash64("shard", "sample_key", "ext")).alias("media_id"),
-        kind.alias("kind"),
-        "payload",
-        "sample_key",
-        "ext",
-    )
-
-
 def read_jsonl_corpus(spark: SparkSession, path: str,
                       schema: str = "doc_id long, text string, lang string, source string",
                       quarantine: bool = True) -> DataFrame:

@@ -42,9 +42,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables that should broadcast in joins at any scale.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to plain TIMESTAMP (µs, session-tz instant).

@@ -1,44 +1,31 @@
-"""Streaming corpus ingestion with incremental near-dup detection.
+"""Streaming ingests over durable per-batch stores.
 
-The daily-ingest loop, expressed as ONE Structured Streaming query: each
-micro-batch of new documents is deduplicated against the accumulated
-corpus using the STORED MinHash signatures
-(:func:`bloomy_etl_spark.operators.dedup.incremental_near_dups`), then
-the batch's documents and signatures are appended to the store. The
+Each ingest is ONE Structured Streaming query whose ``foreachBatch``
+folds a micro-batch into a parquet store that outlives the query: the
+integer EWMA, CUSUM, SCD2, duel-count, zone-map, attribution,
+active-user and connected-component states that the stream replays
+q144–q173 read back, plus DSIR scoring against a frozen model. The
 reference's batched imperative ingest (``/root/reference/core/
 pipeline.py:98-124``) maps to the same shape: a replayable source,
 per-batch processing, durable state between batches.
 
-Why ``foreachBatch`` rather than a stateful operator: the dedup state
-(signature store) must outlive the streaming query, be shared with batch
-jobs, and be readable by the next day's run — a parquet table IS that
-state. ``applyInPandasWithState`` state is checkpoint-private and
-per-key; the signature store is corpus-global.
-
-Scale: each batch pays batch-proportional work (see
-``incremental_near_dups`` — the history side is probed via a broadcast
-of the batch's band keys and never shuffles). The store grows as an
-append-only parquet table; compact it periodically with
-:func:`bloomy_etl_spark.sinks.layout.compact`.
+Why ``foreachBatch`` rather than a stateful operator: the state must
+outlive the streaming query, be shared with batch jobs, and be readable
+by the next run — a parquet table IS that state.
+``applyInPandasWithState`` state is checkpoint-private and per-key.
 
 Delivery semantics: foreachBatch is at-least-once on retry — a batch
-that fails mid-append can leave partial files. The ``batch_id`` column
-written with ALL THREE durable appends (pairs, corpus, signatures) makes
-replays detectable and reversible (delete-by-batch_id before re-append,
-or dedup on read); a transactional table format slots in at the writer
-without changing the flow.
+that fails mid-append can leave partial files. Every store row carries
+its ``batch_id``, so the ``read_*`` helpers collapse replays per
+``(batch_id, key)``.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bloomy_etl_spark.session import pin
-
-from bloomy_etl_spark.operators.dedup import incremental_near_dups, minhash_signatures
 
 
 def _read_or_empty(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
@@ -59,90 +46,12 @@ def _read_or_empty(spark: SparkSession, path: str, like: DataFrame) -> DataFrame
         raise
 
 
-def streaming_dedup_ingest(
-    docs_stream: DataFrame,
-    corpus_dir: str,
-    sig_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    drop_dups: bool = False,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Attach the dedup-ingest loop to a streaming document source and
-    return the started ``StreamingQuery``.
-
-    Per micro-batch:
-
-    1. near-dup pairs of (batch ∪ batch×corpus) are found via the stored
-       signatures — within-batch pairs included, so a burst of mutual
-       duplicates in one batch is caught;
-    2. pairs are appended to ``pairs_dir`` (with ``batch_id``);
-    3. the batch's signatures and documents are appended to ``sig_dir`` /
-       ``corpus_dir``. With ``drop_dups=True`` a batch doc that matched
-       the EXISTING corpus is not admitted (its signature is withheld
-       too); first-arrival wins, the pair row records the evidence.
-    """
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = pin(batch.select(id_col, text_col), eager=True)
-        corpus = _read_or_empty(spark, corpus_dir, batch)
-        sig_like = minhash_signatures(batch.limit(0))
-        sigs = _read_or_empty(spark, sig_dir, sig_like)
-        pairs, new_sigs = incremental_near_dups(
-            batch, corpus, sigs, threshold=threshold,
-            text_col=text_col, id_col=id_col,
-        )
-        pairs = pin(pairs, eager=True)  # one computation, used twice
-        pairs.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            pairs_dir
-        )
-        admitted = batch
-        admitted_sigs = new_sigs
-        if drop_dups:
-            # a batch doc loses only to the EXISTING corpus (not to a
-            # same-batch sibling, where both are first arrivals)
-            corpus_ids = corpus.select(F.col(id_col).alias("_cid"))
-            dup_side = (
-                pairs.join(corpus_ids, pairs["i"] == F.col("_cid"), "left_semi")
-                .select(F.col("j").alias(id_col))
-                .union(
-                    pairs.join(corpus_ids, pairs["j"] == F.col("_cid"), "left_semi")
-                    .select(F.col("i").alias(id_col))
-                )
-                .distinct()
-            )
-            admitted = batch.join(dup_side, id_col, "left_anti")
-            admitted_sigs = new_sigs.join(dup_side, id_col, "left_anti")
-        # batch_id rides every durable append so an at-least-once replay
-        # is detectable and reversible (delete-by-batch_id) in ALL three
-        # state tables, not just the pair log.
-        admitted.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(corpus_dir)
-        # reuse the checkpointed batch signatures (incremental_near_dups
-        # computed them once); recomputing minhash here would double the
-        # per-batch shingle+hash cost.
-        admitted_sigs.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(sig_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _order_mtimes(out_dir: str) -> None:
     """Bump part-file mtimes in name (= range-slice) order: the file
     stream source orders batches by modification time, and one parquet
     write's N part files can share an mtime — tie order is arbitrary,
-    which would silently break the monotone-arrival contracts the
-    order-sensitive ingest tests (SemDeDup, EWMA, funnel) assume."""
+    which would silently break the monotone-arrival contract an
+    order-sensitive replay assumes."""
     import glob
     import os
 
@@ -180,303 +89,6 @@ def read_docs_stream(spark: SparkSession, path: str,
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
-    )
-
-
-def replay_embs_dir(spark: SparkSession, sf_dir: str, out_dir: str,
-                    n_files: int = 4) -> str:
-    """Materialize the ``embeddings`` fixture as ``n_files`` id-ordered
-    parquet files — the embeddings analogue of :func:`replay_docs_dir`
-    (monotone vec_id ranges across micro-batches, which is exactly the
-    arrival order :func:`streaming_semdedup_ingest`'s batch-equivalence
-    contract assumes)."""
-    from bloomy_etl_spark.sources.tables import load_table
-
-    (
-        load_table(spark, sf_dir, "embeddings")
-        .repartitionByRange(n_files, "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_mtimes(out_dir)
-    return out_dir
-
-
-def streaming_semdedup_ingest(
-    embs_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    centroids: list[list[float]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Stream embeddings through SemDeDup against a persisted store and
-    return the started ``StreamingQuery`` — the semantic sibling of
-    :func:`streaming_dedup_ingest`, under the frozen-model contract of
-    :func:`streaming_ivfpq_ingest` (``centroids`` never retrain;
-    rebuild on distribution drift).
-
-    Per micro-batch: assign against the frozen centroids, unit-normalize
-    (cosine = dot, the batch operator's exact math), find lower-id
-    witnesses WITHIN the batch (the skew-safe ``bucket_pairs`` expansion)
-    and AGAINST the store (store scan + broadcast of the small batch —
-    the history never reshuffles, mirroring ``incremental_near_dups``),
-    then append every batch row to ``store_dir`` with its ``kept`` flag.
-
-    The store keeps dropped rows too — deliberately: batch
-    ``semantic_dedup`` drops any id with a lower-id near neighbor
-    REGARDLESS of whether that witness itself survived (the chain shape
-    a–b–c drops both b and c), so an already-dropped stored vector must
-    still witness-drop later arrivals.
-
-    Equivalence contract: when ids arrive monotonically across batches
-    (the :func:`replay_embs_dir` shape), the final store's
-    (id, cluster, kept) EQUALS a single batch ``semantic_dedup`` of the
-    union under the same centroids — bit-identical cosines, tested in
-    ``tests/test_streaming.py``. Out-of-order arrivals fall back to
-    first-arrival-wins: an earlier-arriving HIGHER id cannot be
-    retro-dropped by a later lower-id near-dup (its row is already
-    durable); the later arrival is evaluated against everything stored.
-
-    Delivery: at-least-once on retry; ``batch_id`` rides every append so
-    replays are detectable and reversible (delete-by-batch_id), as in
-    the other ingest loops."""
-    from bloomy_etl_spark.functions.vectors import dot, normalize
-    from bloomy_etl_spark.operators.clustering import assign_clusters
-    from bloomy_etl_spark.operators.semdedup import _pairs_from_assigned
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        # referenced by the in-batch pair stage (3×), the history probe,
-        # and the final spine — pin so the k·d argmin runs once
-        assigned = pin(
-            assign_clusters(
-                batch.select(id_col, vec_col), centroids, id_col, vec_col
-            ).select(
-                id_col, normalize(F.col(vec_col)).alias(vec_col), "cluster"
-            ),
-            eager=True,
-        )
-        like = (
-            assigned.limit(0)
-            .withColumn("kept", F.lit(True))
-            .withColumn("batch_id", F.lit(0).cast("long"))
-        )
-        hist = _read_or_empty(spark, store_dir, like)
-        # within-batch lower-id witnesses (cap²-bounded hot clusters)
-        wdrops = _pairs_from_assigned(
-            assigned, threshold, id_col, vec_col, normalized=True
-        ).select(F.col("j").alias("_drop"))
-        # history witnesses: store rows are ALWAYS lower-id under the
-        # monotone contract, but the guard keeps out-of-order arrivals
-        # at first-arrival-wins instead of silently wrong
-        probe = assigned.select(
-            F.col(id_col).alias("_bid"), F.col(vec_col).alias("_bv"),
-            "cluster",
-        )
-        hdrops = (
-            hist.join(F.broadcast(probe), "cluster")
-            .filter(F.col(id_col) < F.col("_bid"))
-            .filter(dot(F.col(vec_col), F.col("_bv")) >= threshold)
-            .select(F.col("_bid").alias("_drop"))
-        )
-        drops = wdrops.union(hdrops).distinct()
-        (
-            assigned.join(
-                drops, assigned[id_col] == drops["_drop"], "left"
-            )
-            .select(
-                id_col, vec_col, "cluster",
-                F.col("_drop").isNull().alias("kept"),
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .parquet(store_dir)
-        )
-
-    return (
-        embs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_semdedup_store(spark: SparkSession, store_dir: str,
-                        id_col: str = "vec_id") -> DataFrame:
-    """Collapse at-least-once replays in a :func:`streaming_semdedup_
-    ingest` store: one row per id, FIRST batch wins. A replayed batch's
-    rows are identical by determinism (same assignment, same witnesses),
-    so which duplicate survives within a batch_id is immaterial; an
-    out-of-order duplicate id landing in a LATER batch is superseded by
-    its first durable row — the first-arrival-wins contract the writer
-    documents. Readers of the store should come through here (the CMS/
-    HLL stores have the same reader discipline); the equivalence
-    contract ("store ≡ one batch semantic_dedup of the union") is
-    stated over THIS collapsed view."""
-    s = spark.read.parquet(store_dir)
-    w = Window.partitionBy(id_col).orderBy("batch_id")
-    return (
-        s.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def streaming_ivfpq_ingest(
-    embs_stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Stream new embeddings into a PERSISTED IVF-PQ index and return
-    the started ``StreamingQuery``.
-
-    Each micro-batch is assigned and PQ-encoded against the index's
-    FROZEN coarse quantizer and codebooks
-    (:func:`bloomy_etl_spark.operators.pq.add_to_ivfpq_index`) and
-    appended into exactly the cluster partitions it lands in — vectors
-    become searchable the moment their batch commits, and the final
-    index equals a batch add of the same vectors (which in turn equals
-    a from-scratch encode under the same frozen model; both
-    equivalences are tested). The index must already exist — streaming
-    never retrains; rebuild when distribution drift warrants, exactly
-    the IVF ingest contract.
-
-    Delivery: at-least-once on retry like the dedup ingest — a replayed
-    batch appends its code rows twice. Ids are the caller's dedup
-    contract (duplicate ids = duplicate candidates, still correct top-k
-    by id tie-break); a transactional table format slots in at the
-    writer for exactly-once.
-    """
-    from bloomy_etl_spark.operators.pq import add_to_ivfpq_index
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        add_to_ivfpq_index(batch, index_dir, id_col=id_col,
-                           vec_col=vec_col)
-
-    return (
-        embs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_cms_ingest(
-    items_stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    item_col: str,
-    depth: int = 4,
-    width: int = 256,
-):
-    """Streaming heavy-hitter sketching: fold every micro-batch into a
-    durable Count-Min store and return the started ``StreamingQuery``.
-
-    CMS cells are ADDITIVE, so the streaming contract is trivial to
-    state and test: the store read back with :func:`read_cms_store`
-    equals ``sketches.cms_build`` over the union of all batches,
-    cell-for-cell. Each batch appends its own d·w-bounded cell DELTA
-    tagged with ``batch_id`` (never rewrites history), so an
-    at-least-once replay is detectable and the read side collapses it
-    (duplicate (batch_id, row, bucket) rows are identical by
-    determinism of the sketch — the reader keeps one).
-
-    Scale: per-batch work is one bounded hash-agg (≤ d·w cells out);
-    the store grows by ≤ d·w rows per batch and compacts by rewriting
-    the grouped read — the sketch never exceeds d·w cells merged.
-    """
-    from bloomy_etl_spark.operators.sketches import cms_build
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        delta = cms_build(
-            batch.select(item_col), item_col, depth=depth, width=width
-        )
-        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(sketch_dir)
-
-    return (
-        items_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_cms_store(spark: SparkSession, sketch_dir: str) -> DataFrame:
-    """Collapse the per-batch CMS deltas into one sketch:
-    (row, bucket, cnt). Replayed appends (same batch_id) are identical
-    by construction, so ``max`` per (batch_id, cell) keeps exactly one
-    before the cross-batch sum."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .groupBy("batch_id", "row", "bucket")
-        .agg(F.max("cnt").alias("cnt"))
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def streaming_hll_ingest(
-    items_stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    item_col: str,
-    m: int = 64,
-):
-    """Streaming distinct-count sketching into a durable portable-HLL
-    register store (``sketches.hll_registers``); returns the started
-    ``StreamingQuery``.
-
-    Even simpler than the CMS contract: registers merge by MAX, which is
-    idempotent as well as associative/commutative — an at-least-once
-    replay of a batch is a NO-OP under the reader's bucket-wise max, no
-    batch_id bookkeeping or delta collapsing needed. The store read back
-    with :func:`read_hll_store` equals ``hll_registers`` over the union
-    of all batches bit-for-bit (the register monoid's slice-merge ≡
-    one-shot law, unit-proven batch-side in
-    ``tests/test_r5_operators.py::TestHllRegisters``).
-
-    Scale: per-batch work is one bounded hash-agg (≤ m rows per group
-    out); the store grows by ≤ m·groups rows per batch and the grouped
-    read compacts it — rewrite the store from :func:`read_hll_store`
-    whenever batch count makes the read-side max worth collapsing.
-    """
-    from bloomy_etl_spark.operators.sketches import hll_registers
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        delta = hll_registers(
-            batch.select(*keys, item_col), keys, item_col, m=m
-        )
-        delta.write.mode("append").parquet(sketch_dir)
-
-    return (
-        items_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_hll_store(spark: SparkSession, sketch_dir: str,
-                   keys: list[str]) -> DataFrame:
-    """Collapse the per-batch register deltas into one register table
-    (keys…, bucket, r) by bucket-wise max — idempotent, so replayed or
-    duplicated batch appends change nothing."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .groupBy(*keys, "bucket")
-        .agg(F.max("r").cast("int").alias("r"))
     )
 
 
@@ -533,327 +145,6 @@ def read_dsir_store(spark: SparkSession, score_dir: str,
         .groupBy("batch_id", id_col)
         .agg(F.max("n_grams").alias("n_grams"), F.max("score").alias("score"))
         .select(id_col, "n_grams", "score")
-    )
-
-
-def streaming_dsir_model_ingest(
-    docs_stream: DataFrame,
-    model_dir: str,
-    checkpoint_dir: str,
-    target_col: str = "lang",
-    target_value: str = "en",
-    buckets: int = 64,
-    text_col: str = "text",
-):
-    """Incremental DSIR MODEL maintenance: the model's sufficient
-    statistics (per-bucket gram totals) are ADDITIVE, so every
-    micro-batch appends its own ≤B-row (bk, tq, tp) delta and the
-    reader (:func:`read_dsir_model`) rebuilds the exact weight row —
-    the importance model tracks the growing corpus with per-batch cost
-    of one bounded hash-agg, never a retrain over history (the CMS
-    delta-store pattern applied to a trained model's statistics).
-
-    Deltas are tagged with ``batch_id``; an at-least-once replay
-    appends an identical delta (the sketch of a batch is deterministic)
-    and the reader collapses duplicates per (batch_id, bucket) before
-    the cross-batch sum.
-    """
-    from bloomy_etl_spark.operators.corpus import dsir_gram_buckets
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        delta = dsir_gram_buckets(
-            batch, F.col(target_col) == target_value, buckets, text_col
-        )
-        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(model_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_dsir_model(spark: SparkSession, model_dir: str,
-                    buckets: int = 64, scale: int = 1_000_000) -> DataFrame:
-    """The current DSIR weight row from the streaming delta store:
-    collapse replays per (batch_id, bucket), sum deltas across batches,
-    then build the SAME one-row weight map as batch
-    ``corpus.dsir_weights`` — exact-integer totals make stream ≡ batch
-    equality entry-for-entry, not approximate."""
-    from bloomy_etl_spark.operators.corpus import weights_from_totals
-
-    tot = (
-        spark.read.parquet(model_dir)
-        .groupBy("batch_id", "bk")
-        .agg(F.max("tq").alias("tq"), F.max("tp").alias("tp"))
-        .groupBy("bk")
-        .agg(F.sum("tq").alias("tq"), F.sum("tp").alias("tp"))
-    )
-    return weights_from_totals(tot, buckets, scale)
-
-
-def streaming_novelty_ingest(
-    docs_stream: DataFrame,
-    gram_dir: str,
-    doc_dir: str,
-    checkpoint_dir: str,
-    n: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Incremental first-occurrence novelty
-    (:func:`bloomy_etl_spark.operators.corpus.first_seen_novelty` on a
-    stream): the live "is this crawl still adding content" signal. The
-    operator's sufficient statistics are ASSOCIATIVE — global first
-    occurrence is ``min(id)`` over per-batch local minima — so, like
-    the DSIR model ingest, each micro-batch appends two deterministic
-    bounded artifacts and the reader reconstructs the EXACT batch
-    result in ANY arrival order (no monotone-id requirement):
-
-    - ``gram_dir``  ← the batch's distinct grams with their
-      within-batch min id: ``(g, first_doc, batch_id)``;
-    - ``doc_dir``   ← per-doc distinct-gram counts:
-      ``(id, n_distinct, batch_id)``.
-
-    Ids must be unique across batches (re-crawled duplicates belong in
-    the dedup ingest upstream). An at-least-once replay appends
-    identical rows under the same ``batch_id``;
-    :func:`read_novelty_store` collapses per (batch_id, key) before the
-    cross-batch min — detectable and reversible like every other
-    durable ingest here.
-
-    Scale: per-batch work is one explode + two hash-aggs over the
-    batch's grams; store growth is bounded by the batch gram count.
-    """
-    from bloomy_etl_spark.functions.text import word_ngrams
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        grams = pin(
-            batch.select(
-                F.col(id_col),
-                F.explode(
-                    F.array_distinct(word_ngrams(F.col(text_col), n))
-                ).alias("g"),
-            ),
-            eager=True,
-        )  # one shingling pass feeds both artifacts
-        (
-            grams.groupBy("g").agg(F.min(id_col).alias("first_doc"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(gram_dir)
-        )
-        (
-            grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_distinct"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(doc_dir)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_novelty_store(spark: SparkSession, gram_dir: str, doc_dir: str,
-                       scale: int = 1_000_000,
-                       id_col: str = "doc_id") -> DataFrame:
-    """The corpus-wide novelty profile from the streaming store —
-    row-identical to batch ``first_seen_novelty`` over the union of all
-    ingested batches: collapse replays per (batch_id, key), take the
-    cross-batch ``min(first_doc)`` per gram, count novel grams per
-    first doc, and join the per-doc distinct counts."""
-    first = (
-        spark.read.parquet(gram_dir)
-        .groupBy("batch_id", "g")
-        .agg(F.min("first_doc").alias("first_doc"))
-        .groupBy("g")
-        .agg(F.min("first_doc").alias("first_doc"))
-    )
-    nv = first.groupBy(F.col("first_doc").alias(id_col)).agg(
-        F.count(F.lit(1)).alias("n_novel")
-    )
-    nd = (
-        spark.read.parquet(doc_dir)
-        .groupBy("batch_id", id_col)
-        .agg(F.max("n_distinct").alias("n_distinct"))
-        .groupBy(id_col)
-        .agg(F.max("n_distinct").alias("n_distinct"))
-    )
-    num = F.lit(scale) * F.col("n_novel")
-    return (
-        nd.join(nv, id_col, "left")
-        .na.fill({"n_novel": 0})
-        .select(
-            id_col, "n_distinct", "n_novel",
-            ((num - num % F.col("n_distinct")) / F.col("n_distinct"))
-            .cast("long").alias("novelty_e6"),
-        )
-    )
-
-
-def _pairwise_d2_e6(a: list[float], b: list[float], scale: int) -> int:
-    """Driver-side replay of ``clustering._dist2_e6`` for two center
-    vectors: the same index-order squared-L2 fold, then ``floor(scale·d²)``."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        acc += d * d
-    return int(math.floor(acc * scale))
-
-
-def streaming_kcenter_ingest(
-    embs_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    k: int = 8,
-    scale: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Online k-center maintenance (the doubling algorithm, Charikar
-    et al. 1997) — the streaming half of
-    :func:`bloomy_etl_spark.operators.clustering.kcenter_greedy`'s
-    batch coreset: keep ≤ ``k`` centers covering everything ingested so
-    far, growing the coverage threshold geometrically when the budget
-    overflows.
-
-    Per micro-batch, against the driver-resident O(k·d) center set:
-
-    1. quantized min-distance² of every batch point to the current
-       centers (one corpus map, the q139 convention — all decisions on
-       ``floor(scale·d²)`` int64, so replays are deterministic);
-    2. points beyond the threshold join greedily (farthest-first, ties
-       to the smaller id) — one TakeOrdered(1) scan per admitted
-       center, exactly the batch operator's round shape;
-    3. when a (k+1)-th center would be admitted, the threshold DOUBLES
-       (τ² ×4; seeded at the min pairwise center distance when still
-       0) and the center set is re-thinned to a greedy subset pairwise
-       farther than the new threshold — a driver-side O(k²·d) pass over
-       ≤ k+1 vectors, never over corpus rows.
-
-    Every dropped center sits within the new τ of a kept one, so
-    ingested points stay covered within the telescoping sum ≤ 2·τ_final
-    (the classic 8×OPT guarantee; pinned by the invariant test rather
-    than a batch-equivalence test — online k-center is a different
-    algorithm from greedy k-center, and no arrival order reproduces the
-    batch result exactly).
-
-    Durability/replay: the full (tiny) center snapshot is APPENDED per
-    batch keyed ``batch_id`` — an at-least-once replay recomputes from
-    the PREVIOUS snapshot (reads exclude its own ``batch_id``) and
-    appends identical rows, so :func:`read_kcenter_state`'s
-    latest-snapshot read is replay-stable, like every durable ingest
-    here.
-    """
-    from bloomy_etl_spark.operators.clustering import _dist2_e6
-
-    def _thin(centers: list, tau2: int) -> list:
-        """Greedy subset pairwise > tau2, scanning in admission order
-        (stable: earlier centers win), driver-side over ≤ k+1 rows."""
-        kept: list = []
-        for cid, vec in centers:
-            if all(_pairwise_d2_e6(vec, kv, scale) > tau2
-                   for _, kv in kept):
-                kept.append((cid, vec))
-        return kept
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        state = _read_or_empty(
-            spark,
-            state_dir,
-            spark.createDataFrame(
-                [],
-                f"batch_id long, center_id long, {vec_col} array<double>, "
-                "tau2_e6 long",
-            ),
-        ).filter(F.col("batch_id") != batch_id)
-        last = state.agg(F.max("batch_id")).collect()[0][0]
-        if last is None:
-            centers, tau2 = [], 0
-        else:
-            rows = state.filter(F.col("batch_id") == last).collect()
-            tau2 = int(rows[0]["tau2_e6"])
-            # replay-duplicated snapshots collapse per center_id
-            centers = sorted(
-                {
-                    int(r["center_id"]): [float(x) for x in r[vec_col]]
-                    for r in rows
-                }.items()
-            )
-
-        pts = pin(batch.select(id_col, vec_col), eager=True)
-        while True:
-            if centers:
-                mind = F.array_min(
-                    F.array(*[_dist2_e6(vec_col, c, scale)
-                              for _, c in centers])
-                )
-                cand = pts.filter(
-                    ~F.col(id_col).isin([i for i, _ in centers])
-                ).select(id_col, vec_col, mind.alias("__mind"))
-                far = (
-                    cand.filter(F.col("__mind") > F.lit(tau2))
-                    .orderBy(F.col("__mind").desc(), F.col(id_col).asc())
-                    .limit(1)
-                    .collect()
-                )
-            else:
-                far = (
-                    pts.orderBy(F.col(id_col).asc()).limit(1).collect()
-                )
-            if not far:
-                break
-            row = far[0]
-            centers.append(
-                (int(row[id_col]), [float(x) for x in row[vec_col]])
-            )
-            while len(centers) > k:
-                # one doubling may not separate far-apart centers —
-                # repeat until the thinned set fits the budget
-                if tau2 == 0:
-                    pair_min = min(
-                        _pairwise_d2_e6(a, b, scale)
-                        for i, (_, a) in enumerate(centers)
-                        for _, b in centers[i + 1:]
-                    )
-                    tau2 = max(pair_min, 1)
-                else:
-                    tau2 *= 4
-                centers = _thin(centers, tau2)
-
-        snap = spark.createDataFrame(
-            [(batch_id, cid, vec, tau2) for cid, vec in centers],
-            f"batch_id long, center_id long, {vec_col} array<double>, "
-            "tau2_e6 long",
-        )
-        snap.write.mode("append").parquet(state_dir)
-
-    return (
-        embs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_kcenter_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The latest center snapshot ``(center_id, embedding, tau2_e6)``
-    from the doubling-ingest store — ≤ k rows; earlier snapshots remain
-    for audit (the τ growth curve) and replay stability."""
-    st = spark.read.parquet(state_dir)
-    last = st.agg(F.max("batch_id")).collect()[0][0]
-    # an at-least-once replay appends the IDENTICAL snapshot again under
-    # the same batch_id — collapse per center like the delta stores
-    return (
-        st.filter(F.col("batch_id") == last)
-        .dropDuplicates(["center_id"])
-        .drop("batch_id")
     )
 
 
@@ -1458,181 +749,6 @@ def read_active_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
         .select("day", "user_id")
         .distinct()
     )
-
-
-def streaming_funnel_ingest(
-    events_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    stages: list[str] | None = None,
-    key_col: str = "user_id",
-):
-    """Incremental conversion-funnel state (q140's
-    ``engine_queries.funnel_stages`` on a stream): each key's live
-    (furthest stage, last-advance µs). The funnel accumulator composes
-    exactly across batches — stepping batch B from A's final (stage,
-    t) equals stepping A∥B — so under ordered arrival the streaming
-    state is BIT-IDENTICAL to the batch fold over the union (the EWMA
-    ingest's contract, pinned by the same equivalence test shape).
-
-    Input columns: ``user_id``/``key_col``, ``eus`` (epoch µs),
-    ``event_id``, ``event_type``. Per batch: one key-keyed sorted-array
-    fold seeded from the stored accumulator; append-only per-batch
-    deltas keyed ``batch_id`` (replays recompute from ``< own id`` and
-    append identical rows; :func:`read_funnel_state` collapses per
-    (batch_id, key) then takes each key's latest).
-    """
-    from bloomy_etl_spark.operators.engine_queries import (
-        _FUNNEL_STAGES,
-        funnel_step,
-    )
-
-    stages = list(stages) if stages is not None else list(_FUNNEL_STAGES)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        like_schema = (
-            f"{key_col} long, stage int, t long, batch_id long"
-        )
-        prior = (
-            _read_or_empty(
-                spark, state_dir, spark.createDataFrame([], like_schema)
-            )
-            .filter(F.col("batch_id") != batch_id)
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(key_col).orderBy(
-                        F.col("batch_id").desc()
-                    )
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .select(key_col, F.col("stage").alias("__ps"),
-                    F.col("t").alias("__pt"))
-        )
-        seq = batch.groupBy(key_col).agg(
-            F.array_sort(
-                F.collect_list(F.struct("eus", "event_id", "event_type"))
-            ).alias("__seq")
-        )
-        init = F.struct(
-            F.coalesce(F.col("__ps"), F.lit(0)).alias("s"),
-            F.coalesce(F.col("__pt"), F.lit(-1).cast("long")).alias("t"),
-        )
-        acc = F.aggregate(F.col("__seq"), init, funnel_step(stages))
-        (
-            seq.join(prior, key_col, "left")
-            .select(
-                key_col,
-                acc["s"].alias("stage"),
-                acc["t"].alias("t"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-            .write.mode("append").parquet(state_dir)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_funnel_state(spark: SparkSession, state_dir: str,
-                      key_col: str = "user_id") -> DataFrame:
-    """Each key's latest ``(key, stage, t)`` from the funnel delta
-    store, replay-collapsed per (batch_id, key)."""
-    st = spark.read.parquet(state_dir).dropDuplicates(
-        ["batch_id", key_col]
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col("batch_id").desc())
-    return (
-        st.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(key_col, "stage", "t")
-    )
-
-
-def streaming_mg_ingest(
-    items_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    item_col: str,
-    capacity: int = 256,
-):
-    """Streaming DETERMINISTIC heavy-hitter candidates: fold every
-    micro-batch into a durable Misra-Gries summary store and return
-    the started ``StreamingQuery`` — the exact-enumeration counterpart
-    to :func:`streaming_cms_ingest`'s probabilistic point estimates.
-
-    Per batch: one bounded ``mg_summary`` pass (≤ partitions × capacity
-    rows out, with per-partition exact totals) appended tagged with
-    ``batch_id`` — history is never rewritten, and an at-least-once
-    replay re-appends rows identical by determinism of the summary, so
-    the read side collapses duplicates per (batch_id, part_id).
-
-    Contract (the q146 guarantee, sliced by batch×partition instead of
-    partition): any item with total stream frequency ≥ N/k, k ≤
-    capacity, appears in SOME slice with local frequency > N_s/(cap+1)
-    (averaging), hence survives that slice's summary — the union read
-    back by :func:`read_mg_candidates` is a provable candidate
-    superset, and an exact recount against the corpus store yields
-    exactly the batch answer (asserted stream ≡ batch in
-    tests/test_streaming.py).
-    """
-    from bloomy_etl_spark.operators.sketches import mg_summary
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        delta = mg_summary(
-            batch.select(item_col), item_col, capacity=capacity,
-            with_part_totals=True,
-        )
-        delta.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(store_dir)
-
-    return (
-        items_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_mg_candidates(
-    spark: SparkSession, store_dir: str, item_col: str
-) -> DataFrame:
-    """Collapse the per-batch MG deltas into the merged candidate
-    summary ``(item_col, mg_wt)``. Replayed appends are identical per
-    (batch_id, part_id) by construction, so ``max`` per
-    (batch_id, part_id, item) keeps exactly one before the cross-slice
-    sum; weights remain undercounts of true stream frequency.  The
-    ``mg_wt = 0`` sentinel rows exist only to carry partition totals
-    and are dropped here."""
-    return (
-        spark.read.parquet(store_dir)
-        .filter(F.col("mg_wt") > 0)
-        .groupBy("batch_id", "part_id", item_col)
-        .agg(F.max("mg_wt").alias("mg_wt"))
-        .groupBy(item_col)
-        .agg(F.sum("mg_wt").alias("mg_wt"))
-    )
-
-
-def read_mg_total(spark: SparkSession, store_dir: str) -> int:
-    """Exact total item count of the ingested stream, recovered from
-    the summary store's per-(batch, partition) totals (one bounded
-    aggregate; replays collapse on the slice key)."""
-    row = (
-        spark.read.parquet(store_dir)
-        .select("batch_id", "part_id", "n_part")
-        .distinct()
-        .agg(F.coalesce(F.sum("n_part"), F.lit(0)).alias("n"))
-        .collect()[0]
-    )
-    return int(row["n"])
 
 
 def streaming_cc_ingest(

@@ -289,37 +289,6 @@ TRAIL_STATE_SCHEMA = T.StructType(
 )
 
 
-def trail_step(
-    eus_buf: list, v_buf: list, eus: int, v_e4: int, range_us: int
-) -> tuple[int, int]:
-    """Advance one point of a per-key trailing-range frame; mutate the
-    buffers; return (count, sum) of the frame ending at ``eus``.
-
-    The pure per-point transition (the unit/property-test spec):
-    append, evict everything older than ``eus - range_us`` from the
-    FRONT (arrival is event-time-ordered per key, so the buffer is
-    sorted and eviction is a pointer advance — the same two-pointer
-    pass Spark's RANGE frame runs per partition), then fold. Buffer
-    length is bounded by the per-key event rate × span, never by
-    stream length.
-
-    Frames here are ARRIVAL-ORDER (each point sees only points at or
-    before it); the streaming operators layer SQL's peer-inclusion on
-    top via :func:`_make_trail_frames`, which admits all rows sharing
-    an eus before any of them emits — matching ``RANGE … CURRENT
-    ROW``'s tied-timestamp semantics, plus an O(1) running sum.
-    """
-    eus_buf.append(eus)
-    v_buf.append(v_e4)
-    lo = eus - range_us
-    k = 0
-    while eus_buf[k] < lo:
-        k += 1
-    if k:
-        del eus_buf[:k], v_buf[:k]
-    return len(eus_buf), sum(v_buf)
-
-
 def _make_trail_frames(range_us: int):
     """Build the per-batch frame-advance function shared VERBATIM by
     both stateful APIs — returned as a CLOSURE (not a module-level

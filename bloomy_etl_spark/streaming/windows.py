@@ -1,11 +1,10 @@
 """Watermarked window aggregations and streaming dedup over events.
 
-Reference parity: the same-day merge of granules that arrive separately
-(``/root/reference/core/merger.py:56-93``, SURVEY T2) is a tumbling
-1-day window aggregate; its batch twin is
-``operators/merge.py::merge_temporal``. Watermarks, sliding/session
-windows and ``dropDuplicates`` have no reference counterpart — they are
-engine additions (SURVEY §2.9).
+Watermarks, tumbling/sliding/session windows and ``dropDuplicates``
+have no reference counterpart — they are engine additions (SURVEY
+§2.9). The reference's same-day merge of granules that arrive
+separately (``core/merger.py:56-93``, SURVEY T2) is the
+batch ``operators/merge.py::merge_temporal``.
 
 Scale posture: every function here is a keyed stateful aggregation whose
 state is bounded by (watermark horizon × key cardinality), never by
@@ -50,35 +49,6 @@ def windowed_event_stats(
             "n",
             "mean_value",
             "std_value",
-        )
-    )
-
-
-def daily_value_means(stream: DataFrame, watermark: str = "2 days") -> DataFrame:
-    """Streaming form of the temporal merge (merger.py:56-93 / SURVEY A3):
-    per calendar day, null-skipping mean value and the epoch-mean merged
-    timestamp (merger.py:78-82 semantics).
-
-    The epoch mean runs in decimal space: double partial-sums of epoch-µs
-    (~2^50) are order-sensitive in their last ulps, and streaming partials
-    accumulate in a different order than batch — exact decimal arithmetic
-    makes stream ≡ batch bit-for-bit.
-    """
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("win"))
-        .agg(
-            F.timestamp_micros(
-                F.avg(F.unix_micros("ts").cast("decimal(20,0)")).cast("long")
-            ).alias("merged_ts"),
-            F.avg("value").alias("mean_value"),
-            F.count(F.lit(1)).alias("n_merged"),
-        )
-        .select(
-            F.col("win.start").cast("date").alias("day"),
-            "merged_ts",
-            "mean_value",
-            "n_merged",
         )
     )
 

@@ -4,8 +4,8 @@ The numbers a query planner (or a human sizing a pipeline) needs before
 touching a new table: row count, per-column null fraction, approximate
 distinct count, min/max for orderable types, average length for
 strings. Feeds decisions this engine makes explicitly elsewhere —
-broadcast-side choice (`BROADCAST_TABLES`), bucket counts
-(`sinks/layout.py`), LSH banding parameters (dedup docstrings) — and is
+broadcast-side choice, file layout (`sinks/layout.py`), LSH banding
+parameters (dedup docstrings) — and is
 the same shape `ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS` stores
 into a real catalog.
 

@@ -33,47 +33,30 @@ _SLOW_TESTS = {
     # test_streaming.py — replay/equivalence long poles (sum ~1,174 s)
     "test_streaming.py::TestStatefulDetector::test_stream_matches_batch_on_engineered_series",
     "test_streaming.py::TestStatefulDetector::test_stream_matches_batch_detector",
-    "test_streaming.py::TestSemDeDupIngest::test_dropped_row_still_witnesses",
-    "test_streaming.py::TestSemDeDupIngest::test_stream_equals_batch_semdedup",
-    "test_streaming.py::TestKCenterIngest::test_deterministic_across_reruns",
-    "test_streaming.py::TestKCenterIngest::test_budget_threshold_and_coverage",
-    "test_streaming.py::TestKCenterIngest::test_replayed_snapshot_collapses",
-    "test_streaming.py::TestKCenterIngest::test_no_overflow_keeps_all_distinct_points",
     "test_streaming.py::TestCcIngest::test_arrival_order_is_irrelevant",
     "test_streaming.py::TestCcIngest::test_stream_equals_batch_cc_with_cross_batch_merge",
     "test_streaming.py::TestCcIngest::test_replayed_batch_is_idempotent",
-    "test_streaming.py::TestIvfPqIngest::test_stream_equals_frozen_rebuild",
-    "test_streaming.py::TestDedupIngest::test_drop_dups_first_arrival_wins",
-    "test_streaming.py::TestDedupIngest::test_stream_matches_full_corpus",
     "test_streaming.py::TestDuelIngest::test_streamed_fit_equals_batch_fit",
     "test_streaming.py::TestDuelIngest::test_replayed_delta_collapses",
     "test_streaming.py::TestEwmaIngest::test_replayed_delta_collapses",
-    "test_streaming.py::TestHllIngest::test_stream_equals_batch_registers",
     "test_streaming.py::TestZonemapIngest::test_pruning_is_sound_across_batches",
     "test_streaming.py::TestZonemapIngest::test_compaction_trigger_fires_on_scattered_ranges",
     "test_streaming.py::TestZonemapIngest::test_replayed_delta_collapses",
-    "test_streaming.py::TestMgIngest::test_recounted_candidates_equal_batch_answer",
-    "test_streaming.py::TestCmsIngest::test_stream_equals_batch_sketch",
     "test_streaming.py::TestScd2Ingest::test_run_spanning_batch_boundary_merges",
     "test_streaming.py::TestScd2Ingest::test_stream_equals_batch_bit_identical",
     "test_streaming.py::TestScd2Ingest::test_replayed_delta_collapses",
     "test_streaming.py::TestCusumIngest::test_alert_spanning_a_batch_boundary",
     "test_streaming.py::TestAttributionIngest::test_touch_in_prior_batch_credits_purchase",
     # test_pq_semdedup.py — IVF-PQ index build/search long poles (~212 s)
-    "test_pq_semdedup.py::TestIvfPq::test_add_equals_frozen_rebuild",
     "test_pq_semdedup.py::TestIvfPq::test_residual_recall_at_least_raw",
     "test_pq_semdedup.py::TestIvfPq::test_search_prunes_partitions",
     "test_pq_semdedup.py::TestIvfPq::test_wrong_query_dim_raises",
-    "test_pq_semdedup.py::TestIvfPq::test_add_touches_only_landed_partitions",
     "test_pq_semdedup.py::TestIvfPq::test_build_search_recall_and_pruning",
-    "test_pq_semdedup.py::TestIvfPqRefined::test_add_appends_raw_lists",
     "test_pq_semdedup.py::TestIvfPqRefined::test_missing_raw_tier_fails_loudly",
-    "test_pq_semdedup.py::TestPQ::test_reconstruction_improves_with_ksub",
     "test_pq_semdedup.py::TestPQ::test_adc_top1_is_own_blob",
     # range-join brute-force sweeps (~76 s)
     "test_r5_operators.py::TestBinnedRangeJoin::test_matches_theta_join_any_bin_width",
     "test_r5_operators.py::TestBinnedRangeJoin::test_left_semi_distinct_points",
-    "test_r5_operators.py::TestIntervalOverlapJoin::test_matches_naive_overlap",
     # brute-force property sweeps (~66 s)
     "test_properties.py::test_temperature_quotas_hamilton_invariants",
     "test_properties.py::test_ngram_jaccard_matches_bruteforce",

@@ -1,8 +1,8 @@
 """session.artifact: the one build-once directory store — marker
 re-validation, clean rebuilds, removal of the whole per-process root at
-exit (failed builds included), the stream-replay timeout it backs, and a
-guard against a hand-kept copy of the store reappearing elsewhere in the
-package."""
+exit (failed builds included), the stream-replay timeout and the shipped
+package zip it backs, and a guard against a hand-kept copy of the store
+reappearing elsewhere in the package or the driver entry point."""
 
 from __future__ import annotations
 
@@ -12,8 +12,11 @@ import re
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 import pytest
+
+import __spark_entry__ as entry
 
 from bloomy_etl_spark import session
 from bloomy_etl_spark.operators.engine_queries import _replay_state
@@ -121,6 +124,57 @@ def test_replay_timeout_stops_the_query_and_names_it(root):
     assert not list(root.glob("*/_BUILD_OK"))
 
 
+class _FakeContext:
+    """A SparkContext stand-in that records ``addPyFile`` paths."""
+
+    def __init__(self):
+        self.py_files = []
+
+    def addPyFile(self, path):
+        self.py_files.append(path)
+
+
+class _FakeSession:
+    def __init__(self):
+        self.sparkContext = _FakeContext()
+
+
+def test_shipped_zip_is_an_artifact(root, monkeypatch):
+    monkeypatch.setattr(entry, "_SHIPPED", set())
+    spark = _FakeSession()
+    entry._ship_package(spark)
+    entry._ship_package(spark)  # once per SparkContext
+    (path,) = spark.sparkContext.py_files
+    assert pathlib.Path(path).parent.parent == root
+    with zipfile.ZipFile(path) as z:
+        assert "bloomy_etl_spark/__init__.py" in z.namelist()
+
+
+def test_shipped_zip_is_removed_at_exit(tmp_path):
+    child = textwrap.dedent("""
+        import __spark_entry__ as entry
+
+        class Context:
+            def addPyFile(self, path):
+                print(path)
+
+        class Session:
+            sparkContext = Context()
+
+        entry._ship_package(Session())
+    """)
+    env = dict(os.environ, TMPDIR=str(tmp_path),
+               PYTHONPATH=os.pathsep.join(
+                   [str(REPO), os.environ.get("PYTHONPATH", "")]))
+    out = subprocess.run([sys.executable, "-c", child], env=env, cwd=REPO,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    path = out.stdout.strip()
+    assert path.startswith(str(tmp_path)) and path.endswith(".zip")
+    assert not os.path.exists(path)
+    assert not list(tmp_path.iterdir()), "left behind after exit"
+
+
 # the store's three ingredients; a copy of any of them outside session.py
 # is a hand-kept memo directory coming back
 _STORE_RULE = re.compile(
@@ -148,8 +202,9 @@ def test_guard_flags_a_copy(tmp_path):
 def test_build_once_store_lives_only_in_session():
     home = PKG / "session.py"
     assert "_BUILD_OK" in home.read_text()
-    found = [hit for p in sorted(PKG.rglob("*.py")) if p != home
-             for hit in _copies(p)]
+    scanned = [*sorted(PKG.rglob("*.py")), REPO / "__spark_entry__.py"]
+    found = [hit for p in scanned if p != home for hit in _copies(p)]
     assert not found, (
-        f"build-once directories go through session.artifact: {found}"
+        f"build-once directories and files go through session.artifact: "
+        f"{found}"
     )

@@ -793,87 +793,6 @@ class TestFirstSeenNovelty:
         assert sum(r["n_novel"] for r in rows) == n_grams
 
 
-class TestStripTemplatePrefix:
-    """De-templating transform (corpus.strip_template_prefix) — the
-    q136 profile's downstream cut."""
-
-    def _corpus(self, spark):
-        rows = []
-        # src A: 9/10 docs carry the 3-token banner, one organic opener
-        for i in range(9):
-            rows.append((i, "A", f"terms of service body{i} unique{i} text"))
-        rows.append((9, "A", "organic opener body9 unique9 text"))
-        # src B: no template (every opener distinct)
-        for i in range(10):
-            rows.append((100 + i, "B", f"w{i} x{i} y{i} z{i}"))
-        return spark.createDataFrame(
-            rows, "doc_id long, source string, text string"
-        )
-
-    def test_cuts_template_docs_only(self, spark):
-        out = {
-            r["doc_id"]: (r["prefix_len"], r["cleaned"])
-            for r in C.strip_template_prefix(
-                self._corpus(spark), min_share_e6=800_000
-            ).collect()
-        }
-        for i in range(9):  # banner docs: 3 tokens cut
-            assert out[i] == (3, f"body{i} unique{i} text")
-        # the organic doc in the templated source keeps its words
-        assert out[9] == (0, "organic opener body9 unique9 text")
-        # untemplated source untouched
-        for i in range(10):
-            assert out[100 + i] == (0, f"w{i} x{i} y{i} z{i}")
-
-    def test_gap_ends_the_template_run(self, spark):
-        """Positions hot-cold-hot must cut only the leading hot run."""
-        rows = [(i, "A", f"same diff{i} same tail{i}") for i in range(10)]
-        df = spark.createDataFrame(
-            rows, "doc_id long, source string, text string"
-        )
-        out = C.strip_template_prefix(df, min_share_e6=800_000).collect()
-        for r in out:
-            assert r["prefix_len"] == 1
-            assert r["cleaned"].startswith("diff")
-
-    def test_whole_doc_template_and_bad_args(self, spark):
-        import pytest
-
-        rows = [(i, "A", "a b") for i in range(5)]
-        df = spark.createDataFrame(
-            rows, "doc_id long, source string, text string"
-        )
-        out = C.strip_template_prefix(df, min_share_e6=800_000).collect()
-        for r in out:  # everything is template: cleaned is empty
-            assert r["prefix_len"] == 2 and r["cleaned"] == ""
-        with pytest.raises(ValueError):
-            C.strip_template_prefix(df, min_share_e6=0)
-        with pytest.raises(ValueError):
-            C.strip_template_prefix(df, max_prefix=0)
-
-    def test_suffix_side_cuts_footers(self, spark):
-        rows = []
-        for i in range(9):
-            rows.append((i, "A", f"body{i} unique{i} all rights reserved"))
-        rows.append((9, "A", "body9 unique9 organic ending here"))
-        df = spark.createDataFrame(
-            rows, "doc_id long, source string, text string"
-        )
-        out = {
-            r["doc_id"]: (r["suffix_len"], r["cleaned"])
-            for r in C.strip_template_prefix(
-                df, min_share_e6=800_000, side="suffix"
-            ).collect()
-        }
-        for i in range(9):
-            assert out[i] == (3, f"body{i} unique{i}")
-        assert out[9] == (0, "body9 unique9 organic ending here")
-        import pytest
-
-        with pytest.raises(ValueError):
-            C.strip_template_prefix(df, side="middle")
-
-
 class TestGopherRepetition:
     """Repetition-rule semantics (corpus.gopher_repetition) beyond the
     q137 oracle gate."""

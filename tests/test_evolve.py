@@ -1,103 +1,11 @@
-"""Schema conformance (sources/evolve.py) and the KMV join-cardinality
-estimator (tools/stats.py::estimate_join_cardinality)."""
+"""The KMV join-cardinality estimator
+(tools/stats.py::estimate_join_cardinality)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from bloomy_etl_spark.sources.evolve import (
-    SchemaConformError,
-    conform_schema,
-    conform_union,
-)
 from bloomy_etl_spark.tools.stats import estimate_join_cardinality
-
-TARGET = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
-
-
-class TestConformSchema:
-    def test_exact_match_passthrough(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", 0.5)], "id long, text string, score double"
-        )
-        out = conform_schema(df, TARGET)
-        assert out.schema == TARGET
-        assert out.collect() == df.collect()
-
-    def test_missing_column_nulled_and_typed(self, spark):
-        df = spark.createDataFrame([(1, "a")], "id long, text string")
-        out = conform_schema(df, TARGET)
-        assert out.schema == TARGET
-        assert out.collect()[0]["score"] is None
-
-    def test_missing_column_error_policy(self, spark):
-        df = spark.createDataFrame([(1,)], "id long")
-        with pytest.raises(SchemaConformError) as e:
-            conform_schema(df, TARGET, on_missing="error")
-        # ALL problems reported in one exception
-        assert "text" in str(e.value) and "score" in str(e.value)
-
-    def test_extra_column_policies(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", 0.5, "debug")],
-            "id long, text string, score double, extra string",
-        )
-        assert conform_schema(df, TARGET).columns == ["id", "text", "score"]
-        kept = conform_schema(df, TARGET, on_extra="keep")
-        assert kept.columns == ["id", "text", "score", "extra"]
-        with pytest.raises(SchemaConformError):
-            conform_schema(df, TARGET, on_extra="error")
-
-    def test_widen_allows_lossless_promotions(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", 2)], "id int, text string, score int"
-        )
-        out = conform_schema(df, TARGET)  # int->long, int->double
-        assert out.schema == TARGET
-        assert out.collect() == [(1, "a", 2.0)]
-
-    def test_widen_rejects_lossy_changes(self, spark):
-        df = spark.createDataFrame(
-            [(1.5, "a", 0.5)], "id double, text string, score double"
-        )
-        with pytest.raises(SchemaConformError) as e:
-            conform_schema(df, TARGET)  # double -> long is lossy
-        assert "on_type='cast'" in str(e.value)
-        # explicit opt-in allows it
-        out = conform_schema(df, TARGET, on_type="cast")
-        assert out.collect() == [(1, "a", 0.5)]
-
-    def test_type_error_policy_demands_exact(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", 2)], "id int, text string, score int"
-        )
-        with pytest.raises(SchemaConformError):
-            conform_schema(df, TARGET, on_type="error")
-
-    def test_conform_union_mixed_generations(self, spark):
-        old = spark.createDataFrame([(1, "a")], "id int, text string")
-        new = spark.createDataFrame(
-            [(2, "b", 0.9, "x")],
-            "id long, text string, score double, extra string",
-        )
-        out = conform_union([old, new], TARGET)
-        assert out.schema == TARGET
-        rows = sorted(out.collect())
-        assert rows == [(1, "a", None), (2, "b", 0.9)]
-
-    def test_bad_policies(self, spark):
-        df = spark.createDataFrame([(1,)], "id long")
-        for kw in ({"on_extra": "x"}, {"on_missing": "x"}, {"on_type": "x"}):
-            with pytest.raises(ValueError):
-                conform_schema(df, TARGET, **kw)
 
 
 class TestJoinCardinality:
@@ -136,39 +44,3 @@ class TestJoinCardinality:
         tol = 3 * (2 / k ** 0.5)  # union/inter compose a few estimates
         assert abs(est["ndv_a"] - n) / n < tol
         assert abs(est["est_rows"] - n / 2) / (n / 2) < tol
-
-
-class TestDecimalWidening:
-    """ADVICE r5: int→decimal is lossless only when the decimal's
-    integer digits cover the source range (Spark Cast.canUpCast)."""
-
-    def _conform(self, spark, src_ddl, value, dst_type):
-        import pyspark.sql.types as T
-
-        df = spark.createDataFrame([(value,)], f"x {src_ddl}")
-        target = T.StructType([T.StructField("x", dst_type)])
-        return conform_schema(df, target)
-
-    def test_bigint_to_narrow_decimal_rejected(self, spark):
-        import pyspark.sql.types as T
-
-        with pytest.raises(SchemaConformError):
-            self._conform(spark, "bigint", 99999, T.DecimalType(5, 0))
-        # scale eats precision: 20 total but only 16 integer digits
-        with pytest.raises(SchemaConformError):
-            self._conform(spark, "bigint", 1, T.DecimalType(20, 4))
-
-    def test_bigint_to_wide_decimal_allowed(self, spark):
-        import pyspark.sql.types as T
-
-        big = 9223372036854775807
-        out = self._conform(spark, "bigint", big, T.DecimalType(20, 0))
-        assert int(out.collect()[0][0]) == big
-
-    def test_int_decimal_boundaries(self, spark):
-        import pyspark.sql.types as T
-
-        out = self._conform(spark, "int", 2147483647, T.DecimalType(10, 0))
-        assert int(out.collect()[0][0]) == 2147483647
-        with pytest.raises(SchemaConformError):
-            self._conform(spark, "int", 1, T.DecimalType(9, 0))

@@ -1,5 +1,6 @@
-"""Storage-layout tests: partition pruning and bucketed co-located joins
-asserted on the PHYSICAL PLAN (the 100 TB posture, not just results)."""
+"""Storage-layout tests: partition pruning, clustering, compaction,
+upserts and deletes, asserted on the PHYSICAL PLAN and the files
+written (the 100 TB posture, not just results)."""
 
 from __future__ import annotations
 
@@ -7,15 +8,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from bloomy_etl_spark.plans.explain import plan_string
-from bloomy_etl_spark.sinks.layout import (
-    cocluster_join,
-    read_date_pruned,
-    write_date_partitioned,
-    write_bucketed_table,
-)
+from bloomy_etl_spark.sinks.layout import write_date_partitioned
 from bloomy_etl_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
+
+
+def _date_range(spark, path, start, end):
+    """A date-range read of a ``write_date_partitioned`` table: the
+    bounds bind to the ``p_date`` partition column."""
+    return spark.read.parquet(path).filter(
+        F.col("p_date").between(F.lit(start).cast("date"),
+                                F.lit(end).cast("date")))
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +40,7 @@ class TestDatePartitioning:
         assert got.count() == want.count()
 
     def test_range_filter_becomes_partition_filter(self, spark, part_path):
-        df = read_date_pruned(spark, part_path, start="2024-01-10", end="2024-01-12")
+        df = _date_range(spark, part_path, "2024-01-10", "2024-01-12")
         plan = plan_string(df)
         assert "PartitionFilters" in plan
         # the date bounds must appear in PartitionFilters, and the scan's
@@ -62,65 +66,9 @@ class TestDatePartitioning:
 
         allf = files_read(spark.read.parquet(part_path))
         pruned = files_read(
-            read_date_pruned(spark, part_path, start="2024-01-10", end="2024-01-12")
+            _date_range(spark, part_path, "2024-01-10", "2024-01-12")
         )
         assert 0 < pruned < allf, f"no pruning: {pruned} vs {allf}"
-
-
-@pytest.fixture()
-def no_autobroadcast(spark):
-    """Force non-broadcast joins so the bucketing is what the plan
-    assertions actually exercise (the fixture tables are byte-sized and
-    would otherwise short-circuit to BroadcastHashJoin)."""
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-
-
-class TestBucketedJoin:
-    def test_cocluster_join_has_no_exchange(self, spark, tmp_path_factory,
-                                            no_autobroadcast):
-        base = tmp_path_factory.mktemp("bucketed")
-        ev = load_table(spark, SF_SMOKE, "events")
-        per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        totals = ev.groupBy("user_id").agg(F.round(F.sum("value"), 4).alias("sum_value"))
-        try:
-            write_bucketed_table(per_user, "t_user_counts", str(base / "c"),
-                                 "user_id", n_buckets=4)
-            write_bucketed_table(totals, "t_user_totals", str(base / "t"),
-                                 "user_id", n_buckets=4)
-            joined = cocluster_join(spark, "t_user_counts", "t_user_totals", "user_id")
-            plan = plan_string(joined)
-            assert "Exchange" not in plan, f"bucketed join shuffled:\n{plan}"
-            assert "SortMergeJoin" in plan
-            # and the result is the plain-join result
-            want = per_user.join(totals, "user_id")
-            assert joined.count() == want.count()
-            assert (
-                joined.exceptAll(want).count() == 0
-                and want.exceptAll(joined).count() == 0
-            )
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_user_counts")
-            spark.sql("DROP TABLE IF EXISTS t_user_totals")
-
-    def test_mismatched_buckets_fall_back_to_shuffle(self, spark, tmp_path_factory,
-                                                     no_autobroadcast):
-        """Sanity check on the assertion above: with DIFFERENT bucket
-        counts Spark must re-shuffle at least one side — proving the
-        no-exchange plan really came from the co-bucketing."""
-        base = tmp_path_factory.mktemp("bucketed_mm")
-        ev = load_table(spark, SF_SMOKE, "events")
-        a = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-        try:
-            write_bucketed_table(a, "t_mm_a", str(base / "a"), "user_id", n_buckets=4)
-            write_bucketed_table(a, "t_mm_b", str(base / "b"), "user_id", n_buckets=3)
-            plan = plan_string(cocluster_join(spark, "t_mm_a", "t_mm_b", "user_id"))
-            assert "Exchange" in plan
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_mm_a")
-            spark.sql("DROP TABLE IF EXISTS t_mm_b")
 
 
 class TestZOrder:

@@ -414,66 +414,3 @@ class TestIvfIndexPersistence:
             "neighbor_id",
         ).select("cluster_id").distinct().collect()}
         assert len(probed) < n_all
-
-
-class TestIvfIncrementalAdd:
-    def test_add_equals_rebuild_under_same_quantizer(self, spark, tmp_path):
-        """build(A) + add(B) must search exactly like build(A ∪ B) when
-        both use the SAME frozen centroids — the standard IVF ingest
-        contract (the quantizer only changes on an explicit rebuild)."""
-        from bloomy_etl_spark.operators.similarity import (
-            add_to_ivf_index,
-            build_ivf_index,
-            search_ivf_index,
-        )
-        from bloomy_etl_spark.sources.tables import load_table
-
-        embs = load_table(spark, SF_ORACLE, "embeddings")
-        a = embs.filter(F.col("vec_id") % 2 == 0)
-        b = embs.filter(F.col("vec_id") % 2 == 1)
-        cents = [r["embedding"] for r in
-                 embs.filter(F.col("vec_id") % 200 == 0).collect()]
-        queries = embs.filter(F.col("vec_id") % 97 == 0)
-
-        inc = str(tmp_path / "ivf_inc")
-        build_ivf_index(a, inc, centroids=cents)
-        add_to_ivf_index(b, inc)
-        full = str(tmp_path / "ivf_full")
-        build_ivf_index(embs, full, centroids=cents)
-
-        cols = ["query_id", "neighbor_id", "rank"]
-        got = sorted(map(tuple, search_ivf_index(
-            spark, inc, queries, k=5, nprobe=8).select(*cols).collect()))
-        want = sorted(map(tuple, search_ivf_index(
-            spark, full, queries, k=5, nprobe=8).select(*cols).collect()))
-        assert got == want and len(got) > 0
-
-    def test_add_touches_only_landed_partitions(self, spark, tmp_path):
-        """An add appends files into the clusters its vectors land in and
-        leaves every other partition's files byte-identical."""
-        import glob
-        import os
-
-        from bloomy_etl_spark.operators.similarity import (
-            add_to_ivf_index,
-            build_ivf_index,
-        )
-        from bloomy_etl_spark.sources.tables import load_table
-
-        embs = load_table(spark, SF_ORACLE, "embeddings")
-        idx = str(tmp_path / "ivf_touch")
-        build_ivf_index(embs.filter(F.col("vec_id") % 2 == 0), idx)
-        before = {
-            p: os.path.getmtime(p)
-            for p in glob.glob(f"{idx}/corpus/cluster_id=*/*.parquet")
-        }
-        one = embs.filter(F.col("vec_id") == 1)
-        add_to_ivf_index(one, idx)
-        after = {
-            p: os.path.getmtime(p)
-            for p in glob.glob(f"{idx}/corpus/cluster_id=*/*.parquet")
-        }
-        assert set(before) <= set(after)
-        assert all(after[p] == before[p] for p in before), \
-            "existing files must not be rewritten by an append"
-        assert len(after) == len(before) + 1  # exactly one new file

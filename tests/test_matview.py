@@ -1,6 +1,8 @@
-"""Materialized aggregate views (plans/matview.py): state algebra,
-incremental refresh idempotency, rewrite legality + routing, and
-partition pruning through the rewritten plan."""
+"""Mergeable aggregate states (plans/matview.py): a fine-grain state
+answers coarser queries — plain, HLL and histogram measures, filters on
+state keys, no-key totals, and states built on separate slices merged
+— compared with plain aggregates over the base rows. q87's oracle test
+covers the rewrite end to end."""
 
 from __future__ import annotations
 
@@ -9,14 +11,8 @@ from pyspark.sql import functions as F
 
 from bloomy_etl_spark.plans.matview import (
     AggQuery,
-    answer,
-    answer_direct,
-    answer_from_matview,
-    can_answer,
-    create_matview,
-    matview_meta,
-    matview_state,
-    refresh_matview,
+    answer_from_state,
+    build_state,
 )
 
 
@@ -54,12 +50,24 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_rewrite_equals_direct_and_plain_sql(spark, tmp_path):
+def _type1(values, q):
+    """Exact type-1 quantile: the smallest value whose cumulative share
+    of the non-NULL values reaches ``q`` (the histogram's convention)."""
+    s = sorted(v for v in values if v is not None)
+    return next(v for v in s if sum(x <= v for x in s) >= q * len(s))
+
+
+def _union_state(spark, keys, measures, **kw):
+    """The state of rows 0–199 built as two slices and unioned: merging
+    happens when a query re-aggregates it."""
+    return build_state(_sales(spark, 0, 120), keys, measures, **kw).unionByName(
+        build_state(_sales(spark, 120, 200), keys, measures, **kw))
+
+
+def test_rewrite_equals_direct_and_plain_sql(spark):
     base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region", "day"], ["amount", "qty"], mv)
-    got = answer_from_matview(spark, mv, _Q_FULL)
-    assert _rows(got) == _rows(answer_direct(base, _Q_FULL))
+    got = answer_from_state(
+        build_state(base, ["region", "day"], ["amount", "qty"]), _Q_FULL)
     plain = base.groupBy("region").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("amount").alias("n_amount"),
@@ -75,84 +83,29 @@ def test_rewrite_equals_direct_and_plain_sql(spark, tmp_path):
         assert a[6] == pytest.approx(b[6], abs=1e-3)
 
 
-def test_filters_on_view_keys(spark, tmp_path):
+def test_filters_on_view_keys(spark):
     base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region", "day"], ["amount"], mv)
     q = AggQuery(
         keys=("day",),
         measures={"total": ("sum", "amount"), "n": ("count_rows", None)},
         filters=(("region", "in", ("east", "west")), ("day", "!=", "d0")),
     )
-    assert _rows(answer_from_matview(spark, mv, q)) == _rows(
-        answer_direct(base, q)
+    got = answer_from_state(build_state(base, ["region", "day"], ["amount"]), q)
+    want = (
+        base.filter(F.col("region").isin("east", "west") & (F.col("day") != "d0"))
+        .groupBy("day")
+        .agg(F.round(F.sum("amount"), 4).alias("total"),
+             F.count(F.lit(1)).alias("n"))
     )
+    assert _rows(got) == _rows(want)
 
 
-def test_global_agg_no_keys(spark, tmp_path):
+def test_global_agg_no_keys(spark):
     base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region"], ["amount"], mv)
     q = AggQuery(keys=(), measures={"mean": ("avg", "amount")})
-    got = answer_from_matview(spark, mv, q).collect()
-    want = answer_direct(base, q).collect()
+    got = answer_from_state(build_state(base, ["region"], ["amount"]), q).collect()
+    want = base.agg(F.round(F.avg("amount"), 4).alias("mean")).collect()
     assert len(got) == 1 and got[0]["mean"] == want[0]["mean"]
-
-
-def test_routing_and_legality(spark, tmp_path):
-    base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region", "day"], ["amount"], mv)
-    meta = matview_meta(mv)
-    # answerable: keys subset, filter on view key, stored measure
-    ok = AggQuery(keys=("region",), measures={"t": ("sum", "amount")},
-                  filters=(("day", "=", "d1"),))
-    assert can_answer(meta, ok)
-    _, chosen = answer(spark, ok, base, [mv])
-    assert chosen == mv
-    # three illegal shapes → base fallback
-    for bad in (
-        AggQuery(keys=("id",), measures={"t": ("sum", "amount")}),
-        AggQuery(keys=("region",), measures={"t": ("sum", "qty")}),
-        AggQuery(keys=("region",), measures={"t": ("sum", "amount")},
-                 filters=(("qty", ">", 3.0),)),
-    ):
-        assert not can_answer(meta, bad)
-        res, chosen = answer(spark, bad, base, [mv])
-        assert chosen is None
-        assert _rows(res) == _rows(answer_direct(base, bad))
-    with pytest.raises(ValueError, match="cannot answer"):
-        answer_from_matview(spark, mv, bad)
-
-
-def test_incremental_refresh_and_idempotency(spark, tmp_path):
-    mv = str(tmp_path / "mv")
-    first, second = _sales(spark, 0, 120), _sales(spark, 120, 200)
-    create_matview(first, ["region", "day"], ["amount"], mv)
-    refresh_matview(second, mv, batch_id=1)
-    got = _rows(answer_from_matview(spark, mv, _Q_FULL))
-    assert got == _rows(answer_direct(_sales(spark), _Q_FULL))
-    # at-least-once redelivery of batch 1 must not double anything
-    refresh_matview(second, mv, batch_id=1)
-    assert _rows(answer_from_matview(spark, mv, _Q_FULL)) == got
-    # state row count at view grain stays |groups|, not |groups × batches|
-    assert matview_state(spark, mv).count() == 15  # 3 regions × 5 days
-    with pytest.raises(ValueError, match="batch_id"):
-        refresh_matview(second, mv, batch_id=0)
-
-
-def test_partition_pruning_through_rewrite(spark, tmp_path):
-    base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region", "day"], ["amount"], mv,
-                   partition_by=["region"])
-    q = AggQuery(keys=("day",), measures={"t": ("sum", "amount")},
-                 filters=(("region", "=", "east"),))
-    got = answer_from_matview(spark, mv, q)
-    assert _rows(got) == _rows(answer_direct(base, q))
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    frag = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "region" in frag  # the key filter prunes at the storage layer
 
 
 def test_validate_rejects_bad_specs():
@@ -165,102 +118,38 @@ def test_validate_rejects_bad_specs():
                  filters=(("a", "like", "b"),)).validate()
 
 
-def test_create_rejects_bad_partition_by(spark, tmp_path):
-    with pytest.raises(ValueError, match="subset of keys"):
-        create_matview(_sales(spark), ["region"], ["amount"],
-                       str(tmp_path / "mv"), partition_by=["day"])
-
-
-def test_approx_distinct_reaggregates_through_view(spark, tmp_path):
-    import pyspark.sql.functions as SF
-
+def test_approx_distinct_reaggregates_through_view(spark):
     base = _sales(spark)
-    mv = str(tmp_path / "mv")
-    create_matview(base, ["region", "day"], ["amount"], mv,
-                   approx_distinct_cols=["id"])
+    state = build_state(base, ["region", "day"], ["amount"],
+                        approx_distinct_cols=["id"])
     q = AggQuery(
         keys=("region",),
         measures={"n_ids": ("approx_count_distinct", "id"),
                   "total": ("sum", "amount")},
     )
-    assert can_answer(matview_meta(mv), q)
     got = {r["region"]: r["n_ids"]
-           for r in answer_from_matview(spark, mv, q).collect()}
+           for r in answer_from_state(state, q).collect()}
     true = {r["region"]: r["n"]
             for r in base.groupBy("region")
-            .agg(SF.count_distinct("id").alias("n")).collect()}
+            .agg(F.count_distinct("id").alias("n")).collect()}
     # distinct-of-parts ≠ sum-of-parts: the HLL union must land within
     # sketch error (exact at these cardinalities)
     for reg, n in true.items():
         assert abs(got[reg] - n) <= max(1, int(0.02 * n))
-    # plain states cannot answer approx_count_distinct
-    mv2 = str(tmp_path / "mv2")
-    create_matview(base, ["region"], ["amount"], mv2)
-    assert not can_answer(matview_meta(mv2), q)
 
 
-def test_approx_distinct_survives_incremental_refresh(spark, tmp_path):
-    mv = str(tmp_path / "mv")
-    create_matview(_sales(spark, 0, 120), ["region"], [], mv,
-                   approx_distinct_cols=["id"])
-    refresh_matview(_sales(spark, 120, 200), mv, batch_id=1)
+def test_approx_distinct_survives_incremental_refresh(spark):
+    state = _union_state(spark, ["region"], [], approx_distinct_cols=["id"])
     q = AggQuery(keys=(), measures={"n_ids": ("approx_count_distinct", "id")})
-    got = answer_from_matview(spark, mv, q).first()["n_ids"]
-    assert abs(got - 200) <= 4  # union across batches tracks the truth
+    got = answer_from_state(state, q).first()["n_ids"]
+    assert abs(got - 200) <= 4  # union across slices tracks the truth
 
 
-def test_streaming_matview_equals_direct(spark, tmp_path):
-    """3 micro-batches through streaming_matview_sink finalize to the
-    same answers as a one-shot view over all rows."""
-    import os
-
-    import pandas as pd
-
-    from bloomy_etl_spark.plans.matview import streaming_matview_sink
-
-    rows = [(i, ["east", "west"][i % 2], float(i % 13)) for i in range(150)]
-    src = tmp_path / "in"
-    src.mkdir()
-    t0 = 1_000_000_000
-    for i in range(3):
-        f = src / f"b{i:05d}.parquet"
-        pd.DataFrame(rows[i * 50:(i + 1) * 50],
-                     columns=["id", "region", "amount"]).to_parquet(
-            f, index=False)
-        os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-    mv = str(tmp_path / "mv")
-    schema = "id long, region string, amount double"
-    create_matview(spark.createDataFrame([], schema), ["region"],
-                   ["amount"], mv)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    q = streaming_matview_sink(stream, mv, str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    q.stop()
-    qry = AggQuery(keys=("region",),
-                   measures={"total": ("sum", "amount"),
-                             "n": ("count_rows", None),
-                             "mean": ("avg", "amount")})
-    got = _rows(answer_from_matview(spark, mv, qry))
-    want = _rows(answer_direct(
-        spark.createDataFrame(rows, schema), qry))
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# approx_percentile measures (mergeable histogram state)
-# ---------------------------------------------------------------------------
-def test_percentile_measure_error_bounded_and_mergeable(spark, tmp_path):
-    path = str(tmp_path / "mv_pctl")
+def test_percentile_measure_error_bounded_and_mergeable(spark):
     # amounts in [0, 17); 34 bins of width 0.5
-    create_matview(
-        _sales(spark, 0, 200), ["region", "day"], ["amount"], path,
-        percentile_cols={"amount": (0.0, 17.0, 34)},
-    )
-    refresh_matview(_sales(spark, 200, 400), path, batch_id=1)
+    pcols = {"amount": (0.0, 17.0, 34)}
+    state = _union_state(spark, ["region", "day"], ["amount"],
+                         percentile_cols=pcols)
     q = AggQuery(
         keys=("region",),
         measures={
@@ -269,149 +158,62 @@ def test_percentile_measure_error_bounded_and_mergeable(spark, tmp_path):
             "total": ("sum", "amount"),
         },
     )
-    assert can_answer(matview_meta(path), q)
     got = {r["region"]: r for r in
-           answer_from_matview(spark, path, q).collect()}
-    exact = {r["region"]: r for r in
-             answer_direct(_sales(spark, 0, 400), q).collect()}
-    assert set(got) == set(exact)
+           answer_from_state(state, q, percentile_cols=pcols).collect()}
+    base = _sales(spark).collect()
+    assert set(got) == {r["region"] for r in base}
     for reg in got:
-        # view answer within one bin width of the exact percentile;
-        # the plain measure is exact through the same rewrite
-        assert abs(got[reg]["p50"] - exact[reg]["p50"]) <= 0.5 + 1e-9
-        assert abs(got[reg]["p90"] - exact[reg]["p90"]) <= 0.5 + 1e-9
-        assert got[reg]["total"] == exact[reg]["total"]
+        vals = [r["amount"] for r in base if r["region"] == reg]
+        # within one bin width of the exact percentile; the plain
+        # measure is exact through the same merge
+        assert abs(got[reg]["p50"] - _type1(vals, 0.5)) <= 0.5 + 1e-9
+        assert abs(got[reg]["p90"] - _type1(vals, 0.9)) <= 0.5 + 1e-9
+        assert got[reg]["total"] == round(
+            sum(v for v in vals if v is not None), 4)
 
 
-def test_percentile_legality_and_validation(spark, tmp_path):
-    path = str(tmp_path / "mv_pctl2")
-    create_matview(_sales(spark), ["region"], ["amount"], path)
+def test_percentile_legality_and_validation(spark):
     q = AggQuery(keys=("region",),
                  measures={"p50": ("approx_percentile", "amount", 0.5)})
-    # view built WITHOUT percentile_cols cannot serve the measure —
-    # routing falls through to the exact direct plan
-    assert not can_answer(matview_meta(path), q)
-    res, chosen = answer(spark, q, _sales(spark), [path])
-    assert chosen is None and res.count() == 3
+    # a state built WITHOUT percentile_cols cannot serve the measure
+    state = build_state(_sales(spark), ["region"], ["amount"])
+    with pytest.raises(ValueError, match="percentile_cols"):
+        answer_from_state(state, q)
     with pytest.raises(ValueError, match="q in \\[0,1\\]"):
         AggQuery(keys=(), measures={"p": ("approx_percentile", "amount", 1.5)}
                  ).validate()
-    with pytest.raises(ValueError, match="n_bins"):
-        create_matview(_sales(spark), ["region"], [], str(tmp_path / "x"),
-                       percentile_cols={"amount": (0.0, 1.0, 100000)})
 
 
-def test_percentile_tail_clamps_to_observed_extremes(spark, tmp_path):
+def test_percentile_tail_clamps_to_observed_extremes(spark):
     # histogram range deliberately misses the data: everything lands in
     # the under/overflow tails, estimates clamp to exact min/max
-    path = str(tmp_path / "mv_pctl3")
+    pcols = {"v": (0.0, 100.0, 10)}
     df = spark.createDataFrame(
         [(1, -5.0), (1, -3.0), (1, 103.0), (1, 107.0)], "g long, v double"
     )
-    create_matview(df, ["g"], [], path,
-                   percentile_cols={"v": (0.0, 100.0, 10)})
     q = AggQuery(keys=("g",),
                  measures={"p25": ("approx_percentile", "v", 0.25),
                            "p99": ("approx_percentile", "v", 0.99)})
-    row = answer_from_matview(spark, path, q).collect()[0]
+    state = build_state(df, ["g"], [], percentile_cols=pcols)
+    row = answer_from_state(state, q, percentile_cols=pcols).collect()[0]
     assert row["p25"] == -5.0 and row["p99"] == 107.0
 
 
-def test_streaming_percentile_matview_within_bin_width(spark, tmp_path):
-    """Live percentile views for free: percentile_cols + the streaming
-    sink compose — micro-batch histogram states merge across epochs and
-    the served p50 stays within one bin width of the exact percentile
-    over everything ingested."""
-    import os
-
-    import pandas as pd
-
-    from bloomy_etl_spark.plans.matview import streaming_matview_sink
-
-    rows = [(i, ["east", "west"][i % 2], float(i % 101)) for i in range(300)]
-    src = tmp_path / "in_p"
-    src.mkdir()
-    t0 = 1_000_000_000
-    for i in range(3):
-        f = src / f"b{i:05d}.parquet"
-        pd.DataFrame(rows[i * 100:(i + 1) * 100],
-                     columns=["id", "region", "amount"]).to_parquet(
-            f, index=False)
-        os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-    mv = str(tmp_path / "mv_p")
-    schema = "id long, region string, amount double"
-    create_matview(spark.createDataFrame([], schema), ["region"],
-                   ["amount"], mv,
-                   percentile_cols={"amount": (0.0, 101.0, 101)})
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    q = streaming_matview_sink(stream, mv, str(tmp_path / "ckpt_p"))
-    q.processAllAvailable()
-    q.stop()
-    qry = AggQuery(keys=("region",),
-                   measures={"p50": ("approx_percentile", "amount", 0.5),
-                             "n": ("count_rows", None)})
-    got = {r["region"]: r for r in
-           answer_from_matview(spark, mv, qry).collect()}
-    exact = {r["region"]: r for r in
-             answer_direct(spark.createDataFrame(rows, schema),
-                           qry).collect()}
-    assert set(got) == {"east", "west"}
-    for reg in got:
-        assert got[reg]["n"] == exact[reg]["n"]
-        assert abs(got[reg]["p50"] - exact[reg]["p50"]) <= 1.0 + 1e-9
-
-
-def test_percentile_bound_holds_on_gappy_data(spark, tmp_path):
+def test_percentile_bound_holds_on_gappy_data(spark):
     """Regression: the ≤ one-bin-width contract must hold under the
     estimator's own (type-1) rank convention even when the data is
     GAPPY — values {0.0, 0.1, 16.8, 16.9} with bin width 0.5 put the
-    type-1 p50 at 0.1; an order-statistic-interpolating oracle would
-    sit at 8.45 and no bin-width bound could hold against it."""
+    type-1 p50 at 0.1 and p75 at 16.8; an order-statistic-interpolating
+    reference would sit at 8.45 and no bin-width bound could hold
+    against it."""
+    pcols = {"v": (0.0, 17.0, 34)}
     df = spark.createDataFrame(
         [(1, 0.0), (1, 0.1), (1, 16.8), (1, 16.9)], "g long, v double"
     )
-    path = str(tmp_path / "mv_gappy")
-    create_matview(df, ["g"], [], path,
-                   percentile_cols={"v": (0.0, 17.0, 34)})
     q = AggQuery(keys=("g",),
                  measures={"p50": ("approx_percentile", "v", 0.5),
                            "p75": ("approx_percentile", "v", 0.75)})
-    got = answer_from_matview(spark, path, q).collect()[0]
-    exact = answer_direct(df, q).collect()[0]
-    assert exact["p50"] == 0.1 and exact["p75"] == 16.8  # type-1 truth
-    assert abs(got["p50"] - exact["p50"]) <= 0.5 + 1e-9
-    assert abs(got["p75"] - exact["p75"]) <= 0.5 + 1e-9
-
-
-def test_compact_folds_batches_and_preserves_answers(spark, tmp_path):
-    from bloomy_etl_spark.plans.matview import compact_matview
-
-    path = str(tmp_path / "mv_compact")
-    create_matview(_sales(spark, 0, 100), ["region"], ["amount"], path,
-                   approx_distinct_cols=["day"],
-                   percentile_cols={"amount": (0.0, 17.0, 34)})
-    refresh_matview(_sales(spark, 100, 200), path, batch_id=1)
-    refresh_matview(_sales(spark, 200, 300), path, batch_id=2)
-    q = AggQuery(keys=("region",),
-                 measures={"total": ("sum", "amount"),
-                           "days": ("approx_count_distinct", "day"),
-                           "p50": ("approx_percentile", "amount", 0.5)})
-    before = _rows(answer_from_matview(spark, path, q))
-    folded = compact_matview(spark, path)
-    assert folded == 3
-    import glob
-
-    assert len(glob.glob(path + "/batch_id=*")) == 1
-    assert _rows(answer_from_matview(spark, path, q)) == before
-    # the lifecycle continues: a post-compaction refresh still folds in
-    refresh_matview(_sales(spark, 300, 400), path, batch_id=3)
-    after = _rows(answer_from_matview(spark, path, q))
-    want = _rows(answer_direct(
-        _sales(spark, 0, 400),
-        AggQuery(keys=("region",),
-                 measures={"total": ("sum", "amount")})))
-    assert [(r[0], r[1]) for r in after] == want
+    state = build_state(df, ["g"], [], percentile_cols=pcols)
+    got = answer_from_state(state, q, percentile_cols=pcols).collect()[0]
+    assert abs(got["p50"] - 0.1) <= 0.5 + 1e-9
+    assert abs(got["p75"] - 16.8) <= 0.5 + 1e-9

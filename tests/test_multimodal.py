@@ -4,13 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bloomy_etl_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    decode_stats,
-    extract_features,
-    resize_meta,
-    sample_frames,
-)
+from bloomy_etl_spark.operators.multimodal import MEDIA_SCHEMA, decode_stats
 
 
 @pytest.fixture(scope="module")
@@ -85,28 +79,6 @@ def test_decode_auto_real_codec_and_corrupt_fallback(spark):
     assert auto[10]["byte_mean"] != pytest.approx(stub[10]["byte_mean"])
     # corrupt payload: stub fallback, bit-identical to codec="stub"
     assert tuple(auto[11]) == tuple(stub[11])
-
-
-def test_extract_features_shape(spark, media):
-    feats = {r["media_id"]: r["features"] for r in extract_features(media).collect()}
-    assert all(len(v) == 16 for v in feats.values())
-    assert all(0.0 <= x <= 1.0 for v in feats.values() for x in v)
-    assert feats[5] == [0.0] * 16  # empty payload
-
-
-def test_sample_frames_stride(spark, media):
-    frames = sample_frames(media, every_k=4).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert sorted(by_id[4]) == [0, 4, 8, 12, 16]
-    assert 5 not in by_id or by_id[5] == [0]  # n_frames=0 edge
-
-
-def test_resize_meta(spark, media):
-    out = {r["media_id"]: (r["width"], r["height"]) for r in resize_meta(media).collect()}
-    assert out[1] == (32, 24)
-    assert out[2] == (16, 16)
 
 
 def test_lsh_ann_recall_vs_bruteforce(spark):

@@ -558,3 +558,22 @@ def test_q126_hamming_reads_pinned_packed(spark):
     p = plan_string(ANN_QUERIES["q126_ann_recall"](spark, SF_SMOKE))
     assert p.count("Scan parquet  (") == 2, p
     assert "ExistingRDD" in p, p
+
+
+def test_pin_publishes_upstream_observations(spark):
+    """session.pin publishes every Observation upstream of it: an eager
+    pin with the computed metrics, a lazy pin at once with NULLs that
+    filling the checkpoint does not replace."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from bloomy_etl_spark.session import pin
+
+    eager = Observation("eager_pin")
+    pin(spark.range(100).observe(eager, F.sum("id").alias("s")))
+    assert eager.get["s"] == 4950
+    lazy = Observation("lazy_pin")
+    pinned = pin(spark.range(100).observe(lazy, F.sum("id").alias("s")),
+                 eager=False)
+    assert lazy.get["s"] is None
+    assert pinned.count() == 100 and lazy.get["s"] is None

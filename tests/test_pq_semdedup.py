@@ -16,7 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bloomy_etl_spark.operators.pq import (  # noqa: E402
     pq_encode,
     pq_search,
-    reconstruction_mse,
     train_pq,
 )
 from bloomy_etl_spark.operators.semdedup import (  # noqa: E402
@@ -91,12 +90,6 @@ class TestPQ:
         codes = pq_encode(df, books)
         hits = pq_search(codes, books, [float(x) for x in mat[3]], k=5)
         assert all(r["vec_id"] < 15 for r in hits.collect())
-
-    def test_reconstruction_improves_with_ksub(self, spark, clustered):
-        df, _ = clustered
-        mse2 = reconstruction_mse(df, train_pq(df, m=4, ksub=2, iters=2))
-        mse8 = reconstruction_mse(df, train_pq(df, m=4, ksub=8, iters=2))
-        assert mse8 < mse2  # more centroids -> strictly better fit here
 
     def test_dim_not_divisible_raises(self, spark):
         df = _vec_df(spark, np.ones((4, 6)))
@@ -341,82 +334,6 @@ class TestIvfPq:
         ).collect()))
         assert before == after
 
-    @pytest.mark.parametrize("residual", [False, True])
-    def test_add_equals_frozen_rebuild(self, spark, clustered, tmp_path,
-                                       residual):
-        """Incremental add ≡ from-scratch encode of old∪new under the
-        SAME frozen quantizer and codebooks: split the corpus so the
-        strided centroid pick is identical either way (all strided ids
-        in the base half), build on the base, add the rest, and compare
-        against a rebuild of the union with the base-trained codebooks
-        passed through."""
-        from bloomy_etl_spark.operators.pq import (
-            add_to_ivfpq_index,
-            build_ivfpq_index,
-            search_ivfpq_index,
-        )
-
-        df, _ = clustered
-        base = df.filter("vec_id < 50")
-        extra = df.filter("vec_id >= 50")
-        # stride 10 / max 5 -> centroids = ids 0,10,20,30,40, all in base
-        kw = dict(m=4, ksub=4, centroid_stride=10, max_centroids=5,
-                  residual=residual)
-        a_dir, b_dir = str(tmp_path / "a"), str(tmp_path / "b")
-        books = build_ivfpq_index(base, a_dir, **kw)
-        add_to_ivfpq_index(extra, a_dir)
-        build_ivfpq_index(df, b_dir, codebooks=books, **kw)
-        queries = df.filter("vec_id in (3, 55)")
-        got = sorted(map(tuple, search_ivfpq_index(
-            spark, a_dir, queries, k=5, nprobe=5).collect()))
-        want = sorted(map(tuple, search_ivfpq_index(
-            spark, b_dir, queries, k=5, nprobe=5).collect()))
-        assert got == want
-        # the added vectors actually landed in the index (their blob's
-        # PQ codes all tie, so lower-id base members rightly win the
-        # top-5 ranks — presence is checked at the storage layer)
-        stored = {
-            r["neighbor_id"]
-            for r in spark.read.parquet(f"{a_dir}/corpus").collect()
-        }
-        assert stored == set(range(60)), sorted(stored ^ set(range(60)))
-
-    def test_add_touches_only_landed_partitions(self, spark, clustered,
-                                                tmp_path):
-        """An add appends into the clusters its vectors land in and
-        leaves every other partition's files byte-identical."""
-        import os
-
-        from bloomy_etl_spark.operators.pq import (
-            add_to_ivfpq_index,
-            build_ivfpq_index,
-        )
-
-        df, _ = clustered
-        idx = str(tmp_path / "inc")
-        build_ivfpq_index(df.filter("vec_id < 50"), idx, m=4, ksub=4,
-                          centroid_stride=10, max_centroids=5)
-
-        def snapshot():
-            out = {}
-            corpus = os.path.join(idx, "corpus")
-            for root, _, files in os.walk(corpus):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        p = os.path.join(root, f)
-                        out[p] = os.path.getsize(p)
-            return out
-
-        before = snapshot()
-        add_to_ivfpq_index(df.filter("vec_id >= 50"), idx)
-        after = snapshot()
-        landed = {os.path.dirname(p) for p in after if p not in before}
-        assert landed, "add wrote nothing"
-        untouched = [p for p in before if os.path.dirname(p) not in landed]
-        assert untouched, "expected at least one untouched partition"
-        for p in untouched:
-            assert after.get(p) == before[p], f"{p} changed"
-
     def test_wrong_query_dim_raises(self, spark, clustered, tmp_path):
         from bloomy_etl_spark.operators.pq import (
             build_ivfpq_index,
@@ -585,24 +502,3 @@ class TestIvfPqRefined:
             f"refined search read {scanned} files vs {on_disk} in the "
             "code+raw tiers alone — no pruning evidence"
         )
-
-    def test_add_appends_raw_lists(self, spark, clustered, tmp_path):
-        """Incremental adds must reach the raw tier too: an added vector
-        is refined-searchable and returns itself at exact rank 1."""
-        from bloomy_etl_spark.operators.pq import (
-            add_to_ivfpq_index,
-            build_ivfpq_index,
-            search_ivfpq_refined,
-        )
-
-        df, _ = clustered
-        idx = str(tmp_path / "addraw")
-        base, extra = df.filter("vec_id % 3 != 2"), df.filter("vec_id % 3 = 2")
-        build_ivfpq_index(base, idx, m=4, ksub=4, centroid_stride=10,
-                          max_centroids=6, keep_raw=True)
-        add_to_ivfpq_index(extra, idx)
-        hit = search_ivfpq_refined(
-            spark, idx, df.filter("vec_id = 5"), k=1, nprobe=6, shortlist=8,
-        ).collect()
-        assert len(hit) == 1
-        assert hit[0]["neighbor_id"] == 5 and hit[0]["exact_dist2"] == 0.0

@@ -443,7 +443,9 @@ class TestCountMinSketch:
         assert sketch.count() <= 4 * 8
 
     def test_disjoint_slice_merge_equals_full_build(self, spark):
-        from bloomy_etl_spark.operators.sketches import cms_build, cms_merge
+        """Sketches of disjoint slices add cell-wise to the sketch of
+        the whole corpus: the merge an incremental caller performs."""
+        from bloomy_etl_spark.operators.sketches import cms_build
         from bloomy_etl_spark.sources.tables import load_table
         from bloomy_etl_spark.functions.text import tokens
 
@@ -452,7 +454,8 @@ class TestCountMinSketch:
         full = cms_build(words, "w", width=64)
         a = cms_build(words.filter(F.col("doc_id") % 2 == 0), "w", width=64)
         b = cms_build(words.filter(F.col("doc_id") % 2 == 1), "w", width=64)
-        merged = cms_merge(a, b)
+        merged = a.unionByName(b).groupBy("row", "bucket").agg(
+            F.sum("cnt").alias("cnt"))
         assert sorted(map(tuple, merged.collect())) == sorted(
             map(tuple, full.collect())
         )

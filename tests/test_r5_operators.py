@@ -19,16 +19,7 @@ from bloomy_etl_spark.operators.incremental import (
     merge_states,
     partial_states,
 )
-from bloomy_etl_spark.operators.joins import (
-    binned_range_join,
-    interval_overlap_join,
-    salted_join,
-)
-from bloomy_etl_spark.operators.sketches import (
-    hll_build,
-    hll_estimate,
-    hll_merge,
-)
+from bloomy_etl_spark.operators.joins import binned_range_join, salted_join
 
 from tests.conftest import SF_ORACLE
 from tests.oracle import compare, register_duck_views
@@ -131,29 +122,6 @@ class TestBinnedRangeJoin:
         clash = intervals.withColumnRenamed("iid", "pid")
         with pytest.raises(ValueError, match="share column names"):
             binned_range_join(points, clash, "v", "lo", "hi", 8)
-
-
-class TestIntervalOverlapJoin:
-    def test_matches_naive_overlap(self, spark):
-        import random
-
-        rng = random.Random(11)
-        mk = lambda n, tag: [  # noqa: E731
-            (tag * 1000 + i, lo, lo + rng.randrange(0, 50))
-            for i, lo in ((i, rng.randrange(0, 400)) for i in range(n))
-        ]
-        left = spark.createDataFrame(mk(80, 1), "lid long, a long, b long")
-        right = spark.createDataFrame(mk(70, 2), "rid long, c long, d long")
-        naive = {
-            (r["lid"], r["rid"])
-            for r in left.crossJoin(right)
-            .filter((F.col("a") <= F.col("d")) & (F.col("c") <= F.col("b")))
-            .collect()
-        }
-        rows = interval_overlap_join(left, right, "a", "b", "c", "d", 16).collect()
-        got = [(r["lid"], r["rid"]) for r in rows]
-        assert set(got) == naive
-        assert len(got) == len(naive), "overlapping pair emitted more than once"
 
 
 # ---------------------------------------------------------------------------
@@ -537,68 +505,6 @@ class TestIncremental:
             merge_states()
 
 
-# ---------------------------------------------------------------------------
-# HLL sketch store
-# ---------------------------------------------------------------------------
-class TestHll:
-    @pytest.fixture(scope="class")
-    def items(self, spark):
-        return spark.range(0, 20000).select(
-            (F.col("id") % 3).cast("string").alias("g"),
-            # ~5k distinct values per group, with collisions
-            F.concat(F.lit("u"), (F.col("id") * 7919 % 5000).cast("string")).alias("u"),
-        )
-
-    def test_estimate_within_hll_error(self, spark, items):
-        est = {
-            r["g"]: r["n_distinct"]
-            for r in hll_estimate(hll_build(items, ["g"], "u")).collect()
-        }
-        exact = {
-            r["g"]: r["n"]
-            for r in items.groupBy("g")
-            .agg(F.count_distinct("u").alias("n"))
-            .collect()
-        }
-        for g, n in exact.items():
-            assert abs(est[g] - n) <= 0.05 * n, (g, est[g], n)
-
-    def test_slice_merge_tracks_oneshot(self, spark, items):
-        """Union of disjoint-slice sketches estimates the same set as the
-        one-shot build. Not bit-identical (DataSketches unions promote
-        the internal representation, measured ~0.8% apart here), so the
-        invariant is: within 2% of one-shot AND within 5% of exact."""
-        a = items.filter(F.xxhash64("u") % 2 == 0)
-        b = items.filter(F.xxhash64("u") % 2 != 0)
-        merged = {
-            r["g"]: r["n_distinct"]
-            for r in hll_estimate(
-                hll_merge(hll_build(a, ["g"], "u"), hll_build(b, ["g"], "u"))
-            ).collect()
-        }
-        oneshot = {
-            r["g"]: r["n_distinct"]
-            for r in hll_estimate(hll_build(items, ["g"], "u")).collect()
-        }
-        exact = {
-            r["g"]: r["n"]
-            for r in items.groupBy("g")
-            .agg(F.count_distinct("u").alias("n"))
-            .collect()
-        }
-        for g in exact:
-            assert abs(merged[g] - oneshot[g]) <= 0.02 * oneshot[g]
-            assert abs(merged[g] - exact[g]) <= 0.05 * exact[g]
-
-    def test_global_sketch_no_keys(self, spark, items):
-        (row,) = hll_estimate(hll_build(items, [], "u")).collect()
-        assert abs(row["n_distinct"] - 5000) <= 250
-
-    def test_bad_args(self):
-        with pytest.raises(ValueError):
-            hll_merge()
-
-
 class TestHllRegisters:
     """Portable register-level HLL (the driver-gateable tier, q119)."""
 
@@ -805,7 +711,7 @@ class TestKmv:
     def test_merge_equals_build_on_union(self, spark):
         """k-min of a union == k-min of the merged per-slice k-mins —
         exactly, not approximately (same hash set)."""
-        from bloomy_etl_spark.operators.sketches import kmv_build, kmv_merge
+        from bloomy_etl_spark.operators.sketches import kmv_build, kmv_merge_col
 
         k = 64
         full = spark.range(0, 2000).select(
@@ -815,11 +721,11 @@ class TestKmv:
         b = full.filter(F.col("item") >= 800)
         merged = {
             r["g"]: r["kmv"]
-            for r in kmv_merge(
-                kmv_build(a, ["g"], "item", k=k),
-                kmv_build(b, ["g"], "item", k=k),
-                k=k,
-            ).collect()
+            for r in kmv_build(a, ["g"], "item", k=k).alias("a")
+            .join(kmv_build(b, ["g"], "item", k=k).alias("b"), "g")
+            .select("g", kmv_merge_col(F.col("a.kmv"), F.col("b.kmv"), k)
+                    .alias("kmv"))
+            .collect()
         }
         oneshot = {
             r["g"]: r["kmv"] for r in kmv_build(full, ["g"], "item", k=k).collect()

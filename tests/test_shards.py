@@ -14,7 +14,6 @@ from bloomy_etl_spark.sources.shards import (
     group_samples,
     read_jsonl_corpus,
     read_webdataset,
-    to_media_table,
 )
 
 
@@ -77,18 +76,6 @@ class TestWebdataset:
         assert got["0001"]["n_members"] == 3
         assert bytes(got["0001"]["parts"]["txt"]) == b"a cat photo"
         assert set(got["0002"]["parts"].keys()) == {"jpg", "txt"}
-
-    def test_to_media_table_feeds_multimodal(self, spark, shard_dir):
-        from bloomy_etl_spark.operators.multimodal import decode_stats
-
-        s = group_samples(read_webdataset(spark, shard_dir + "/*.tar"))
-        media = to_media_table(s, media_ext=("jpg",))
-        rows = media.collect()
-        assert {r["kind"] for r in rows} == {"image"}
-        assert len(rows) == 2
-        # the opaque payloads run through the real decode plumbing
-        out = decode_stats(media.select("media_id", "kind", "payload")).collect()
-        assert len(out) == 2 and all(r["n_bytes"] > 0 for r in out)
 
 
 class TestCorruptShards:

@@ -27,7 +27,6 @@ from bloomy_etl_spark.streaming import (
     windowed_event_stats,
 )
 from bloomy_etl_spark.streaming.stateful import SeriesState, flush, step
-from bloomy_etl_spark.streaming.windows import daily_value_means
 
 from conftest import SF_SMOKE
 
@@ -89,28 +88,6 @@ class TestWindowedAggs:
             )
         )
         cols = ["win_start", "win_end", "event_type", "n"]
-        pd.testing.assert_frame_equal(_sorted_pdf(got, cols), _sorted_pdf(want, cols))
-
-    def test_daily_merge_matches_batch_epoch_mean(self, spark, replay, batch_events):
-        stream = read_events_stream(spark, replay, max_files_per_trigger=3)
-        got = run_to_memory(daily_value_means(stream), "daily_means", spark)
-        want = (
-            batch_events.groupBy(F.window("ts", "1 day").alias("win"))
-            .agg(
-                F.timestamp_micros(
-                    F.avg(F.unix_micros("ts").cast("decimal(20,0)")).cast("long")
-                ).alias("merged_ts"),
-                F.avg("value").alias("mean_value"),
-                F.count(F.lit(1)).alias("n_merged"),
-            )
-            .select(
-                F.col("win.start").cast("date").alias("day"),
-                "merged_ts",
-                "mean_value",
-                "n_merged",
-            )
-        )
-        cols = ["day", "merged_ts", "n_merged"]
         pd.testing.assert_frame_equal(_sorted_pdf(got, cols), _sorted_pdf(want, cols))
 
     def test_session_windows_cover_all_events(self, spark, replay, batch_events):
@@ -374,758 +351,6 @@ class TestBatchStreamSessionEquivalence:
         pd.testing.assert_frame_equal(_sorted_pdf(got, cols), _sorted_pdf(want, cols))
 
 
-class TestDedupIngest:
-    """Streaming corpus ingestion with incremental near-dup detection
-    (streaming/ingest.py): the pairs discovered across replayed
-    micro-batches must equal the full-corpus batch run, and drop_dups
-    must admit first arrivals only."""
-
-    def test_stream_matches_full_corpus(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.dedup import minhash_near_dups
-        from bloomy_etl_spark.sources.tables import load_table
-        from bloomy_etl_spark.streaming.ingest import (
-            read_docs_stream,
-            replay_docs_dir,
-            streaming_dedup_ingest,
-        )
-        from tests.conftest import SF_ORACLE
-
-        replay = replay_docs_dir(spark, SF_ORACLE, str(tmp_path / "replay"), n_files=4)
-        q = streaming_dedup_ingest(
-            read_docs_stream(spark, replay),
-            corpus_dir=str(tmp_path / "corpus"),
-            sig_dir=str(tmp_path / "sigs"),
-            pairs_dir=str(tmp_path / "pairs"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-
-        got = {
-            (r["i"], r["j"], round(r["jaccard"], 6))
-            for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-        }
-        docs = load_table(spark, SF_ORACLE, "documents")
-        want = {
-            (r["i"], r["j"], round(r["jaccard"], 6))
-            for r in minhash_near_dups(docs).collect()
-        }
-        assert got == want
-        # every doc was admitted (no drops) and signed
-        assert spark.read.parquet(str(tmp_path / "corpus")).count() == docs.count()
-        assert spark.read.parquet(str(tmp_path / "sigs")).count() == docs.count()
-
-    def test_drop_dups_first_arrival_wins(self, spark, tmp_path):
-        from bloomy_etl_spark.streaming.ingest import (
-            read_docs_stream,
-            streaming_dedup_ingest,
-        )
-
-        base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " \
-               "lam mu nu xi omicron pi rho sigma tau upsilon"
-        variant = base.rsplit(" ", 1)[0] + " OMEGA"      # near-dup of base
-        unique = "one two three four five six seven eight nine ten " \
-                 "eleven twelve thirteen fourteen fifteen sixteen " \
-                 "seventeen eighteen nineteen twenty"
-        batches = [
-            [(1, base)],                 # batch 0: first arrival
-            [(2, variant), (3, unique)], # batch 1: 2 matches corpus, 3 unique
-            [(4, variant)],              # batch 2: matches corpus doc 1
-        ]
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, rows in enumerate(batches):
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
-            ).write.parquet(str(replay / f"b{bi}"))
-        # one dir per batch keeps arrival order deterministic
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        q = streaming_dedup_ingest(
-            stream,
-            corpus_dir=str(tmp_path / "corpus"),
-            sig_dir=str(tmp_path / "sigs"),
-            pairs_dir=str(tmp_path / "pairs"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            drop_dups=True,
-            threshold=0.7,
-        )
-        q.awaitTermination(120)
-
-        kept = sorted(
-            r["doc_id"] for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
-        )
-        assert kept == [1, 3], kept
-        sigs = sorted(
-            r["doc_id"] for r in spark.read.parquet(str(tmp_path / "sigs")).collect()
-        )
-        assert sigs == [1, 3]
-        pairs = {
-            (r["i"], r["j"])
-            for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-        }
-        assert (1, 2) in pairs and (1, 4) in pairs
-
-
-class TestStreamingDomainQuota:
-    """streaming/quota.py: first-arrival-wins per-domain caps with
-    constant per-key state."""
-
-    def test_matches_sequential_reference(self, spark, tmp_path):
-        import os
-
-        from bloomy_etl_spark.streaming.quota import streaming_domain_quota
-
-        rng = np.random.default_rng(11)
-        rows = [(int(i), f"d{int(rng.integers(0, 4))}") for i in range(60)]
-        src = tmp_path / "docs"
-        src.mkdir()
-        t0, n_slices = 1_000_000_000, 3
-        bounds = np.linspace(0, len(rows), n_slices + 1, dtype=int)
-        batches = []
-        for i in range(n_slices):
-            sl = rows[bounds[i]:bounds[i + 1]]
-            batches.append(sl)
-            f = src / f"b{i:05d}.parquet"
-            pd.DataFrame(sl, columns=["doc_id", "source"]).to_parquet(
-                f, index=False
-            )
-            os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-        stream = (
-            spark.readStream.schema("doc_id long, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        out = streaming_domain_quota(stream, cap=5)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("quota_admit")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {
-            r["doc_id"]: (r["admitted"], r["admit_rank"])
-            for r in spark.table("quota_admit").collect()
-        }
-
-        # sequential reference: batch order, ascending id within a batch
-        counts: dict[str, int] = {}
-        want = {}
-        for sl in batches:
-            for doc_id, dom in sorted(sl):
-                counts[dom] = counts.get(dom, 0) + 1
-                want[doc_id] = (counts[dom] <= 5, counts[dom])
-        assert got == want
-        # every domain admitted exactly min(cap, arrivals)
-        admitted = [k for k, (a, _) in got.items() if a]
-        per_dom: dict[str, int] = {}
-        for doc_id in admitted:
-            dom = dict(rows)[doc_id]
-            per_dom[dom] = per_dom.get(dom, 0) + 1
-        for dom, n in per_dom.items():
-            total = sum(1 for _, d in rows if d == dom)
-            assert n == min(5, total)
-
-    def test_bad_cap(self, spark):
-        from bloomy_etl_spark.streaming.quota import streaming_domain_quota
-
-        with pytest.raises(ValueError):
-            streaming_domain_quota(
-                spark.readStream.format("rate").load(), cap=0
-            )
-
-    def test_admission_order_spans_arrow_chunks(self):
-        """applyInPandasWithState delivers a big group slice as MULTIPLE
-        Arrow chunks; 'ascending id' admission must hold across the whole
-        slice, not per chunk (ADVICE r4). Drive the group function
-        directly with a chunked iterator where chunk-local sorting would
-        admit the wrong ids."""
-        from bloomy_etl_spark.streaming.quota import _quota_fn
-
-        class FakeState:
-            exists = False
-
-            def update(self, v):
-                self.exists, self.get = True, v
-
-        # ids 10..14 arrive in a LATER chunk than 20..24: chunk-local
-        # order would admit 20..24 first; slice-wide order admits 10..14
-        chunks = iter(
-            [
-                pd.DataFrame({"doc_id": [24, 22, 20, 23, 21]}),
-                pd.DataFrame({"doc_id": [14, 10, 12, 13, 11]}),
-            ]
-        )
-        st = FakeState()
-        (out,) = list(_quota_fn(cap=5)(("d0",), chunks, st))
-        admitted = sorted(out.loc[out["admitted"], "doc_id"].tolist())
-        assert admitted == [10, 11, 12, 13, 14]
-        assert st.get == (10,)
-        ranks = dict(zip(out["doc_id"], out["admit_rank"]))
-        assert ranks[10] == 1 and ranks[24] == 10
-
-
-class TestStreamStreamJoin:
-    """streaming/joins.py: watermarked stream-stream join ≡ the same
-    spec as a batch join over the full corpus."""
-
-    @pytest.fixture(scope="class")
-    def corpus(self, spark, tmp_path_factory):
-        import datetime as dt
-        import os
-
-        rng = np.random.default_rng(17)
-        t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-        lefts, rights = [], []
-        for i in range(60):
-            k = int(rng.integers(0, 12))
-            ts = t0 + dt.timedelta(minutes=int(rng.integers(0, 120)))
-            lefts.append((i, k, ts))
-            if i % 3:  # 1/3 of left events never get a match
-                lag = int(rng.integers(-5, 20))  # some out of the lag window
-                rights.append((1000 + i, k, ts + dt.timedelta(minutes=lag)))
-        # far-future flush rows push the watermark past every real row so
-        # availableNow outer results fully drain; excluded from asserts
-        flush_ts = t0 + dt.timedelta(days=30)
-        lefts.append((9999, 999, flush_ts))
-        rights.append((9999, 999, flush_ts))
-
-        d = tmp_path_factory.mktemp("ssj")
-        tstamp = 1_000_000_000
-        for side, rows, cols in (
-            ("l", lefts, ["lid", "k", "ts"]),
-            ("r", rights, ["rid", "k", "ts"]),
-        ):
-            (d / side).mkdir()
-            # batches are CONTIGUOUS time chunks: arrival order tracks
-            # event time, so nothing is late beyond the 10-min watermark
-            # and stream results must equal the batch join exactly (rows
-            # arriving out of order past the watermark would be dropped —
-            # correct streaming semantics, but not what this test pins)
-            rows = sorted(rows, key=lambda r: r[2])
-            step = (len(rows) + 2) // 3
-            for b in range(3):
-                f = d / side / f"b{b:03d}.parquet"
-                pdf = pd.DataFrame(
-                    rows[b * step:(b + 1) * step], columns=cols
-                )
-                # micros, not pandas' nano default — the stream schema
-                # declares plain `timestamp`
-                pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-                pdf.to_parquet(f, index=False)
-                os.utime(f, (tstamp + b * 10, tstamp + b * 10))
-        return d, lefts, rights
-
-    def _run_stream(self, spark, corpus, how):
-        from bloomy_etl_spark.streaming.joins import stream_stream_join
-
-        d, _, _ = corpus
-        left = (
-            spark.readStream.schema("lid long, k long, ts timestamp")
-            .option("maxFilesPerTrigger", 1).parquet(str(d / "l"))
-        )
-        right = (
-            spark.readStream.schema("rid long, k long, ts timestamp")
-            .option("maxFilesPerTrigger", 1).parquet(str(d / "r"))
-        )
-        out = stream_stream_join(
-            left, right, on="k", watermark="10 minutes",
-            max_lag="15 minutes", how=how,
-        )
-        name = f"ssj_{how}"
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(300)
-        return [r for r in spark.table(name).collect() if r["k"] != 999]
-
-    def _batch(self, spark, corpus, how):
-        from bloomy_etl_spark.streaming.joins import stream_stream_join
-
-        _, lefts, rights = corpus
-        left = spark.createDataFrame(lefts, "lid long, k long, ts timestamp")
-        right = spark.createDataFrame(rights, "rid long, k long, ts timestamp")
-        return [
-            r
-            for r in stream_stream_join(
-                left, right, on="k", max_lag="15 minutes", how=how
-            ).collect()
-            if r["k"] != 999
-        ]
-
-    def test_inner_matches_batch(self, spark, corpus):
-        got = {(r["l_lid"], r["r_rid"]) for r in self._run_stream(spark, corpus, "inner")}
-        want = {(r["l_lid"], r["r_rid"]) for r in self._batch(spark, corpus, "inner")}
-        assert got == want and len(want) > 0
-
-    def test_left_outer_matches_batch(self, spark, corpus):
-        got = {
-            (r["l_lid"], r["r_rid"])
-            for r in self._run_stream(spark, corpus, "left_outer")
-        }
-        want = {
-            (r["l_lid"], r["r_rid"])
-            for r in self._batch(spark, corpus, "left_outer")
-        }
-        assert got == want
-        # the monitor rows: some lefts really are unmatched
-        assert any(rid is None for _, rid in want)
-
-    def test_bad_how(self, spark):
-        from bloomy_etl_spark.streaming.joins import stream_stream_join
-
-        df = spark.createDataFrame([(1, 1)], "k long, ts long")
-        with pytest.raises(ValueError):
-            stream_stream_join(df, df, on="k", how="full")
-
-
-class TestStreamingRollup:
-    def test_streamed_rollup_equals_direct_agg(self, spark, tmp_path):
-        """The durable rollup after a 3-batch replay finalizes to exactly
-        the direct aggregation over all rows — incremental maintenance,
-        live."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from bloomy_etl_spark.streaming.quota import (
-            read_rollup_store,
-            streaming_rollup_ingest,
-        )
-
-        rng = np.random.default_rng(23)
-        rows = [
-            (f"g{int(rng.integers(0, 4))}",
-             float(rng.uniform(-50, 50)) if i % 9 else None)
-            for i in range(300)
-        ]
-        src = tmp_path / "vals"
-        src.mkdir()
-        t0 = 1_000_000_000
-        for i in range(3):
-            f = src / f"b{i:05d}.parquet"
-            pd.DataFrame(rows[i * 100:(i + 1) * 100],
-                         columns=["g", "v"]).to_parquet(f, index=False)
-            os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-        stream = (
-            spark.readStream.schema("g string, v double")
-            .option("maxFilesPerTrigger", 1).parquet(str(src))
-        )
-        q = streaming_rollup_ingest(
-            stream, str(tmp_path / "rollup"), str(tmp_path / "ckpt"),
-            ["g"], "v",
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {tuple(r) for r in read_rollup_store(spark, str(tmp_path / "rollup")).collect()}
-        want = {
-            tuple(r)
-            for r in spark.createDataFrame(rows, "g string, v double")
-            .groupBy("g")
-            .agg(
-                F.count("v").alias("count"),
-                F.round(F.sum("v"), 4).alias("sum"),
-                F.round(F.min("v"), 4).alias("min"),
-                F.round(F.max("v"), 4).alias("max"),
-                F.round(F.avg("v"), 4).alias("avg"),
-                F.round(F.stddev_pop("v"), 4).alias("stddev_pop"),
-            )
-            .collect()
-        }
-        assert got == want
-
-
-class TestStreamingCms:
-    def test_streamed_sketch_equals_batch_sketch(self, spark, tmp_path):
-        """The merged durable store after a 3-batch replay equals the
-        one-shot batch sketch over the same rows — the CMS merge
-        property, live."""
-        import os
-
-        from bloomy_etl_spark.operators.sketches import cms_build, cms_estimate
-        from bloomy_etl_spark.streaming.quota import (
-            read_cms_store,
-            streaming_cms_ingest,
-        )
-
-        rng = np.random.default_rng(13)
-        words = [f"w{int(rng.integers(0, 30))}" for _ in range(300)]
-        src = tmp_path / "toks"
-        src.mkdir()
-        t0 = 1_000_000_000
-        for i in range(3):
-            f = src / f"b{i:05d}.parquet"
-            pd.DataFrame({"w": words[i * 100:(i + 1) * 100]}).to_parquet(
-                f, index=False
-            )
-            os.utime(f, (t0 + i * 10, t0 + i * 10))
-
-        stream = (
-            spark.readStream.schema("w string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = streaming_cms_ingest(
-            stream, str(tmp_path / "sketch"), str(tmp_path / "ckpt"), "w"
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        merged = read_cms_store(spark, str(tmp_path / "sketch"))
-        full = cms_build(
-            spark.createDataFrame([(w,) for w in words], "w string"), "w"
-        )
-        assert sorted(map(tuple, merged.collect())) == sorted(
-            map(tuple, full.collect())
-        )
-        # and the merged store answers point queries with the one-sided
-        # guarantee against exact stream counts
-        from collections import Counter
-
-        exact = Counter(words)
-        keys = spark.createDataFrame([(w,) for w in exact], "w string")
-        est = {r["w"]: r["est"]
-               for r in cms_estimate(merged, keys, "w").collect()}
-        assert all(est[w] >= c for w, c in exact.items())
-
-
-class TestIvfPqIngest:
-    """Streaming embedding ingest into a persisted IVF-PQ index
-    (streaming/ingest.py::streaming_ivfpq_ingest): after replaying the
-    new vectors as micro-batches, search must equal a from-scratch
-    encode of old∪new under the same frozen quantizer+codebooks."""
-
-    def test_stream_equals_frozen_rebuild(self, spark, tmp_path):
-        import numpy as np
-
-        from bloomy_etl_spark.operators.pq import (
-            build_ivfpq_index,
-            search_ivfpq_index,
-        )
-        from bloomy_etl_spark.streaming.ingest import streaming_ivfpq_ingest
-
-        rng = np.random.default_rng(11)
-        centers = rng.uniform(-10, 10, size=(4, 8))
-        mat = np.concatenate(
-            [c + rng.normal(0, 0.3, size=(15, 8)) for c in centers]
-        )
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
-            "vec_id long, embedding array<double>",
-        )
-        base = df.filter("vec_id < 40")
-        # stream ids 40..59 in two deterministic micro-batches
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, (lo, hi) in enumerate([(40, 50), (50, 60)]):
-            df.filter(f"vec_id >= {lo} and vec_id < {hi}").coalesce(
-                1
-            ).write.parquet(str(replay / f"b{bi}"))
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-
-        kw = dict(m=4, ksub=4, centroid_stride=10, max_centroids=4)
-        idx = str(tmp_path / "idx")
-        books = build_ivfpq_index(base, idx, **kw)
-        q = streaming_ivfpq_ingest(
-            stream, idx, checkpoint_dir=str(tmp_path / "ckpt")
-        )
-        q.awaitTermination(120)
-
-        ref = str(tmp_path / "ref")
-        build_ivfpq_index(df, ref, codebooks=books, **kw)
-        queries = df.filter("vec_id in (3, 45, 55)")
-        got = sorted(map(tuple, search_ivfpq_index(
-            spark, idx, queries, k=5, nprobe=4).collect()))
-        want = sorted(map(tuple, search_ivfpq_index(
-            spark, ref, queries, k=5, nprobe=4).collect()))
-        assert got == want
-        stored = {
-            r["neighbor_id"]
-            for r in spark.read.parquet(f"{idx}/corpus").collect()
-        }
-        assert stored == set(range(60))
-
-
-class TestSemDeDupIngest:
-    """Streaming SemDeDup against a persisted store
-    (streaming/ingest.py::streaming_semdedup_ingest): with monotone ids
-    across micro-batches, the final store must EQUAL a single batch
-    ``semantic_dedup`` of the union under the same frozen centroids —
-    including the chain semantics where an already-dropped stored row
-    still witness-drops later arrivals."""
-
-    def _blobs(self, spark):
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        centers = rng.uniform(-5, 5, size=(4, 8))
-        # tight blobs -> plenty of near-dups at a high threshold
-        mat = np.concatenate(
-            [c + rng.normal(0, 0.02, size=(12, 8)) for c in centers]
-        )
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
-            "vec_id long, embedding array<double>",
-        )
-        return df
-
-    def test_stream_equals_batch_semdedup(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.clustering import kmeans_lloyd
-        from bloomy_etl_spark.operators.semdedup import semantic_dedup
-        from bloomy_etl_spark.streaming.ingest import (
-            streaming_semdedup_ingest,
-        )
-
-        df = self._blobs(spark)
-        cents, _ = kmeans_lloyd(df, k=4, iters=2)
-
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, (lo, hi) in enumerate([(0, 16), (16, 32), (32, 48)]):
-            df.filter(f"vec_id >= {lo} and vec_id < {hi}").coalesce(
-                1
-            ).write.parquet(str(replay / f"b{bi}"))
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        store = str(tmp_path / "store")
-        q = streaming_semdedup_ingest(
-            stream, store, checkpoint_dir=str(tmp_path / "ckpt"),
-            centroids=cents, threshold=0.999,
-        )
-        q.awaitTermination(120)
-
-        from bloomy_etl_spark.streaming.ingest import read_semdedup_store
-
-        got = {
-            (r["vec_id"], r["cluster"], r["kept"])
-            for r in read_semdedup_store(spark, store)
-            .select("vec_id", "cluster", "kept").collect()
-        }
-        want = {
-            (r["vec_id"], r["cluster"], r["kept"])
-            for r in semantic_dedup(
-                df, threshold=0.999, centroids=cents
-            ).collect()
-        }
-        assert got == want
-        # the blobs are tight enough that the stream actually dropped
-        # something and kept something — the equivalence is non-vacuous
-        kept = {v for v, _, k in got if k}
-        assert 0 < len(kept) < 48
-
-        # at-least-once retry: re-append one batch's rows verbatim; the
-        # collapsed view must not change (one row per id, first batch
-        # wins), though the raw store now holds duplicates
-        dup = spark.read.parquet(store).filter("batch_id = 1")
-        dup.write.mode("append").parquet(store)
-        raw_n = spark.read.parquet(store).count()
-        again = {
-            (r["vec_id"], r["cluster"], r["kept"])
-            for r in read_semdedup_store(spark, store)
-            .select("vec_id", "cluster", "kept").collect()
-        }
-        assert again == want
-        assert raw_n > len(want)  # the duplicates really are in the raw store
-
-    def test_dropped_row_still_witnesses(self, spark, tmp_path):
-        """Chain a(0)–b(20)–c(40) across three batches where only
-        consecutive ids are near: b drops against a, then c must drop
-        against the ALREADY-DROPPED b (batch chain semantics)."""
-        from bloomy_etl_spark.streaming.ingest import (
-            streaming_semdedup_ingest,
-        )
-
-        # unit vectors at small successive angles: cos(a,b)=cos(b,c)≈.995
-        # but cos(a,c)≈.980 < threshold .99
-        import math as _m
-
-        def at(theta):
-            return [_m.cos(theta), _m.sin(theta)] + [0.0] * 6
-
-        rows = [(0, at(0.0)), (20, at(0.1)), (40, at(0.2))]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, vid in enumerate([0, 20, 40]):
-            df.filter(f"vec_id = {vid}").coalesce(1).write.parquet(
-                str(replay / f"b{bi}")
-            )
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        store = str(tmp_path / "store")
-        q = streaming_semdedup_ingest(
-            stream, store, checkpoint_dir=str(tmp_path / "ckpt"),
-            centroids=[at(0.1)], threshold=0.99,
-        )
-        q.awaitTermination(120)
-        kept = {
-            r["vec_id"]: r["kept"]
-            for r in spark.read.parquet(store).collect()
-        }
-        assert kept == {0: True, 20: False, 40: False}
-
-
-class TestCmsIngest:
-    """Streaming Count-Min ingest (streaming/ingest.py::
-    streaming_cms_ingest): the durable store after replaying all
-    micro-batches equals one batch cms_build over the union —
-    cell-for-cell, not just estimate-level."""
-
-    def test_stream_equals_batch_sketch(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.sketches import cms_build
-        from bloomy_etl_spark.streaming.ingest import (
-            read_cms_store,
-            streaming_cms_ingest,
-        )
-
-        rows = [(i, f"w{i % 17}") for i in range(600)]
-        df = spark.createDataFrame(rows, "i long, w string")
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, (lo, hi) in enumerate([(0, 200), (200, 450), (450, 600)]):
-            df.filter(f"i >= {lo} and i < {hi}").coalesce(1).write.parquet(
-                str(replay / f"b{bi}")
-            )
-        stream = (
-            spark.readStream.schema("i long, w string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        q = streaming_cms_ingest(
-            stream, str(tmp_path / "sketch"), str(tmp_path / "ckpt"),
-            item_col="w", depth=4, width=32,
-        )
-        q.awaitTermination(120)
-
-        got = {
-            (r["row"], r["bucket"]): r["cnt"]
-            for r in read_cms_store(spark, str(tmp_path / "sketch")).collect()
-        }
-        want = {
-            (r["row"], r["bucket"]): r["cnt"]
-            for r in cms_build(df, "w", depth=4, width=32).collect()
-        }
-        assert got == want
-        assert sum(v for (r, _), v in got.items() if r == 0) == 600
-
-    def test_replayed_batch_collapses(self, spark, tmp_path):
-        """Simulated at-least-once retry: appending one batch's delta
-        twice with the same batch_id must not double its counts."""
-        from bloomy_etl_spark.operators.sketches import cms_build
-        from bloomy_etl_spark.streaming.ingest import read_cms_store
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(
-            [(i, f"w{i % 5}") for i in range(100)], "i long, w string"
-        )
-        delta = cms_build(df, "w", depth=2, width=16).withColumn(
-            "batch_id", F.lit(0)
-        )
-        path = str(tmp_path / "sketch")
-        delta.write.mode("append").parquet(path)
-        delta.write.mode("append").parquet(path)  # the replay
-        got = {
-            (r["row"], r["bucket"]): r["cnt"]
-            for r in read_cms_store(spark, path).collect()
-        }
-        want = {
-            (r["row"], r["bucket"]): r["cnt"]
-            for r in cms_build(df, "w", depth=2, width=16).collect()
-        }
-        assert got == want
-
-
-class TestHllIngest:
-    """Streaming portable-HLL ingest (streaming/ingest.py::
-    streaming_hll_ingest): the register store after replaying all
-    micro-batches equals one batch hll_registers over the union —
-    register-for-register; the max monoid's idempotence makes replays
-    literal no-ops."""
-
-    def test_stream_equals_batch_registers(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.sketches import hll_registers
-        from bloomy_etl_spark.streaming.ingest import (
-            read_hll_store,
-            streaming_hll_ingest,
-        )
-
-        rows = [(i, f"t{i % 3}", f"u{i % 217}") for i in range(600)]
-        df = spark.createDataFrame(rows, "i long, g string, u string")
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        for bi, (lo, hi) in enumerate([(0, 200), (200, 450), (450, 600)]):
-            df.filter(f"i >= {lo} and i < {hi}").coalesce(1).write.parquet(
-                str(replay / f"b{bi}")
-            )
-        stream = (
-            spark.readStream.schema("i long, g string, u string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        q = streaming_hll_ingest(
-            stream, str(tmp_path / "sketch"), str(tmp_path / "ckpt"),
-            keys=["g"], item_col="u", m=32,
-        )
-        q.awaitTermination(120)
-
-        got = {
-            (r["g"], r["bucket"]): r["r"]
-            for r in read_hll_store(
-                spark, str(tmp_path / "sketch"), ["g"]
-            ).collect()
-        }
-        want = {
-            (r["g"], r["bucket"]): r["r"]
-            for r in hll_registers(df, ["g"], "u", m=32).collect()
-        }
-        assert got == want
-
-    def test_replayed_batch_is_noop(self, spark, tmp_path):
-        """At-least-once retry: appending the same batch delta twice
-        changes nothing under the reader's bucket-wise max — no
-        batch_id bookkeeping required, unlike the additive CMS."""
-        from bloomy_etl_spark.operators.sketches import hll_registers
-        from bloomy_etl_spark.streaming.ingest import read_hll_store
-
-        df = spark.createDataFrame(
-            [(i, f"u{i % 50}") for i in range(100)], "i long, u string"
-        )
-        delta = hll_registers(df.selectExpr("'g' as g", "u"), ["g"], "u", m=32)
-        path = str(tmp_path / "sketch")
-        delta.write.mode("append").parquet(path)
-        delta.write.mode("append").parquet(path)  # the replay
-        got = {
-            (r["g"], r["bucket"]): r["r"]
-            for r in read_hll_store(spark, path, ["g"]).collect()
-        }
-        want = {
-            ("g", r["bucket"]): r["r"]
-            for r in hll_registers(
-                df.selectExpr("'g' as g", "u"), ["g"], "u", m=32
-            ).collect()
-        }
-        assert got == want
-
-
 class TestDsirIngest:
     """Streaming DSIR scoring against a frozen importance model
     (streaming/ingest.py::streaming_dsir_ingest): the durable score
@@ -1197,58 +422,6 @@ class TestDsirIngest:
         out = dsir_score(docs, weights)
         assert out.filter(F.col("score").isNull()).count() == 0
         assert out.count() == docs.count()
-
-
-class TestDsirModelIngest:
-    """Incremental DSIR model maintenance: the weight row rebuilt from
-    streamed bucket deltas equals one-shot batch training, entry for
-    entry — and replayed deltas collapse."""
-
-    def test_stream_model_equals_batch_model(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.corpus import dsir_weights
-        from bloomy_etl_spark.sources.tables import load_table
-        from bloomy_etl_spark.streaming.ingest import (
-            read_docs_stream,
-            read_dsir_model,
-            replay_docs_dir,
-            streaming_dsir_model_ingest,
-        )
-        from tests.conftest import SF_ORACLE
-
-        replay = replay_docs_dir(
-            spark, SF_ORACLE, str(tmp_path / "replay"), n_files=3
-        )
-        q = streaming_dsir_model_ingest(
-            read_docs_stream(spark, replay),
-            str(tmp_path / "model"),
-            str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-        got = read_dsir_model(spark, str(tmp_path / "model")).collect()[0]
-        docs = load_table(spark, SF_ORACLE, "documents")
-        want = dsir_weights(docs, F.col("lang") == "en").collect()[0]
-        assert got["b"] == want["b"] and got["w0"] == want["w0"]
-        assert dict(got["wm"]) == dict(want["wm"])
-
-    def test_replayed_delta_collapses(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.corpus import (
-            dsir_gram_buckets,
-            dsir_weights,
-        )
-        from bloomy_etl_spark.sources.tables import load_table
-        from bloomy_etl_spark.streaming.ingest import read_dsir_model
-        from tests.conftest import SF_ORACLE
-
-        docs = load_table(spark, SF_ORACLE, "documents")
-        delta = dsir_gram_buckets(docs, F.col("lang") == "en").withColumn(
-            "batch_id", F.lit(0)
-        )
-        path = str(tmp_path / "model")
-        delta.write.mode("append").parquet(path)
-        delta.write.mode("append").parquet(path)  # at-least-once replay
-        got = read_dsir_model(spark, path).collect()[0]
-        want = dsir_weights(docs, F.col("lang") == "en").collect()[0]
-        assert dict(got["wm"]) == dict(want["wm"]) and got["w0"] == want["w0"]
 
 
 def _tie_safe_slices(rows, n_slices):
@@ -1359,18 +532,29 @@ class TestTrailingRangeStream:
         assert len(got) == len(rows)
 
     def test_trail_step_evicts_and_bounds_state(self):
-        """The pure transition: frame contents follow event time exactly
-        and the buffer never retains anything outside the span."""
-        from bloomy_etl_spark.streaming.stateful import trail_step
+        """The per-key transition both stateful APIs run, one
+        single-row batch at a time: frame contents follow event time
+        exactly and the buffer never retains anything outside the
+        span."""
+        import pandas as pd
 
+        from bloomy_etl_spark.streaming.stateful import _make_trail_frames
+
+        frames = _make_trail_frames(100)
         eus, v = [], []
-        assert trail_step(eus, v, 0, 10, 100) == (1, 10)
-        assert trail_step(eus, v, 50, 5, 100) == (2, 15)
+
+        def step(t, val):
+            batch = pd.DataFrame({"event_id": [t], "eus": [t], "v_e4": [val]})
+            out = frames(eus, v, batch)
+            return out["n_1h"][0], out["sum_v_e4"][0]
+
+        assert step(0, 10) == (1, 10)
+        assert step(50, 5) == (2, 15)
         # 101: row at 0 leaves the [1, 101] frame
-        assert trail_step(eus, v, 101, 1, 100) == (2, 6)
+        assert step(101, 1) == (2, 6)
         assert eus == [50, 101]
         # a large jump clears everything but the new row
-        assert trail_step(eus, v, 10_000, 7, 100) == (1, 7)
+        assert step(10_000, 7) == (1, 7)
         assert eus == [10_000] and v == [7]
 
 
@@ -1523,216 +707,6 @@ class TestTrailingRangeTws:
         # state retains only the last frame's in-span rows
         eus_buf, v_buf = proc._buf.get()
         assert eus_buf == [10_000, 10_050] and v_buf == [7, 3]
-
-
-class TestNoveltyIngest:
-    """Streaming first-occurrence novelty (streaming/ingest.py::
-    streaming_novelty_ingest): stream ≡ batch in ANY arrival order
-    (min is associative), replay collapses."""
-
-    def _start(self, spark, src, tmp_path):
-        from bloomy_etl_spark.streaming.ingest import streaming_novelty_ingest
-
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, lang string, text string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        return streaming_novelty_ingest(
-            stream, str(tmp_path / "grams"), str(tmp_path / "docs"),
-            str(tmp_path / "ckpt"),
-        )
-
-    def test_stream_equals_batch_any_order(self, spark, tmp_path):
-        """Replay the documents fixture in REVERSED id slices — the
-        store must still reconstruct the batch novelty profile exactly."""
-        from bloomy_etl_spark.operators.corpus import first_seen_novelty
-        from bloomy_etl_spark.sources.tables import load_table
-        from bloomy_etl_spark.streaming.ingest import read_novelty_store
-        from tests.conftest import SF_ORACLE
-
-        docs = load_table(spark, SF_ORACLE, "documents")
-        pdf = docs.toPandas().sort_values("doc_id", ascending=False)
-        src = tmp_path / "src"
-        src.mkdir()
-        t0 = 1_000_000_000
-        n = len(pdf)
-        for i in range(3):  # reversed-id slices: arrival order ≠ id order
-            f = src / f"b{i:05d}.parquet"
-            pdf.iloc[i * n // 3:(i + 1) * n // 3].to_parquet(f, index=False)
-            os.utime(f, (t0 + i * 10, t0 + i * 10))
-        q = self._start(spark, str(src), tmp_path)
-        q.awaitTermination(300)
-        got = {
-            tuple(r)
-            for r in read_novelty_store(
-                spark, str(tmp_path / "grams"), str(tmp_path / "docs")
-            ).collect()
-        }
-        want = {tuple(r) for r in first_seen_novelty(docs, n=2).collect()}
-        assert got == want
-
-    def test_replayed_batch_collapses(self, spark, tmp_path):
-        from bloomy_etl_spark.functions.text import word_ngrams
-        from bloomy_etl_spark.operators.corpus import first_seen_novelty
-        from bloomy_etl_spark.sources.tables import load_table
-        from bloomy_etl_spark.streaming.ingest import read_novelty_store
-        from tests.conftest import SF_ORACLE
-
-        docs = load_table(spark, SF_ORACLE, "documents").filter(
-            F.col("doc_id") < 40
-        )
-        grams = docs.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(word_ngrams(F.col("text"), 2))
-            ).alias("g"),
-        )
-        first = grams.groupBy("g").agg(
-            F.min("doc_id").alias("first_doc")
-        ).withColumn("batch_id", F.lit(0))
-        nd = grams.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_distinct")
-        ).withColumn("batch_id", F.lit(0))
-        gdir, ddir = str(tmp_path / "g"), str(tmp_path / "d")
-        for _ in range(2):  # the at-least-once replay
-            first.write.mode("append").parquet(gdir)
-            nd.write.mode("append").parquet(ddir)
-        got = read_novelty_store(spark, gdir, ddir)
-        assert got.count() == 40
-        want = {tuple(r) for r in first_seen_novelty(docs, n=2).collect()}
-        assert {tuple(r) for r in got.collect()} == want
-
-
-class TestKCenterIngest:
-    """Online k-center maintenance (streaming/ingest.py::
-    streaming_kcenter_ingest, the doubling algorithm) — the streaming
-    half of q139's batch coreset. Online k-center is a DIFFERENT
-    algorithm from greedy k-center (no arrival order reproduces the
-    batch result), so the contract here is its invariants: the center
-    budget, threshold growth, and the telescoped coverage guarantee."""
-
-    def _ingest(self, spark, tmp_path, pts, k=4, batches=3):
-        import math
-
-        from bloomy_etl_spark.streaming.ingest import (
-            read_kcenter_state,
-            streaming_kcenter_ingest,
-        )
-
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(pts)],
-            "vec_id long, embedding array<double>",
-        )
-        replay = tmp_path / "replay"
-        replay.mkdir(exist_ok=True)
-        per = math.ceil(len(pts) / batches)
-        for bi in range(batches):
-            df.filter(
-                f"vec_id >= {bi * per} and vec_id < {(bi + 1) * per}"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(replay / f"b{bi}")
-            )
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        q = streaming_kcenter_ingest(
-            stream, str(tmp_path / "state"),
-            checkpoint_dir=str(tmp_path / "ckpt"), k=k,
-        )
-        q.awaitTermination(120)
-        state = read_kcenter_state(spark, str(tmp_path / "state"))
-        return df, state.collect()
-
-    def test_budget_threshold_and_coverage(self, spark, tmp_path):
-        """8 well-separated 2-d sites force doubling at k=4; the final
-        ≤4 centers must cover EVERY ingested point within 2·τ (the
-        telescoping-merge guarantee), with τ > 0 after overflow."""
-        import math
-
-        sites = [(0, 0), (100, 0), (0, 100), (100, 100),
-                 (50, 0), (0, 50), (100, 50), (50, 100)]
-        pts = []
-        for sx, sy in sites:
-            for j in range(3):  # a small cloud at each site
-                pts.append((sx + j * 0.25, sy - j * 0.25))
-        df, centers = self._ingest(spark, tmp_path, pts, k=4)
-
-        assert 1 <= len(centers) <= 4
-        tau2 = {int(r["tau2_e6"]) for r in centers}
-        assert len(tau2) == 1  # one threshold per snapshot
-        tau = math.sqrt(tau2.pop() / 1e6)
-        assert tau > 0
-        cvecs = [r["embedding"] for r in centers]
-        for row in df.collect():
-            d = min(
-                math.dist(row["embedding"], c) for c in cvecs
-            )
-            assert d <= 2 * tau + 1e-6, (row["vec_id"], d, tau)
-
-    def test_no_overflow_keeps_all_distinct_points(self, spark, tmp_path):
-        """Fewer distinct points than k: every point becomes a center
-        and the threshold never leaves 0."""
-        pts = [(0, 0), (10, 0), (0, 10)]
-        _, centers = self._ingest(spark, tmp_path, pts, k=4, batches=2)
-        assert {int(r["center_id"]) for r in centers} == {0, 1, 2}
-        assert all(int(r["tau2_e6"]) == 0 for r in centers)
-
-    def test_replayed_snapshot_collapses(self, spark, tmp_path):
-        """At-least-once retry: appending the identical latest snapshot
-        again must not change what the reader returns."""
-        from bloomy_etl_spark.streaming.ingest import read_kcenter_state
-
-        pts = [(0, 0), (100, 0), (0, 100), (100, 100), (50, 50)]
-        df, centers = self._ingest(spark, tmp_path, pts, k=2, batches=2)
-        state_dir = str(tmp_path / "state")
-        st = spark.read.parquet(state_dir)
-        last = st.agg(F.max("batch_id")).collect()[0][0]
-        st.filter(F.col("batch_id") == last).write.mode("append").parquet(
-            state_dir
-        )  # the replay
-        again = read_kcenter_state(spark, state_dir).collect()
-        key = lambda r: (r["center_id"], tuple(r["embedding"]),
-                         r["tau2_e6"])
-        assert sorted(map(key, again)) == sorted(map(key, centers))
-
-    def test_deterministic_across_reruns(self, spark, tmp_path):
-        """Same arrival order twice (fresh dirs) → identical state:
-        every admission/doubling decision is quantized-integer."""
-        pts = [(i * 7 % 50, i * 13 % 50) for i in range(30)]
-        (a := tmp_path / "a").mkdir()
-        (b := tmp_path / "b").mkdir()
-        _, c1 = self._ingest(spark, a, pts, k=4)
-        _, c2 = self._ingest(spark, b, pts, k=4)
-        key = lambda r: (r["center_id"], tuple(r["embedding"]),
-                         r["tau2_e6"])
-        assert sorted(map(key, c1)) == sorted(map(key, c2))
-
-    def test_driver_replay_matches_sql_distance(self, spark):
-        """Center thinning replays the quantized squared-L2 on the
-        driver; it must equal the SQL expression that scores batch
-        points, bit for bit, on components with no exact binary form."""
-        from bloomy_etl_spark.operators.clustering import _dist2_e6
-        from bloomy_etl_spark.streaming.ingest import _pairwise_d2_e6
-
-        vecs = [[0.1, 0.2, 0.3], [1 / 3, -2 / 3, 0.7],
-                [1e-7, 123.456, -0.1], [0.3, 0.1, 0.2]]
-        scale = 1_000_000
-        df = spark.createDataFrame(
-            list(enumerate(vecs)), "vec_id long, embedding array<double>"
-        )
-        got = df.select(
-            "vec_id", *[_dist2_e6("embedding", c, scale).alias(f"d{j}")
-                        for j, c in enumerate(vecs)]
-        ).collect()
-        for r in got:
-            for j, c in enumerate(vecs):
-                want = _pairwise_d2_e6(vecs[r["vec_id"]], c, scale)
-                assert r[f"d{j}"] == want, (r["vec_id"], j)
 
 
 class TestEwmaIngest:
@@ -2267,189 +1241,6 @@ class TestAttributionIngest:
             ).collect()
         }
         assert got == {3: ("click", 2 * day), 4: ("direct", None)}
-
-
-class TestFunnelIngest:
-    """Incremental funnel state (streaming/ingest.py::
-    streaming_funnel_ingest): the (stage, last-µs) accumulator composes
-    exactly across ordered batches, so the streaming state must equal
-    the batch fold bit-for-bit — same contract shape as the EWMA
-    ingest."""
-
-    def _ingest(self, spark, tmp_path):
-        from bloomy_etl_spark.streaming.ingest import (
-            read_funnel_state,
-            streaming_funnel_ingest,
-        )
-        from bloomy_etl_spark.streaming.sources import replay_dir_ordered
-
-        replay = replay_dir_ordered(
-            spark, SF_SMOKE, str(tmp_path / "replay"), n_files=3
-        )
-        schema = spark.read.parquet(replay).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-            .select(
-                "user_id", F.unix_micros("ts").alias("eus"),
-                "event_id", "event_type",
-            )
-        )
-        q = streaming_funnel_ingest(
-            stream, str(tmp_path / "state"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-        return read_funnel_state(spark, str(tmp_path / "state"))
-
-    def test_stream_equals_batch_bit_identical(self, spark, tmp_path):
-        from bloomy_etl_spark.operators.engine_queries import (
-            _FUNNEL_STAGES,
-            funnel_stages,
-        )
-        from bloomy_etl_spark.sources.tables import load_table
-
-        got = {
-            r["user_id"]: r["stage"]
-            for r in self._ingest(spark, tmp_path).collect()
-        }
-        ev = load_table(spark, SF_SMOKE, "events").select(
-            "user_id", F.unix_micros("ts").alias("eus"),
-            "event_id", "event_type",
-        )
-        want = {
-            r["user_id"]: r["stage"]
-            for r in funnel_stages(ev, _FUNNEL_STAGES).collect()
-        }
-        assert got == want
-        assert any(s > 0 for s in want.values())  # fixture exercises it
-
-    def test_replayed_delta_collapses(self, spark, tmp_path):
-        from bloomy_etl_spark.streaming.ingest import read_funnel_state
-
-        before = {
-            tuple(r) for r in self._ingest(spark, tmp_path).collect()
-        }
-        state_dir = str(tmp_path / "state")
-        st = spark.read.parquet(state_dir)
-        last = st.agg(F.max("batch_id")).collect()[0][0]
-        st.filter(F.col("batch_id") == last).write.mode("append").parquet(
-            state_dir
-        )
-        after = {
-            tuple(r)
-            for r in read_funnel_state(spark, state_dir).collect()
-        }
-        assert after == before
-
-
-class TestMgIngest:
-    """Streaming Misra-Gries ingest (streaming/ingest.py::
-    streaming_mg_ingest): after replaying all micro-batches, an exact
-    recount of the stored candidates equals the plain full-domain
-    frequent-items answer (stream ≡ batch on the FINAL output — the
-    summaries themselves are slice-dependent by design), the recovered
-    total is exact, and the store is bounded."""
-
-    def _corpus(self, spark):
-        # 2 heavy items over a 300-item tail; capacity 16 << domain
-        # forces eviction inside every micro-batch.
-        rows = ([(9000,)] * 120 + [(9001,)] * 90
-                + [(i,) for i in range(300)]
-                + [(i,) for i in range(90)])
-        return spark.createDataFrame(rows, "item long")
-
-    def test_recounted_candidates_equal_batch_answer(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from bloomy_etl_spark.streaming.ingest import (
-            read_mg_candidates,
-            read_mg_total,
-            streaming_mg_ingest,
-        )
-
-        df = self._corpus(spark).withColumn(
-            "i", F.monotonically_increasing_id()
-        )
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        parts = df.collect()
-        slices = [parts[:200], parts[200:450], parts[450:]]
-        for bi, rows in enumerate(slices):
-            spark.createDataFrame(
-                [(r["item"],) for r in rows], "item long"
-            ).coalesce(1).write.parquet(str(replay / f"b{bi}"))
-        stream = (
-            spark.readStream.schema("item long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(replay / "b*"))
-        )
-        q = streaming_mg_ingest(
-            stream, str(tmp_path / "store"), str(tmp_path / "ckpt"),
-            item_col="item", capacity=16,
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        data = self._corpus(spark)
-        n = data.count()
-        assert read_mg_total(spark, str(tmp_path / "store")) == n
-
-        k = 7  # threshold 600/7 ≈ 85.7 → exactly the two heavy items
-        cands = read_mg_candidates(
-            spark, str(tmp_path / "store"), "item"
-        ).select("item")
-        got = {
-            (r["item"], r["n"])
-            for r in data.join(F.broadcast(cands), "item")
-            .groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") * k >= n).collect()
-        }
-        want = {
-            (r["item"], r["n"])
-            for r in data.groupBy("item")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") * k >= n).collect()
-        }
-        assert got == want and {i for i, _ in got} == {9000, 9001}
-        # candidate weights undercount true stream frequency
-        true = {r["item"]: r["n"]
-                for r in data.groupBy("item")
-                .agg(F.count(F.lit(1)).alias("n")).collect()}
-        for r in read_mg_candidates(
-                spark, str(tmp_path / "store"), "item").collect():
-            assert r["mg_wt"] <= true[r["item"]]
-
-    def test_replayed_batch_collapses(self, spark, tmp_path):
-        """At-least-once retry: re-appending one batch's identical
-        delta must change neither candidates nor the exact total."""
-        from pyspark.sql import functions as F
-
-        from bloomy_etl_spark.operators.sketches import mg_summary
-        from bloomy_etl_spark.streaming.ingest import (
-            read_mg_candidates,
-            read_mg_total,
-        )
-
-        df = spark.createDataFrame(
-            [(i % 7,) for i in range(140)], "item long"
-        ).repartition(2)
-        delta = mg_summary(df, "item", capacity=4,
-                           with_part_totals=True).withColumn(
-            "batch_id", F.lit(0)
-        )
-        path = str(tmp_path / "store")
-        delta.write.mode("append").parquet(path)
-        delta.write.mode("append").parquet(path)  # the replay
-        assert read_mg_total(spark, path) == 140
-        merged = {r["item"]: r["mg_wt"]
-                  for r in read_mg_candidates(spark, path, "item").collect()}
-        once = {r["item"]: r["mg_wt"]
-                for r in mg_summary(df, "item", capacity=4)
-                .groupBy("item").agg(F.sum("mg_wt").alias("mg_wt"))
-                .withColumnRenamed("mg_wt", "mg_wt").collect()}
-        assert merged == once
 
 
 class TestCcIngest:

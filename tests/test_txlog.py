@@ -15,7 +15,6 @@ from bloomy_etl_spark.sinks.txlog import (
     history,
     read_table,
     rollback,
-    streaming_commit_sink,
     vacuum,
 )
 
@@ -84,15 +83,6 @@ class TestTxlog:
         assert len(history(d)) == 1
         assert read_table(spark, d).count() == 4
 
-    def test_streaming_sink_exactly_once(self, spark, tmp_path):
-        d = str(tmp_path / "t")
-        sink = streaming_commit_sink(d)
-        sink(_df(spark, 0, 5), 0)
-        sink(_df(spark, 5, 8), 1)
-        sink(_df(spark, 5, 8), 1)  # redelivered micro-batch
-        assert read_table(spark, d).count() == 8
-        assert len(history(d)) == 2
-
     def test_checkpoint_replay_many_commits(self, spark, tmp_path):
         """> checkpoint_every commits: snapshot resolution crosses a
         checkpoint boundary and still reproduces every version."""
@@ -127,85 +117,3 @@ class TestTxlog:
             commit(_df(spark, 0, 1), d, mode="merge")
         with pytest.raises(ValueError):
             read_table(spark, d)
-
-    def test_streaming_sink_from_real_stream(self, spark, tmp_path):
-        """End-to-end: file stream → foreachBatch(streaming_commit_sink)
-        → versioned table equals the batch input; one commit per
-        micro-batch, each carrying its batch txn_id."""
-        src = str(tmp_path / "src")
-        _df(spark, 0, 6).repartition(1).write.parquet(src + "/a")
-        _df(spark, 6, 9).repartition(1).write.parquet(src + "/b")
-        d = str(tmp_path / "t")
-        q = (
-            spark.readStream.schema("id long, v long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-            .writeStream.foreachBatch(streaming_commit_sink(d))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert _rows(read_table(spark, d)) == _rows(_df(spark, 0, 9))
-        assert all(h["txn_id"] is not None for h in history(d))
-
-
-class TestTableDiff:
-    def test_whole_row_diff(self, spark, tmp_path):
-        from bloomy_etl_spark.sinks.txlog import table_diff
-
-        d = str(tmp_path / "t")
-        commit(_df(spark, 0, 5), d)                 # v0: ids 0-4
-        commit(_df(spark, 3, 8), d, mode="overwrite")  # v1: ids 3-7
-        diff = table_diff(spark, d, 0, 1)
-        got = {(r["id"], r["_change"], r["_delta"]) for r in diff.collect()}
-        assert got == (
-            {(i, "insert", 1) for i in (5, 6, 7)}
-            | {(i, "delete", 1) for i in (0, 1, 2)}
-        )
-        # reversed direction swaps the tags
-        rev = {(r["id"], r["_change"]) for r in
-               table_diff(spark, d, 1, 0).collect()}
-        assert rev == (
-            {(i, "delete") for i in (5, 6, 7)}
-            | {(i, "insert") for i in (0, 1, 2)}
-        )
-
-    def test_identical_versions_empty_diff(self, spark, tmp_path):
-        from bloomy_etl_spark.sinks.txlog import table_diff
-
-        d = str(tmp_path / "t")
-        commit(_df(spark, 0, 5), d)
-        commit(spark.range(0).select(F.col("id"),
-                                     (F.col("id") * 2).alias("v")), d)
-        assert table_diff(spark, d, 0, 1).count() == 0
-
-    def test_duplicate_multiplicity_in_delta(self, spark, tmp_path):
-        from bloomy_etl_spark.sinks.txlog import table_diff
-
-        d = str(tmp_path / "t")
-        one = spark.createDataFrame([(1, 2)], "id long, v long")
-        commit(one, d)                                   # v0: 1 copy
-        commit(one.union(one).union(one), d, mode="overwrite")  # v1: 3 copies
-        diff = table_diff(spark, d, 0, 1).collect()
-        assert len(diff) == 1
-        assert (diff[0]["_change"], diff[0]["_delta"]) == ("insert", 2)
-
-    def test_keyed_diff_collapses_updates(self, spark, tmp_path):
-        from bloomy_etl_spark.sinks.txlog import table_diff
-
-        d = str(tmp_path / "t")
-        v0 = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
-        )
-        v1 = spark.createDataFrame(
-            [(1, "a"), (2, "B"), (4, "d")], "id long, v string"
-        )
-        commit(v0, d)
-        commit(v1, d, mode="overwrite")
-        got = {(r["id"], r["_change"]) for r in
-               table_diff(spark, d, 0, 1, key_cols=["id"]).collect()}
-        assert got == {
-            (2, "update_old"), (2, "update_new"),   # changed value
-            (3, "delete"), (4, "insert"),           # pure delete / insert
-        }
