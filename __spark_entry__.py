@@ -8,12 +8,13 @@ the t2 correctness gate.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bloomy_etl_spark.operators.ann_queries import ANN_ORACLE_SQL, ANN_QUERIES
 from bloomy_etl_spark.operators.bloomy_queries import BLOOMY_ORACLE_SQL, BLOOMY_QUERIES
@@ -52,7 +53,6 @@ def _last_green_round(repo_dir: str | None = None) -> dict[str, int]:
     """
     import glob
     import json
-    import os
     import re
 
     repo = repo_dir or os.path.dirname(os.path.abspath(__file__))
@@ -112,13 +112,6 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q106_ivfpq_residual_topk": 13,
     "q107_ivfpq_refined_topk": 13,
     "q131_gdpr_delete": 13,
-    "q144_streaming_ewma_state": 13,
-    "q153_streaming_cusum_state": 13,
-    "q156_streaming_scd2_state": 13,
-    "q158_streaming_leaderboard": 13,
-    "q161_streaming_zonemaps": 13,
-    "q165_streaming_attribution": 13,
-    "q173_streaming_engagement": 13,
     # r14: dedup.bucket_pairs sizes its hot-bucket repartition from the
     # chunk-pair count (one sizing job) instead of the core count;
     # every query whose call graph reaches it (q32, q103, q128 moved up
@@ -133,8 +126,20 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q113_prefix_jaccard_join": 14,
     "q118_winnow_fingerprints": 14,
     "q128_keep_best_survivors": 14,
-    "q148_streaming_cluster_state": 14,
     "q171_split_leakage": 14,
+    # r15: one micro-batch store path (delivery, batch_id tagging,
+    # latest-batch reads, filesystem "no state yet") and one replay
+    # writer/reader for every stream query (q144-q173, moved up from 13
+    # and 14); build_state's histogram bin cap (q87)
+    "q87_matview_rollup": 15,
+    "q144_streaming_ewma_state": 15,
+    "q148_streaming_cluster_state": 15,
+    "q153_streaming_cusum_state": 15,
+    "q156_streaming_scd2_state": 15,
+    "q158_streaming_leaderboard": 15,
+    "q161_streaming_zonemaps": 15,
+    "q165_streaming_attribution": 15,
+    "q173_streaming_engagement": 15,
 }
 
 
@@ -167,7 +172,6 @@ def _ship_package(spark: SparkSession) -> None:
     The zip is built once per process as a ``session.artifact``, so it
     lives under the process-private root and is removed at exit.
     """
-    import os
     import zipfile
 
     from bloomy_etl_spark.session import artifact

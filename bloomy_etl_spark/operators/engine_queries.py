@@ -1498,23 +1498,44 @@ def _replay_state(spark: SparkSession, key: tuple, start) -> str:
     return artifact((key[0], id(spark), *key[1:]), build)
 
 
+# Every stream replay arrives as this many micro-batches.
+_REPLAY_SLICES = 3
+
+
+def _sliced_stream(spark: SparkSession, base: str, slice_) -> DataFrame:
+    """Write ``slice_(b)`` for each b < ``_REPLAY_SLICES`` as one file
+    under ``base/replay/b{b}``, order the files by b and return a
+    stream reading one file per micro-batch, so batch ``b`` is slice
+    ``b``."""
+    from bloomy_etl_spark.streaming.sources import (
+        _order_mtimes,
+        read_docs_stream,
+    )
+
+    replay = os.path.join(base, "replay")
+    for b in range(_REPLAY_SLICES):
+        slice_(b).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(replay, f"b{b}")
+        )
+    _order_mtimes(replay)
+    return read_docs_stream(spark, os.path.join(replay, "b*"))
+
+
 def _ordered_events(spark: SparkSession, sf_dir: str, base: str,
                     col) -> DataFrame:
-    """The events fixture as a stream of three time-ordered
-    micro-batches (``replay_dir_ordered`` under ``base/replay``, one
-    file per trigger), projected to (user_id, eus, event_id, ``col``).
-    The schema is inferred from the replay files rather than taken from
-    ``_EVENTS_RAW_SCHEMA``: fixture generations differ."""
-    from bloomy_etl_spark.streaming.sources import replay_dir_ordered
+    """The events fixture as a stream of time-ordered micro-batches
+    (``replay_dir_ordered`` under ``base/replay``, one file per
+    trigger), projected to (user_id, eus, event_id, ``col``)."""
+    from bloomy_etl_spark.streaming.sources import (
+        read_docs_stream,
+        replay_dir_ordered,
+    )
 
     replay = replay_dir_ordered(
-        spark, sf_dir, os.path.join(base, "replay"), n_files=3
+        spark, sf_dir, os.path.join(base, "replay"), n_files=_REPLAY_SLICES
     )
-    return (
-        spark.readStream.schema(spark.read.parquet(replay).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-        .select("user_id", F.unix_micros("ts").alias("eus"), "event_id", col)
+    return read_docs_stream(spark, replay).select(
+        "user_id", F.unix_micros("ts").alias("eus"), "event_id", col
     )
 
 
@@ -1675,20 +1696,11 @@ def q148_streaming_cluster_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     def start(base: str):
         docs = _t(spark, sf_dir, "documents", fan_out=True)
         pairs = ngram_jaccard_pairs(docs).select("i", "j")
-        replay = os.path.join(base, "replay")
         # hash-sliced batches: arrival order is provably irrelevant
-        # (confluence), so no mtime choreography is needed here
-        for bi in range(3):
-            pairs.filter(
-                F.pmod(F.xxhash64("i", "j"), F.lit(3)) == bi
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(replay, f"b{bi}")
-            )
-        stream = (
-            spark.readStream.schema("i long, j long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(replay, "b*"))
-        )
+        # (confluence)
+        stream = _sliced_stream(spark, base, lambda b: pairs.filter(
+            F.pmod(F.xxhash64("i", "j"), F.lit(_REPLAY_SLICES)) == b
+        ))
         return streaming_cc_ingest(
             stream,
             os.path.join(base, "state"),
@@ -2003,20 +2015,13 @@ def q158_streaming_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.brand").alias("loser"),
             F.col("a.ok").alias("ok"),
         )
-        replay = os.path.join(base, "replay")
         # hash-sliced batches: counts are additive, arrival order is
         # provably irrelevant (the q148 confluence argument)
-        for bi in range(3):
-            duels.filter(
-                F.pmod(F.xxhash64("winner", "loser", "ok"), F.lit(3)) == bi
-            ).select("winner", "loser").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(replay, f"b{bi}"))
-        stream = (
-            spark.readStream.schema("winner string, loser string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(replay, "b*"))
-        )
+        key = F.pmod(F.xxhash64("winner", "loser", "ok"),
+                     F.lit(_REPLAY_SLICES))
+        stream = _sliced_stream(spark, base, lambda b: duels.filter(
+            key == b
+        ).select("winner", "loser"))
         return streaming_duel_ingest(
             stream,
             os.path.join(base, "state"),
@@ -2122,23 +2127,10 @@ def q161_streaming_zonemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(256),
             ).cast("long").alias("yb"),
         )
-        replay = os.path.join(base, "replay")
-        for bi in range(3):
-            ev.filter(F.col("event_id") % 3 == bi).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(replay, f"b{bi}"))
-        # pin arrival order so foreachBatch batch_id b == slice b
-        import glob
-
-        for i, p in enumerate(
-            sorted(glob.glob(os.path.join(replay, "b*", "part-*")))
-        ):
-            os.utime(p, (1_000_000 + 10 * i, 1_000_000 + 10 * i))
-        stream = (
-            spark.readStream.schema("event_id long, xb long, yb long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(replay, "b*"))
-        )
+        # slice b is batch_id b, which the oracle replays
+        stream = _sliced_stream(spark, base, lambda b: ev.filter(
+            F.col("event_id") % _REPLAY_SLICES == b
+        ))
         return streaming_zonemap_ingest(
             stream,
             os.path.join(base, "state"),
@@ -2680,18 +2672,9 @@ def q173_streaming_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
         )
-        replay = os.path.join(base, "replay")
-        for bi in range(3):
-            ev.filter(
-                F.pmod(F.xxhash64("event_id"), F.lit(3)) == bi
-            ).select("day", "user_id").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(replay, f"b{bi}"))
-        stream = (
-            spark.readStream.schema("day long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(replay, "b*"))
-        )
+        stream = _sliced_stream(spark, base, lambda b: ev.filter(
+            F.pmod(F.xxhash64("event_id"), F.lit(_REPLAY_SLICES)) == b
+        ).select("day", "user_id"))
         return streaming_active_ingest(
             stream,
             os.path.join(base, "state"),

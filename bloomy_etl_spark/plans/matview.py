@@ -31,6 +31,8 @@ _FNS = frozenset(
     {"count_rows", "count", "sum", "min", "max", "avg", "stddev_pop",
      "approx_count_distinct", "approx_percentile"}
 )
+# codegen bound for the inline per-bin sum expressions in build_state
+_MAX_PCTL_BINS = 512
 _OPS = {
     "=": lambda c, v: c == v,
     "!=": lambda c, v: c != v,
@@ -116,6 +118,11 @@ def build_state(df: DataFrame, keys: Sequence[str],
         from bloomy_etl_spark.operators.sketches import hist_bin_col
 
         lo, hi, nb = float(lo), float(hi), int(nb)
+        if not hi > lo:
+            raise ValueError(f"percentile col {c}: need hi > lo")
+        if not 1 <= nb <= _MAX_PCTL_BINS:
+            raise ValueError(
+                f"percentile col {c}: n_bins must be in [1, {_MAX_PCTL_BINS}]")
         v = F.col(c).cast("double")
         b = hist_bin_col(v, lo, hi, nb)
         one = F.lit(1).cast("long")

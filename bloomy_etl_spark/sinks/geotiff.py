@@ -48,6 +48,22 @@ def _densify(pdf: pd.DataFrame, width: int, height: int, var: str) -> np.ndarray
     return arr
 
 
+def _export_grid(px: DataFrame,
+                 grid: tuple[int, int] | None) -> tuple[int, int]:
+    """The full-resolution export grid ``(width, height)`` shared by the
+    per-date export sinks: ``grid`` when given, else computed ONCE
+    globally with one max-aggregate over the cube, never per date."""
+    if grid is not None:
+        return grid
+    extent = px.agg(F.max("x").alias("mx"), F.max("y").alias("my")).first()
+    if extent["mx"] is None:
+        raise ValueError(
+            "cannot infer the export grid from an empty cube; pass "
+            "grid=(width, height) explicitly or skip the export"
+        )
+    return int(extent["mx"]) + 1, int(extent["my"]) + 1
+
+
 def _write_one(date: str, ndvi: np.ndarray, evi: np.ndarray, out_dir: str,
                transform6: tuple | None) -> tuple[str, str]:
     """Write one timestamp's 2-band raster; returns (path, writer-kind)."""
@@ -110,7 +126,7 @@ def export_geotiff(
     max-derived shapes would silently crop trailing all-masked rows/cols
     and desync the transform from pixel indexing). When ``grid`` is None
     it is computed ONCE globally (one cheap max-aggregate over the cube),
-    never per date.
+    never per date; an empty cube then raises ``ValueError``.
 
     Downsample is the reference's stride trick (``core/arcgis.py:47-61``,
     P7/F16): a modulo predicate BEFORE the shuffle, so the network moves
@@ -120,10 +136,7 @@ def export_geotiff(
     """
     os.makedirs(out_dir, exist_ok=True)
     px = cube.withColumn("date", F.date_format("time", "yyyy-MM-dd"))
-    if grid is None:
-        extent = px.agg(F.max("x").alias("mx"), F.max("y").alias("my")).first()
-        grid = (int(extent["mx"]) + 1, int(extent["my"]) + 1)
-    width, height = grid
+    width, height = _export_grid(px, grid)
     if downsample > 1:
         px = (
             px.filter((F.col("y") % downsample == 0) & (F.col("x") % downsample == 0))

@@ -41,26 +41,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_valid", T.LongType()),
-        T.StructField("writer", T.StringType()),
-    ]
+from bloomy_etl_spark.sinks.geotiff import (
+    MANIFEST_SCHEMA,
+    _densify,
+    _export_grid,
 )
 
 CUBE_SCHEMA = "time timestamp, y int, x int, ndvi double, evi double"
-
-
-def _densify(pdf: pd.DataFrame, width: int, height: int, var: str) -> np.ndarray:
-    arr = np.full((height, width), np.nan, dtype=np.float32)
-    arr[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[var].to_numpy(dtype=np.float32)
-    return arr
 
 
 def _write_one(date: str, time_iso: str, ndvi: np.ndarray, evi: np.ndarray,
@@ -119,15 +107,7 @@ def export_netcdf(cube: DataFrame, out_dir: str,
     """
     os.makedirs(out_dir, exist_ok=True)
     px = cube.withColumn("date", F.date_format("time", "yyyy-MM-dd"))
-    if grid is None:
-        extent = px.agg(F.max("x").alias("mx"), F.max("y").alias("my")).first()
-        if extent["mx"] is None:
-            raise ValueError(
-                "cannot infer the export grid from an empty cube; pass "
-                "grid=(width, height) explicitly or skip the export"
-            )
-        grid = (int(extent["mx"]) + 1, int(extent["my"]) + 1)
-    width, height = grid
+    width, height = _export_grid(px, grid)
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:

@@ -9,7 +9,10 @@ event detection over the growing time series
 them on unbounded input:
 
   * :mod:`sources` — file-based streaming reads of the fixture tables
-    (micro-batch replay of the ``events`` parquet);
+    (micro-batch replays of the ``events`` and ``documents`` parquet,
+    their arrival order and the replay reader);
+  * :mod:`ingest` — the stream ingests over durable per-batch stores,
+    all delivered through one micro-batch store path;
   * :mod:`windows` — watermark + tumbling/sliding/session window
     aggregations and streaming deduplication;
   * :mod:`stateful` — incremental event detection with

@@ -14,13 +14,20 @@ outlive the streaming query, be shared with batch jobs, and be readable
 by the next run — a parquet table IS that state.
 ``applyInPandasWithState`` state is checkpoint-private and per-key.
 
-Delivery semantics: foreachBatch is at-least-once on retry — a batch
-that fails mid-append can leave partial files. Every store row carries
-its ``batch_id``, so the ``read_*`` helpers collapse replays per
-``(batch_id, key)``.
+Delivery: every ingest runs through :func:`_run_batches` (availableNow
+trigger, checkpointed progress). foreachBatch is at-least-once — a
+restarted query re-delivers its last uncommitted batch under the same
+``batch_id``, and a batch that fails mid-append can leave partial files.
+So :func:`_append` tags every store row with its ``batch_id``, a batch
+reads prior state from every batch but its own, and :func:`_latest`
+takes each key's row from its highest ``batch_id``: a replay re-appends
+identical rows, which collapse on read.
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,68 +35,50 @@ from pyspark.sql import functions as F
 from bloomy_etl_spark.session import pin
 
 
-def _read_or_empty(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
-    """Read a parquet state table, or an empty frame with ``like``'s
-    schema before the first batch has created it.
-
-    ONLY the path-missing analysis error is absorbed — a corrupt footer,
-    permission failure, or listing error must fail the batch loudly
-    (silently deduping against an empty history would admit known
-    duplicates and never record it)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return spark.createDataFrame([], like.schema)
-        raise
-
-
-def _order_mtimes(out_dir: str) -> None:
-    """Bump part-file mtimes in name (= range-slice) order: the file
-    stream source orders batches by modification time, and one parquet
-    write's N part files can share an mtime — tie order is arbitrary,
-    which would silently break the monotone-arrival contract an
-    order-sensitive replay assumes."""
-    import glob
-    import os
-
-    parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
-    base = os.stat(parts[0]).st_mtime if parts else 0
-    for i, pth in enumerate(parts):
-        os.utime(pth, (base + i, base + i))
-
-
-def replay_docs_dir(spark: SparkSession, sf_dir: str, out_dir: str,
-                    n_files: int = 4) -> str:
-    """Materialize the ``documents`` fixture as ``n_files`` id-ordered
-    parquet files so a file-source stream replays it as ``n_files``
-    deterministic micro-batches (the documents analogue of
-    ``sources.replay_dir``)."""
-    from bloomy_etl_spark.sources.tables import load_table
-
-    (
-        load_table(spark, sf_dir, "documents")
-        .repartitionByRange(n_files, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    _order_mtimes(out_dir)
-    return out_dir
-
-
-def read_docs_stream(spark: SparkSession, path: str,
-                     max_files_per_trigger: int = 1) -> DataFrame:
-    """File-source stream over a directory written by
-    :func:`replay_docs_dir`."""
-    schema = spark.read.parquet(path).schema
+def _run_batches(stream: DataFrame, checkpoint_dir: str, fn):
+    """Start ``stream`` with ``fn(batch, batch_id)`` run on each
+    micro-batch until the backlog present at start is consumed, its
+    progress checkpointed in ``checkpoint_dir``; returns the running
+    ``StreamingQuery``."""
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
+
+
+def _append(df: DataFrame, batch_id: int, path: str) -> None:
+    """Append ``df`` to the store at ``path``, each row tagged with its
+    ``batch_id`` as a LONG."""
+    df.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+        "append"
+    ).parquet(path)
+
+
+def _latest(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Each ``keys`` group's row from its highest ``batch_id``. Replayed
+    copies of a batch are identical, so which copy is kept is moot."""
+    w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The parquet store at ``path``, or an empty frame of the DDL
+    ``schema`` while there is no state yet: no directory, or one holding
+    no ``part-*`` file (what a crash before the first commit leaves).
+
+    Decided from the filesystem, not by reading and catching the
+    failure: a store that exists but is corrupt must fail the batch
+    loudly (deduping against an empty history would admit known
+    duplicates and never record it)."""
+    if not glob.glob(os.path.join(path, "part-*")):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
 
 
 def streaming_dsir_ingest(
@@ -123,16 +112,10 @@ def streaming_dsir_ingest(
     w = pin(weights)  # freeze: one tiny row, never re-derived per batch
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        dsir_score(batch, w, text_col=text_col, id_col=id_col).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(score_dir)
+        _append(dsir_score(batch, w, text_col=text_col, id_col=id_col),
+                batch_id, score_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs_stream, checkpoint_dir, process_batch)
 
 
 def read_dsir_store(spark: SparkSession, score_dir: str,
@@ -174,35 +157,21 @@ def streaming_ewma_ingest(
     broadcast-sized left join against the latest state). The store is
     an append-only per-batch delta ``(key, n_obs, last_v, ewma,
     batch_id)``; the reader takes each key's row from its latest
-    batch. At-least-once replays recompute from batches ``< own
-    batch_id`` and append identical rows; the reader collapses per
-    (batch_id, key).
+    batch. At-least-once replays recompute from every other batch and
+    append identical rows, which that pick collapses.
     """
     from bloomy_etl_spark.operators.timeseries import ewma_last
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        like_schema = (
+        stored = _read_or_empty(
+            batch.sparkSession, state_dir,
             f"{key_col} long, n_obs long, last_v long, ewma long, "
-            "batch_id long"
+            "batch_id long",
         )
-        prior = (
-            _read_or_empty(
-                spark, state_dir, spark.createDataFrame([], like_schema)
-            )
-            .filter(F.col("batch_id") != batch_id)
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(key_col).orderBy(
-                        F.col("batch_id").desc()
-                    )
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .select(key_col, F.col("n_obs").alias("__pn"),
-                    F.col("ewma").alias("__ps"))
-        )
+        prior = _latest(
+            stored.filter(F.col("batch_id") != batch_id), [key_col]
+        ).select(key_col, F.col("n_obs").alias("__pn"),
+                 F.col("ewma").alias("__ps"))
         seq = batch.groupBy(key_col).agg(
             F.array_sort(
                 F.collect_list(F.struct(ts_col, order_col, val_col))
@@ -219,40 +188,24 @@ def streaming_ewma_ingest(
             )
 
         init = F.coalesce(F.col("__ps"), F.lit(-1).cast("long"))
-        out = (
-            seq.join(prior, key_col, "left")
-            .select(
-                key_col,
-                (F.coalesce(F.col("__pn"), F.lit(0))
-                 + F.size("__seq")).cast("long").alias("n_obs"),
-                F.element_at(F.col("__seq"), -1)[val_col].alias("last_v"),
-                F.aggregate(F.col("__seq"), init, _step).alias("ewma"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
+        out = seq.join(prior, key_col, "left").select(
+            key_col,
+            (F.coalesce(F.col("__pn"), F.lit(0))
+             + F.size("__seq")).cast("long").alias("n_obs"),
+            F.element_at(F.col("__seq"), -1)[val_col].alias("last_v"),
+            F.aggregate(F.col("__seq"), init, _step).alias("ewma"),
         )
-        out.write.mode("append").parquet(state_dir)
+        _append(out, batch_id, state_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events_stream, checkpoint_dir, process_batch)
 
 
 def read_ewma_state(spark: SparkSession, state_dir: str,
                     key_col: str = "user_id") -> DataFrame:
     """Each key's latest ``(key, n_obs, last_v, ewma)`` from the
-    delta store — replay-duplicated batches collapse per (batch_id,
-    key) before the per-key latest is taken."""
-    st = spark.read.parquet(state_dir).dropDuplicates(
-        ["batch_id", key_col]
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col("batch_id").desc())
-    return (
-        st.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(key_col, "n_obs", "last_v", "ewma")
+    delta store."""
+    return _latest(spark.read.parquet(state_dir), [key_col]).select(
+        key_col, "n_obs", "last_v", "ewma"
     )
 
 
@@ -281,38 +234,24 @@ def streaming_cusum_ingest(
     Per batch: one key-keyed fold over the batch's sorted in-row
     arrays, seeded from each key's stored ``n_alerts·enc + resid``.
     Durable store/replay semantics are the EWMA ingest's: append-only
-    per-batch deltas, reader collapses per (batch_id, key), replays
+    per-batch deltas, the reader takes each key's latest batch, replays
     rewrite identical rows.
     """
     if threshold >= enc:
         raise ValueError("threshold must be < enc (state packing)")
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        like_schema = (
+        stored = _read_or_empty(
+            batch.sparkSession, state_dir,
             f"{key_col} long, n_obs long, n_alerts long, resid long, "
-            "batch_id long"
+            "batch_id long",
         )
-        prior = (
-            _read_or_empty(
-                spark, state_dir, spark.createDataFrame([], like_schema)
-            )
-            .filter(F.col("batch_id") != batch_id)
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(key_col).orderBy(
-                        F.col("batch_id").desc()
-                    )
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .select(
-                key_col,
-                F.col("n_obs").alias("__pn"),
-                (F.col("n_alerts") * F.lit(enc) + F.col("resid"))
-                .alias("__ps"),
-            )
+        prior = _latest(
+            stored.filter(F.col("batch_id") != batch_id), [key_col]
+        ).select(
+            key_col,
+            F.col("n_obs").alias("__pn"),
+            (F.col("n_alerts") * F.lit(enc) + F.col("resid")).alias("__ps"),
         )
         seq = batch.groupBy(key_col).agg(
             F.array_sort(
@@ -337,39 +276,25 @@ def streaming_cusum_ingest(
                 (F.coalesce(F.col("__pn"), F.lit(0))
                  + F.size("__seq")).cast("long").alias("n_obs"),
                 state.alias("__st"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
             )
             .select(
                 key_col,
                 "n_obs",
                 F.expr(f"__st DIV CAST({enc} AS BIGINT)").alias("n_alerts"),
                 (F.col("__st") % F.lit(enc)).alias("resid"),
-                "batch_id",
             )
         )
-        out.write.mode("append").parquet(state_dir)
+        _append(out, batch_id, state_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events_stream, checkpoint_dir, process_batch)
 
 
 def read_cusum_state(spark: SparkSession, state_dir: str,
                      key_col: str = "user_id") -> DataFrame:
     """Each key's latest ``(key, n_obs, n_alerts, resid)`` from the
-    delta store — replay-duplicated batches collapse per (batch_id,
-    key) before the per-key latest is taken."""
-    st = spark.read.parquet(state_dir).dropDuplicates(
-        ["batch_id", key_col]
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col("batch_id").desc())
-    return (
-        st.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(key_col, "n_obs", "n_alerts", "resid")
+    delta store."""
+    return _latest(spark.read.parquet(state_dir), [key_col]).select(
+        key_col, "n_obs", "n_alerts", "resid"
     )
 
 
@@ -403,21 +328,14 @@ def streaming_scd2_ingest(
     from bloomy_etl_spark.operators.history import scd2_compact
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        like_schema = (
+        stored = _read_or_empty(
+            batch.sparkSession, state_dir,
             f"{key_col} long, version long, {attr_col} string, "
-            "valid_from long, valid_to long, n_rows long, batch_id long"
+            "valid_from long, valid_to long, n_rows long, batch_id long",
         )
-        w_ver = Window.partitionBy(key_col, "version").orderBy(
-            F.col("batch_id").desc()
-        )
-        prior = (
-            _read_or_empty(
-                spark, state_dir, spark.createDataFrame([], like_schema)
-            )
-            .filter(F.col("batch_id") != batch_id)
-            .withColumn("__rn", F.row_number().over(w_ver))
-            .filter(F.col("__rn") == 1)
+        prior = _latest(
+            stored.filter(F.col("batch_id") != batch_id),
+            [key_col, "version"],
         )
         open_run = prior.filter(F.col("valid_to").isNull()).select(
             key_col,
@@ -468,34 +386,18 @@ def streaming_scd2_ingest(
             F.col("__bfrom").alias("valid_to"),
             F.col("__on").cast("long").alias("n_rows"),
         )
-        out = out_runs.unionByName(closed).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        out.write.mode("append").parquet(state_dir)
+        _append(out_runs.unionByName(closed), batch_id, state_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events_stream, checkpoint_dir, process_batch)
 
 
 def read_scd2_state(spark: SparkSession, state_dir: str,
                     key_col: str = "user_id") -> DataFrame:
     """The current interval table from the run store: latest row per
-    (key, version), replay duplicates collapsed first."""
-    st = spark.read.parquet(state_dir).dropDuplicates(
-        ["batch_id", key_col, "version"]
-    )
-    w = Window.partitionBy(key_col, "version").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        st.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "batch_id")
-    )
+    (key, version)."""
+    return _latest(
+        spark.read.parquet(state_dir), [key_col, "version"]
+    ).drop("batch_id")
 
 
 def streaming_duel_ingest(
@@ -523,17 +425,9 @@ def streaming_duel_ingest(
     from bloomy_etl_spark.operators.preference import duel_counts
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        out = duel_counts(batch, winner, loser).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        out.write.mode("append").parquet(state_dir)
+        _append(duel_counts(batch, winner, loser), batch_id, state_dir)
 
-    return (
-        duels_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(duels_stream, checkpoint_dir, process_batch)
 
 
 def read_duel_counts(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -578,17 +472,9 @@ def streaming_zonemap_ingest(
             batch, x_col, y_col, order_col,
             bits=bits, rows_per_file=rows_per_file,
         )
-        out = zone_maps(laid, x_col, y_col).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        out.write.mode("append").parquet(state_dir)
+        _append(zone_maps(laid, x_col, y_col), batch_id, state_dir)
 
-    return (
-        rows_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(rows_stream, checkpoint_dir, process_batch)
 
 
 def read_zonemap_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -646,13 +532,9 @@ def streaming_attribution_ingest(
     """
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         prior = (
-            _read_or_empty(
-                spark, state_dir,
-                spark.createDataFrame([], "user_id long, lt long, "
-                                          "batch_id long"),
-            )
+            _read_or_empty(batch.sparkSession, state_dir,
+                           "user_id long, lt long, batch_id long")
             .filter(F.col("batch_id") != batch_id)
             .groupBy("user_id")
             .agg(F.max("lt").alias("__plt"))
@@ -685,20 +567,12 @@ def streaming_attribution_ingest(
                 F.when(F.col("__lt") % 10 == 2, "click").otherwise("view"),
             ).otherwise("direct").alias("channel"),
             F.when(in_w, F.col("eus") - t_eus).cast("long").alias("lag_us"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
         )
-        facts.write.mode("append").parquet(facts_dir)
-        state = tagged.groupBy("user_id").agg(
-            F.max("__lt").alias("lt")
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        state.write.mode("append").parquet(state_dir)
+        _append(facts, batch_id, facts_dir)
+        _append(tagged.groupBy("user_id").agg(F.max("__lt").alias("lt")),
+                batch_id, state_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events_stream, checkpoint_dir, process_batch)
 
 
 def read_attributed_facts(spark: SparkSession, facts_dir: str) -> DataFrame:
@@ -727,19 +601,10 @@ def streaming_active_ingest(
     (batch_id, day, user)."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        out = (
-            batch.select("day", "user_id")
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
-        out.write.mode("append").parquet(state_dir)
+        _append(batch.select("day", "user_id").distinct(), batch_id,
+                state_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events_stream, checkpoint_dir, process_batch)
 
 
 def read_active_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -781,7 +646,6 @@ def streaming_cc_ingest(
     snapshots are never touched), so at-least-once delivery is
     idempotent. Snapshots are an audit trail; readers take the latest.
     """
-    import os
     import re
 
     from bloomy_etl_spark.operators.dedup import connected_components
@@ -812,18 +676,12 @@ def streaming_cc_ingest(
             os.path.join(state_dir, f"b{batch_id}")
         )
 
-    return (
-        edges_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(edges_stream, checkpoint_dir, process_batch)
 
 
 def read_cc_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest (node, label) snapshot written by
     :func:`streaming_cc_ingest`."""
-    import os
     import re
 
     ids = [int(m.group(1)) for d in os.listdir(state_dir)

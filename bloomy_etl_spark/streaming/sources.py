@@ -1,4 +1,4 @@
-"""Streaming sources: micro-batch replay of the events table.
+"""Streaming sources: micro-batch replays of the fixture tables.
 
 The reference's ingestion loop processes granules in batches of 10 with a
 pause between batches (``/root/reference/core/pipeline.py:98-124``) — a
@@ -14,6 +14,7 @@ Kafka source — every downstream operator in :mod:`windows` /
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,22 +71,63 @@ def read_events_stream(
     return reader.parquet(path)
 
 
-def replay_dir_ordered(spark: SparkSession, sf_dir: str, out_dir: str,
-                       n_files: int = 8) -> str:
-    """:func:`replay_dir` with DETERMINISTIC arrival order: the file
-    stream source picks batches by modification time, and the N part
-    files of one parquet write can share an mtime — tie order is
-    arbitrary, which silently breaks the ordered-arrival contract the
-    continuation-fold ingests (EWMA, funnel) are tested under. This
-    helper bumps each part file's mtime in time-slice order (1 s
-    apart), so ``maxFilesPerTrigger=1`` replays the slices exactly in
-    event-time order."""
-    import glob
-    import os
-
-    replay_dir(spark, sf_dir, out_dir, n_files=n_files)
-    parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
+def _order_mtimes(out_dir: str) -> None:
+    """Give the part files under ``out_dir``, slice subdirectories
+    included, mtimes 1 s apart in path order. The file stream source
+    picks batches by modification time, and the part files of one
+    parquet write can share an mtime: tie order is arbitrary, which
+    would silently break the arrival order an order-sensitive replay
+    assumes."""
+    parts = sorted(
+        glob.glob(os.path.join(out_dir, "**", "part-*"), recursive=True)
+    )
     base = os.stat(parts[0]).st_mtime if parts else 0
     for i, p in enumerate(parts):
         os.utime(p, (base + i, base + i))
+
+
+def replay_dir_ordered(spark: SparkSession, sf_dir: str, out_dir: str,
+                       n_files: int = 8) -> str:
+    """:func:`replay_dir` with DETERMINISTIC arrival order: the part
+    files are ordered by time slice (:func:`_order_mtimes`), so
+    ``maxFilesPerTrigger=1`` replays the slices exactly in event-time
+    order — the ordered-arrival contract the continuation-fold ingests
+    (EWMA, CUSUM, SCD2) are tested under."""
+    replay_dir(spark, sf_dir, out_dir, n_files=n_files)
+    _order_mtimes(out_dir)
     return out_dir
+
+
+def replay_docs_dir(spark: SparkSession, sf_dir: str, out_dir: str,
+                    n_files: int = 4) -> str:
+    """Materialize the ``documents`` fixture as ``n_files`` id-ordered
+    parquet files so a file-source stream replays it as ``n_files``
+    deterministic micro-batches (the documents analogue of
+    :func:`replay_dir_ordered`)."""
+    from ..sources.tables import load_table
+
+    (
+        load_table(spark, sf_dir, "documents")
+        .repartitionByRange(n_files, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .parquet(out_dir)
+    )
+    _order_mtimes(out_dir)
+    return out_dir
+
+
+def read_docs_stream(spark: SparkSession, path: str,
+                     max_files_per_trigger: int = 1) -> DataFrame:
+    """File-source stream over a replay written by this module or over
+    mtime-ordered slice directories (``path`` may be a glob), taking
+    ``max_files_per_trigger`` files per micro-batch. The schema is read
+    from the first part file, not declared: fixture generations differ.
+    (A batch read of a glob path would log a failed metadata-directory
+    lookup with a stack trace.)"""
+    first = min(glob.glob(os.path.join(path, "part-*")))
+    return (
+        spark.readStream.schema(spark.read.parquet(first).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )

@@ -205,3 +205,29 @@ def test_hash_red_rows_do_not_count_as_green():
         last = entry._last_green_round(d)
     assert last == {"q_green": 3, "q_rows_only": 3}
     importlib.reload(entry)  # restore module-level state just in case
+
+
+def test_entry_point_imports_the_package_beside_it(tmp_path):
+    """A process that imports ``__spark_entry__`` from some checkout
+    before ``bloomy_etl_spark`` must run that checkout's package, not
+    one at a fixed path."""
+    import pathlib
+    import shutil
+    import subprocess
+
+    copy = tmp_path / "checkout"
+    copy.mkdir()
+    shutil.copy2(os.path.join(REPO, "__spark_entry__.py"), copy)
+    shutil.copytree(os.path.join(REPO, "bloomy_etl_spark"),
+                    copy / "bloomy_etl_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "import __spark_entry__, bloomy_etl_spark; "
+            "print(__spark_entry__.__file__); print(bloomy_etl_spark.__file__)")
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(copy)], cwd=tmp_path,
+        capture_output=True, text=True, check=True, timeout=300,
+    ).stdout.split()
+    assert len(out) == 2
+    for path in out:
+        assert pathlib.Path(path).resolve().is_relative_to(copy.resolve()), out

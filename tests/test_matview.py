@@ -184,6 +184,23 @@ def test_percentile_legality_and_validation(spark):
                  ).validate()
 
 
+@pytest.mark.parametrize("spec, cause", [
+    ((0.0, 10.0, 0), "n_bins"),
+    ((0.0, 10.0, 513), "n_bins"),
+    ((0.0, 10.0, 100_000), "n_bins"),
+    ((10.0, 10.0, 8), "hi > lo"),
+    ((10.0, 0.0, 8), "hi > lo"),
+], ids=["0-bins", "513-bins", "100k-bins", "empty-range", "reversed-range"])
+def test_build_state_rejects_histogram_outside_contract(spark, spec, cause):
+    """The per-bin sums are one aggregate column each: bin counts are
+    capped at 512 and the range must be non-empty, named in the error."""
+    with pytest.raises(ValueError, match=f"percentile col amount: .*{cause}"):
+        build_state(_sales(spark), ["region"], ["amount"],
+                    percentile_cols={"amount": spec})
+    build_state(_sales(spark), ["region"], ["amount"],
+                percentile_cols={"amount": (0.0, 10.0, 512)})
+
+
 def test_percentile_tail_clamps_to_observed_extremes(spark):
     # histogram range deliberately misses the data: everything lands in
     # the under/overflow tails, estimates clamp to exact min/max

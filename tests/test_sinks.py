@@ -203,3 +203,18 @@ def test_index_json_exact_bytes(spark, tmp_path):
     ])
     empty = open(write_index_json(cube.limit(0), str(tmp_path / "empty.json"))).read()
     assert empty == _index_bytes(None, None, [])
+
+
+@pytest.mark.parametrize("sink", ["geotiff", "netcdf"])
+def test_export_of_empty_cube_names_the_cause(spark, tmp_path, sink):
+    """Both per-date export sinks share one grid inference: an empty cube
+    without ``grid`` has no extent and raises a ValueError saying so (the
+    GeoTIFF sink used to fail with a TypeError from ``int(None)``); with
+    an explicit grid it exports nothing."""
+    from bloomy_etl_spark.sinks import export_netcdf
+
+    export = {"geotiff": export_geotiff, "netcdf": export_netcdf}[sink]
+    empty = make_cube(spark).limit(0)
+    with pytest.raises(ValueError, match="empty cube"):
+        export(empty, str(tmp_path / "out"))
+    assert export(empty, str(tmp_path / "out"), grid=(2, 2)).count() == 0

@@ -361,10 +361,12 @@ class TestDsirIngest:
         from bloomy_etl_spark.operators.corpus import dsir_score, dsir_weights
         from bloomy_etl_spark.sources.tables import load_table
         from bloomy_etl_spark.streaming.ingest import (
-            read_docs_stream,
             read_dsir_store,
-            replay_docs_dir,
             streaming_dsir_ingest,
+        )
+        from bloomy_etl_spark.streaming.sources import (
+            read_docs_stream,
+            replay_docs_dir,
         )
         from tests.conftest import SF_ORACLE
 
@@ -1331,3 +1333,187 @@ class TestCcIngest:
         connected_components(edges, converge=True).write.mode(
             "overwrite").parquet(os.path.join(state, "b2"))
         assert self._labels(spark, state) == before
+
+
+def _write_slices(spark, replay, slices, ddl):
+    """Each row list as one single-file slice ``replay/b{i}``, in
+    arrival order; returns the glob the stream reads."""
+    from bloomy_etl_spark.streaming.sources import _order_mtimes
+
+    for i, rows in enumerate(slices):
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(
+            str(replay / f"b{i}")
+        )
+    _order_mtimes(str(replay))
+    return str(replay / "b*")
+
+
+class TestRestartReplaysLastBatch:
+    """At-least-once delivery through the ingest itself: an ingest whose
+    last commit is lost re-runs that batch under the same batch_id when
+    restarted on its checkpoint. The re-run must read prior state from
+    the OTHER batches only (its own first append is already in the
+    store), append rows identical to the first run's, and leave the
+    reader's state unchanged."""
+
+    def _restart(self, spark, tmp_path, ingest, slices, ddl, read):
+        from bloomy_etl_spark.streaming.sources import read_docs_stream
+
+        replay = _write_slices(spark, tmp_path / "replay", slices, ddl)
+        state, ckpt = str(tmp_path / "state"), tmp_path / "ckpt"
+
+        def run():
+            ingest(read_docs_stream(spark, replay), state,
+                   checkpoint_dir=str(ckpt)).awaitTermination(120)
+
+        run()
+        first = {tuple(r) for r in read(spark, state).collect()}
+        last = len(slices) - 1
+
+        def stored():
+            return sorted((tuple(r) for r in spark.read.parquet(state)
+                           .filter(F.col("batch_id") == last).collect()),
+                          key=repr)
+
+        appended = stored()
+        os.remove(ckpt / "commits" / str(last))
+        if (ckpt / "commits" / f".{last}.crc").exists():
+            os.remove(ckpt / "commits" / f".{last}.crc")
+        run()
+        # the batch really ran again, and appended the same rows
+        assert stored() == sorted(appended * 2, key=repr)
+        assert {tuple(r) for r in read(spark, state).collect()} == first
+        return first
+
+    def test_ewma(self, spark, tmp_path):
+        from bloomy_etl_spark.streaming.ingest import (
+            read_ewma_state,
+            streaming_ewma_ingest,
+        )
+
+        slices = [
+            [(1, 10, 1, 400), (2, 11, 2, 80)],
+            [(1, 20, 3, 0), (2, 21, 4, 800)],
+            [(1, 30, 5, 1200), (2, 31, 6, 40), (3, 32, 7, 8)],
+        ]
+        got = self._restart(
+            spark, tmp_path, streaming_ewma_ingest, slices,
+            "user_id long, eus long, event_id long, v long",
+            read_ewma_state,
+        )
+        # s ← (3·s + v) div 4, seeded by the first value
+        assert got == {(1, 3, 1200, 525), (2, 3, 40, 205), (3, 1, 8, 8)}
+
+    def test_scd2(self, spark, tmp_path):
+        from bloomy_etl_spark.streaming.ingest import (
+            read_scd2_state,
+            streaming_scd2_ingest,
+        )
+
+        slices = [
+            [(1, 10, 1, "a"), (2, 10, 2, "x")],
+            [(1, 20, 3, "a"), (1, 30, 4, "b")],
+            [(1, 40, 5, "b"), (1, 50, 6, "c"), (2, 60, 7, "y")],
+        ]
+        got = self._restart(
+            spark, tmp_path, streaming_scd2_ingest, slices,
+            "user_id long, eus long, event_id long, state string",
+            read_scd2_state,
+        )
+        assert got == {
+            (1, 1, "a", 10, 30, 2),
+            (1, 2, "b", 30, 50, 2),
+            (1, 3, "c", 50, None, 1),
+            (2, 1, "x", 10, 60, 1),
+            (2, 2, "y", 60, None, 1),
+        }
+
+
+class TestReadOrEmpty:
+    """The "no state yet" decision of the ingests' prior-state read is
+    made from the filesystem; a store that exists but is unreadable
+    still fails."""
+
+    DDL = "user_id long, lt long, batch_id long"
+
+    def _read(self, spark, path):
+        from bloomy_etl_spark.streaming.ingest import _read_or_empty
+
+        return _read_or_empty(spark, str(path), self.DDL)
+
+    def test_missing_store_is_empty(self, spark, tmp_path):
+        df = self._read(spark, tmp_path / "state")
+        assert df.schema.simpleString() == (
+            "struct<user_id:bigint,lt:bigint,batch_id:bigint>")
+        assert df.count() == 0
+
+    def test_store_without_part_files_is_empty(self, spark, tmp_path):
+        # what a crash before the first commit leaves behind
+        (tmp_path / "state" / "_temporary" / "0").mkdir(parents=True)
+        df = self._read(spark, tmp_path / "state")
+        assert df.schema.simpleString() == (
+            "struct<user_id:bigint,lt:bigint,batch_id:bigint>")
+        assert df.count() == 0
+
+    def test_corrupt_store_fails(self, spark, tmp_path):
+        (tmp_path / "state").mkdir()
+        (tmp_path / "state" / "part-0.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Exception, match="(?i)parquet"):
+            self._read(spark, tmp_path / "state").collect()
+
+
+# Each micro-batch idiom has one home (module, top-level definition):
+# the delivery policy, the arrival-order pinning and the replay readers.
+_STREAM_HOMES = {
+    r"\.foreachBatch\(": {("streaming/ingest.py", "_run_batches")},
+    r"\bos\.utime\(": {("streaming/sources.py", "_order_mtimes")},
+    r"\.readStream\b": {("streaming/sources.py", "read_docs_stream"),
+                        ("streaming/sources.py", "read_events_stream")},
+}
+
+
+def _stream_idiom_copies(path, rel: str) -> list[str]:
+    import ast
+    import re
+
+    src = path.read_text()
+    owner: dict[int, str] = {}
+    for node in ast.parse(src).body:
+        for n in range(node.lineno, node.end_lineno + 1):
+            owner[n] = getattr(node, "name", None)
+    return [f"{rel}:{n}: {m.group(0)}"
+            for n, line in enumerate(src.splitlines(), 1)
+            for pat, homes in _STREAM_HOMES.items()
+            for m in re.finditer(pat, line)
+            if (rel, owner.get(n)) not in homes]
+
+
+def test_stream_guard_flags_a_copy(tmp_path):
+    p = tmp_path / "sources.py"
+    p.write_text(
+        "def read_docs_stream(spark, p):\n"
+        "    return spark.readStream.parquet(p)\n"
+        "def mine(spark, q, p, fn):\n"
+        "    os.utime(p, (0, 0))\n"
+        "    q.writeStream.foreachBatch(fn)\n"
+        "    return spark.readStream.parquet(p)\n"
+    )
+    assert _stream_idiom_copies(p, "streaming/sources.py") == [
+        "streaming/sources.py:4: os.utime(",
+        "streaming/sources.py:5: .foreachBatch(",
+        "streaming/sources.py:6: .readStream",
+    ]
+
+
+def test_micro_batch_idioms_live_only_in_their_homes():
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bloomy_etl_spark"
+    found = [hit for p in sorted(pkg.rglob("*.py"))
+             for hit in _stream_idiom_copies(
+                 p, p.relative_to(pkg).as_posix())]
+    assert not found, (
+        "deliver micro-batches through streaming.ingest._run_batches, "
+        "pin arrival order through streaming.sources._order_mtimes and "
+        f"read replays through streaming.sources.read_docs_stream: {found}"
+    )

@@ -33,7 +33,7 @@ ROOT_FILES = ("__spark_entry__.py", "bench.py", "perfbench/*.py",
 ROOT_MODULES = ("bloomy_etl_spark.__main__", "bloomy_etl_spark.tools.*",
                 "bloomy_etl_spark.plans.explain")
 
-_REPLAY = ("stream-replay fixture: writes/reads the documents table as "
+_REPLAY = ("stream-replay fixture: writes the documents table as "
            "ordered micro-batches for the DSIR stream-ingest tests")
 _STREAMING = ("re-exported by bloomy_etl_spark.streaming (README "
               "'Supported surface': streaming API)")
@@ -52,8 +52,7 @@ _SCHEMA = ("input schema of a query operator; callers and tests build its "
 # A KEEP entry is itself a root for what it calls.
 KEEP: dict[str, str] = {
     "bloomy_etl_spark.__init__.__version__": "package version attribute",
-    "bloomy_etl_spark.streaming.ingest.replay_docs_dir": _REPLAY,
-    "bloomy_etl_spark.streaming.ingest.read_docs_stream": _REPLAY,
+    "bloomy_etl_spark.streaming.sources.replay_docs_dir": _REPLAY,
     "bloomy_etl_spark.streaming.ingest.streaming_dsir_ingest": (
         "streaming form of q121's dsir_score (README 'Supported surface': "
         "streaming API)"),

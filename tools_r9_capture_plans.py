@@ -12,7 +12,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -24,7 +24,8 @@ def main() -> None:
 
     spark = get_spark(app_name="r9-plan-capture")
     qmap = queries()
-    outdir = os.path.join("/root/repo", "plans", "r09")
+    outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "plans", "r09")
     os.makedirs(outdir, exist_ok=True)
     rows = []
     for name in sorted(qmap):
