@@ -90,8 +90,6 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q126_ann_recall": 9,
     # r10 optimization touches
     "q133_novelty_profile": 10,
-    # r11: run_pipeline pins the merged cube (plan gains a checkpoint)
-    "q38_bloomy_end_to_end": 11,
     # r12: literal/identifier SQL text moved into functions/sqltext
     # (k-means, PQ, LSH, k-center, power iteration), simhash's fold
     # rendered as SQL, keep_best_per_cluster's id-type guard; this also
@@ -140,6 +138,14 @@ _TOUCHED_IN_ROUND: dict[str, int] = {
     "q161_streaming_zonemaps": 15,
     "q165_streaming_attribution": 15,
     "q173_streaming_engagement": 15,
+    # r16: the same-day merge computes each date's merged timestamp and
+    # granule count once per date and carries them to the pixel rows
+    # (no per-pixel collect_set, no window over the merged rows);
+    # write_cube clusters by date. q38 moved up from 11 (run_pipeline's
+    # cube pin, plans/r11/)
+    "q23_bloomy_merged_cube": 16,
+    "q25_bloomy_event_detection": 16,
+    "q38_bloomy_end_to_end": 16,
 }
 
 

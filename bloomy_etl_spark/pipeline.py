@@ -19,28 +19,32 @@ and everything up to the first aggregate is pipelined per partition.
 Scale: the DAG is pixels → mask/indices (narrow, whole-stage codegen) →
 granule stats (hash agg on (tile_id, time) — the storage partitioning of
 raster data, so mostly partition-local) → gates + timestamp filter (on
-the per-granule STATS table, tiny at any scale) → semi-join back to
-pixels (broadcast: the kept-granule list is small) → merge (two hash
-aggs) → events (window over the per-day series). No collect touches
+the per-granule STATS table, tiny at any scale) → join back to pixels
+(broadcast: the kept-granule list is small, and it carries each date's
+merged timestamp and granule count, computed on the list) → merge (two
+hash aggs) → events (window over the per-day series). No collect touches
 pixel data; sinks write distributed.
 
 Materialization: the merged cube is pinned once (a lazy checkpoint, see
 ``session.pin``), so ``series``, ``events``, every sink in
 ``write_outputs`` and any later action read ONE materialization instead
-of each re-running scan → masks → stats → semi-join → merge (the
-reference likewise builds one cube object and writes it, its events and
-its index from that object, ``core/pipeline.py:166-176``). It also makes
-the sinks agree by construction: the float sums behind the cube, the
-index and the events come from one execution. The cube is bounded by
-(pixel grid × days), already collapsed over granules; the raw pixel table
-is not pinned (see the stats pin below).
+of each re-running scan → masks → stats → join → merge (the reference
+likewise builds one cube object and writes it, its events and its index
+from that object, ``core/pipeline.py:166-176``). It also makes the sinks
+agree by construction: the float sums behind the cube, the index and the
+events come from one execution. The cube is bounded by (pixel grid ×
+days), already collapsed over granules; the raw pixel table is not pinned
+(see the stats pin below). The pinned stats table is read once per cube:
+the kept list built from it feeds the broadcast join, and that same list
+supplies the same-day merge's date-level columns (one window per date
+over the list), so the merge adds no second read, broadcast or job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
@@ -49,7 +53,7 @@ from bloomy_etl_spark.session import pin
 from bloomy_etl_spark.functions.indices import DEFAULT_QUALITY, QualityThresholds
 from bloomy_etl_spark.functions.indices import with_indices, with_masks
 from bloomy_etl_spark.operators.events import detect_events, ndvi_series
-from bloomy_etl_spark.operators.merge import merge_all
+from bloomy_etl_spark.operators.merge import DAY_COLS, day_columns, merge_all
 from bloomy_etl_spark.operators.quality import (
     apply_granule_gates,
     filter_timestamps,
@@ -88,11 +92,9 @@ def run_pipeline(
     (``main.py:39-55``).
 
     ``carry_kept_day_count=True`` annotates every cube row with
-    ``n_kept_granules`` (surviving granules of that row's day). The count
-    rides the kept list INTO the broadcast join and through the merge
-    aggregates — consuming ``kept_stats`` in a second subtree instead
-    would re-execute the whole scan→stats chain, because column pruning
-    projects each consumer differently and defeats exchange reuse.
+    ``n_kept_granules`` (surviving granules of that row's day), carried
+    from the kept-granule list like the same-day merge's date-level
+    columns (see the broadcast join below).
     """
     time_type = raw_pixels.schema["time"].dataType
     if not isinstance(time_type, TimestampType):
@@ -129,22 +131,33 @@ def run_pipeline(
         flagged = filter_timestamps(gated, q)
         kept = flagged.filter(~F.col("rejected")).drop("rejected")
 
-    # Broadcast semi-join: pixels of kept granules only. The kept list is
-    # one row per granule — broadcastable at any raster scale.
+    # Broadcast join: pixels of kept granules only. The kept list is one
+    # row per granule — broadcastable at any raster scale — so the
+    # date-level columns the cube needs are computed on it, not on the
+    # pixels: one window per date over the pinned list. The same-day
+    # merge's timestamp set is the kept granules with at least one
+    # unmasked pixel (valid_px > 0), exactly the times present in the
+    # masked pixels below; ``n_kept_granules`` counts every kept granule.
+    # The annotations ride the broadcast INTO the pixel rows and pass
+    # through the merge aggregates as ``max`` carries — consuming
+    # ``kept_stats`` in a second subtree instead would re-execute the
+    # whole scan→stats chain, because column pruning projects each
+    # consumer differently and defeats exchange reuse.
     carry: tuple[str, ...] = ()
-    kept_sel = kept.select("tile_id", "time")
+    day = Window.partitionBy(F.to_date("time"))
+    annotations = []
+    if merge_same_day:
+        day_ts = F.collect_set(F.when(F.col("valid_px") > 0, F.col("time")))
+        annotations += day_columns(day_ts.over(day))
     if carry_kept_day_count:
-        from pyspark.sql import Window
-
-        kept_sel = kept_sel.withColumn(
-            "n_kept_granules",
-            F.count(F.lit(1)).over(Window.partitionBy(F.to_date("time"))),
-        )
+        annotations.append(F.count(F.lit(1)).over(day).alias("n_kept_granules"))
         carry = ("n_kept_granules",)
     # kept is one row per granule (distinct keys), so the inner join that
-    # carries the annotation has exactly the left_semi cardinality
+    # carries the annotations has exactly the left_semi cardinality
     good_px = px.filter(~F.col("mask")).join(
-        F.broadcast(kept_sel), ["tile_id", "time"], "inner" if carry else "left_semi"
+        F.broadcast(kept.select("tile_id", "time", *annotations)),
+        ["tile_id", "time"],
+        "inner" if annotations else "left_semi",
     )
     # Every consumer (series → events, the three sinks, follow-up counts)
     # reads the cube; unpinned, each one re-executes the whole chain above
@@ -155,7 +168,10 @@ def run_pipeline(
     # runs on the first action.
     cube = pin(
         merge_all(
-            good_px.select("tile_id", "time", "y", "x", "ndvi", "evi", *carry),
+            good_px.select(
+                "tile_id", "time", "y", "x", "ndvi", "evi",
+                *(DAY_COLS if merge_same_day else ()), *carry,
+            ),
             merge_same_day=merge_same_day,
             carry=carry,
         ),

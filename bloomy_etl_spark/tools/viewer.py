@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bloomy_etl_spark.sinks.geotiff import _densify
+
 
 class CubeViewer:
     """Viewer over a merged cube (parquet dir from ``sinks.write_cube`` or
@@ -109,12 +111,7 @@ class CubeViewer:
 
     def _densify(self, pdf: pd.DataFrame, var: str) -> np.ndarray:
         info = self.info()
-        arr = np.full((info["height"], info["width"]), np.nan, dtype=np.float32)
-        if len(pdf):
-            arr[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[var].to_numpy(
-                dtype=np.float32
-            )
-        return arr
+        return _densify(pdf, info["width"], info["height"], var)
 
     def frame(self, date: str, var: str = "ndvi") -> np.ndarray:
         """Dense (H, W) array of one date (:82-151). Partition-pruned when

@@ -62,6 +62,26 @@ def test_never_driver_verified_queries_fit_the_50_row_window():
     )
 
 
+def test_touched_after_green_tier_fits_the_50_row_window():
+    """Every query touched after its last driver-green row fronts the
+    window (``_TOUCHED_IN_ROUND``). If that tier outgrows 50 rows, some
+    touched query never gets its re-verification row, and nothing else
+    fails: registering more paths must wait for a driver round to
+    expire older entries."""
+    last = entry._last_green_round()
+    tier = [
+        n for n in entry.ALL_QUERIES
+        if last.get(n, 0) < entry._TOUCHED_IN_ROUND.get(n, 0)
+    ]
+    assert len(tier) <= 50, (
+        f"{len(tier)} queries touched after their last driver-green row; "
+        f"the driver re-checks only 50 per round: {tier}"
+    )
+    assert set(entry._TOUCHED_IN_ROUND) <= set(entry.ALL_QUERIES), (
+        sorted(set(entry._TOUCHED_IN_ROUND) - set(entry.ALL_QUERIES))
+    )
+
+
 def test_rotation_puts_least_recently_verified_first():
     """The driver verifies the first 50 queries() entries each round.
     r10 policy: queries MODIFIED after their last driver-green round

@@ -55,14 +55,36 @@ def test_join_queries_no_cartesian(spark, name):
     assert_no_cartesian(QUERIES[name](spark, SF_SMOKE))
 
 
+def _assert_hash_aggs_over_one_pixel_exchange(plan: str) -> None:
+    """A formatted plan has exactly one (y, x) pixel exchange, and only
+    hash aggregates above it: no Window, no ObjectHashAggregate. Above the
+    exchange the merge is a linear chain of aggregates, so every tree line
+    before it is one of its ancestors."""
+    import re
+
+    ids = re.findall(
+        r"^\((\d+)\) Exchange\n.*\nArguments: hashpartitioning\(y#\d+, x#\d+,",
+        plan, re.M,
+    )
+    assert len(ids) == 1, f"expected 1 pixel exchange, found {len(ids)}:\n{plan}"
+    tree = plan.split("\n\n")[0].splitlines()[1:]  # after "== Physical Plan =="
+    first = next(i for i, ln in enumerate(tree) if ln.endswith(f"Exchange ({ids[0]})"))
+    above = tree[:first]
+    assert above and all(
+        ln.strip("+- :*").startswith("HashAggregate") for ln in above
+    ), f"only hash aggregates may sit above the pixel exchange:\n{plan}"
+
+
 def test_merge_all_single_pixel_exchange(spark):
     """merge_all's two groupBys must share ONE pixel-table exchange: the
     explicit repartition(y, x) hash-clusters a subset of both grouping
     keys, so neither aggregate adds its own shuffle (2 exchanges -> 1,
-    the second hop eliminated at any scale)."""
+    the second hop eliminated at any scale). The date-level columns come
+    from a broadcast aggregate of the input's timestamps, whose exchange
+    moves one partial time set per date and task, not pixels."""
     from bloomy_etl_spark.operators.bloomy_queries import synthetic_pixels
     from bloomy_etl_spark.functions.indices import with_indices, with_masks
-    from bloomy_etl_spark.operators.merge import merge_spatial_tiles, merge_temporal
+    from bloomy_etl_spark.operators.merge import merge_all
     from pyspark.sql import functions as F
 
     px = (
@@ -70,14 +92,55 @@ def test_merge_all_single_pixel_exchange(spark):
         .filter(~F.col("mask"))
         .select("tile_id", "time", "y", "x", "ndvi", "evi")
     )
-    # per_date stage only (the full merge_temporal adds a window exchange
-    # over the tiny per-date table, which is expected)
-    two_aggs = merge_spatial_tiles(px.repartition("y", "x")).groupBy(
-        F.to_date("time").alias("date"), "y", "x"
-    ).agg(F.avg("ndvi").alias("ndvi"))
-    plan = plan_string(two_aggs)
-    n_exchange = plan.count(") Exchange")
-    assert n_exchange == 1, f"expected 1 exchange, found {n_exchange}:\n{plan}"
+    plan = plan_string(merge_all(px, track_tiles=False))
+    _assert_hash_aggs_over_one_pixel_exchange(plan)
+
+
+def test_cube_plan_has_no_window_over_merged_pixels(spark, monkeypatch):
+    """run_pipeline's cube (the plan its lazy pin checkpoints): one pixel
+    exchange, and above it only hash aggregates — no Window and no
+    ObjectHashAggregate. The same-day merge's timestamp and granule
+    count are computed per date on the kept-granule list and ride the
+    broadcast join, so nothing date-level is evaluated per merged
+    pixel."""
+    from bloomy_etl_spark import pipeline
+    from bloomy_etl_spark.operators.bloomy_queries import synthetic_pixels
+
+    pinned = []
+    real_pin = pipeline.pin
+
+    def spy(df, eager=True):
+        pinned.append(df)
+        return real_pin(df, eager)
+
+    monkeypatch.setattr(pipeline, "pin", spy)
+    pipeline.run_pipeline(
+        synthetic_pixels(spark, SF_SMOKE), detect=False, carry_kept_day_count=True
+    )
+    # the cube: the last pin run_pipeline makes
+    _assert_hash_aggs_over_one_pixel_exchange(plan_string(pinned[-1]))
+
+
+def test_write_cube_one_file_per_date(spark, tmp_path):
+    """write_cube clusters the cube by date before its date-partitioned
+    write: each date directory holds exactly one part file, however
+    many partitions the cube has."""
+    import glob
+    import os
+
+    from bloomy_etl_spark.operators.bloomy_queries import synthetic_pixels
+    from bloomy_etl_spark.pipeline import run_pipeline
+    from bloomy_etl_spark.sinks.writers import write_cube
+
+    cube = run_pipeline(synthetic_pixels(spark, SF_SMOKE), detect=False).cube
+    assert cube.rdd.getNumPartitions() > 1
+    write_cube(cube, str(tmp_path / "cube"))
+    dirs = glob.glob(str(tmp_path / "cube" / "date=*"))
+    assert dirs
+    counts = {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "part-*"))) for d in dirs
+    }
+    assert set(counts.values()) == {1}, counts
 
 
 def test_minhash_verify_never_broadcasts_shingle_rows(spark):

@@ -11,6 +11,7 @@ from __future__ import annotations
 import itertools
 import math
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -127,6 +128,149 @@ def test_merge_all_permutation_invariant(spark, rows, seed):
         return sorted(out, key=str)
 
     assert canon(df_of(rows)) == canon(df_of(shuffled))
+
+
+def _window_merge(good_px, merge_same_day=True, carry=()):
+    """The same-day merge as formulated before the date-level columns
+    moved to the granule list: a per-pixel ``collect_set`` of the times,
+    then a window over every merged pixel row. Kept here as the oracle
+    the cheaper formulation must equal bit for bit. That holds while each
+    task holds fewer groups than the ObjectHashAggregate's sort-based
+    fallback threshold (128): past it, the fallback reorders this side's
+    float sums by an ulp."""
+    from pyspark.sql import Window
+
+    spatial = good_px.repartition("y", "x").groupBy("time", "y", "x").agg(
+        F.avg("ndvi").alias("ndvi"),
+        F.avg("evi").alias("evi"),
+        F.concat_ws("+", F.array_sort(F.collect_set("tile_id"))).alias("tile_id"),
+        F.count(F.lit(1)).alias("num_tiles_merged"),
+        *[F.max(c).alias(c) for c in carry],
+    )
+    if not merge_same_day:
+        return spatial
+    per_date = spatial.groupBy(F.to_date("time").alias("date"), "y", "x").agg(
+        F.avg("ndvi").alias("ndvi"),
+        F.avg("evi").alias("evi"),
+        F.collect_set("time").alias("_ts"),
+        *[F.max(c).alias(c) for c in carry],
+    )
+    all_ts = F.array_sort(F.array_distinct(
+        F.flatten(F.collect_set("_ts").over(Window.partitionBy("date")))
+    ))
+    return per_date.select(
+        "y", "x", "ndvi", "evi", all_ts.alias("_all_ts"), *carry
+    ).select(
+        F.timestamp_micros((
+            F.aggregate(
+                F.transform("_all_ts", lambda t: F.unix_micros(t).cast("double")),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ) / F.size("_all_ts")
+        ).cast("long")).alias("time"),
+        "y", "x", "ndvi", "evi",
+        F.size("_all_ts").alias("num_granules_merged"),
+        *carry,
+    )
+
+
+def _random_raw_pixels(spark, seed):
+    """Seeded raw pixels over three tiles and five days. T1 and T2 share
+    the 10:xx timestamp every day; T1 adds a 14:xx granule on day 2 and
+    on some other days; T3's 16:xx granule on day 2 is entirely
+    cloud-masked (valid_px 0)."""
+    import datetime
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for day in range(1, 6):
+        granules = [("T1", 10), ("T2", 10)]
+        if day == 2 or rng.random() < 0.6:
+            granules.append(("T1", 14))
+        if day == 2:
+            granules.append(("T3", 16))
+        minute = {h: rng.choice([0, 7, 31]) for h in (10, 14, 16)}
+        for tile, hour in granules:
+            t = datetime.datetime(2024, 6, day, hour, minute[hour])
+            for y, x in itertools.product(range(3), range(3)):
+                red = rng.uniform(200.0, 3000.0)
+                nir = red * rng.uniform(1.0, 3.0)
+                blue = rng.uniform(100.0, 1400.0)
+                if tile == "T3":
+                    fmask = 2
+                else:
+                    fmask = rng.choice([0, 0, 0, 0, 2])
+                if rng.random() < 0.05:
+                    red = None
+                rows.append((tile, t, y, x, red, nir, blue, fmask))
+    return spark.createDataFrame(
+        rows,
+        "tile_id string, time timestamp, y int, x int, red double, "
+        "nir double, blue double, fmask int",
+    )
+
+
+_NO_VALID_MIN = QualityThresholds(valid_pixels_min=0.0, valid_pct_min=0.0)
+
+PIPELINE_CASES = {
+    "default": {},
+    "valid_px_zero_kept": {"q": _NO_VALID_MIN},
+    "no_quality_filter": {"disable_quality_filter": True},
+    "kept_day_count": {"carry_kept_day_count": True},
+    "no_same_day_merge": {"merge_same_day": False},
+}
+
+
+@pytest.mark.parametrize("case", sorted(PIPELINE_CASES))
+def test_pipeline_cube_equals_window_merge(spark, case):
+    """run_pipeline's cube equals the window formulation over the same
+    kept pixels: identical merged time, granule count, ndvi and evi.
+    Two tiles sharing a timestamp count once; a kept granule with no
+    unmasked pixel is not counted."""
+    from pyspark.sql import Window
+
+    from bloomy_etl_spark.pipeline import run_pipeline
+
+    kw = PIPELINE_CASES[case]
+    res = run_pipeline(_random_raw_pixels(spark, seed=17), detect=False, **kw)
+    kept = res.kept_stats.select("tile_id", "time")
+    carry = ()
+    if kw.get("carry_kept_day_count"):
+        kept = kept.withColumn(
+            "n_kept_granules",
+            F.count(F.lit(1)).over(Window.partitionBy(F.to_date("time"))),
+        )
+        carry = ("n_kept_granules",)
+    good = res.pixels.filter(~F.col("mask")).join(
+        F.broadcast(kept), ["tile_id", "time"], "inner"
+    ).select("tile_id", "time", "y", "x", "ndvi", "evi", *carry)
+    want = _window_merge(good, kw.get("merge_same_day", True), carry)
+    if case == "valid_px_zero_kept":
+        empty = res.kept_stats.filter(F.col("valid_px") == 0).count()
+        assert empty == 1, "the all-masked granule must be kept in this case"
+    cols = want.columns
+    got_rows = sorted(map(tuple, res.cube.select(*cols).collect()), key=repr)
+    want_rows = sorted(map(tuple, want.collect()), key=repr)
+    assert got_rows and got_rows == want_rows
+    if kw.get("merge_same_day", True):
+        # T1/T2 share 10:xx (counted once) and T3's all-masked 16:xx is
+        # not counted, so day 2 merges exactly its 10:xx and 14:xx
+        day2 = res.cube.filter(F.dayofmonth("time") == 2)
+        assert {r["num_granules_merged"] for r in day2.collect()} == {2}
+
+
+def test_merge_all_equals_window_merge(spark):
+    """merge_all on its own (q23, q25) attaches the date-level columns
+    from a broadcast aggregate of the input's times; the cube equals the
+    window formulation's bit for bit."""
+    px = with_indices(with_masks(_random_raw_pixels(spark, seed=5)))
+    good = px.filter(~F.col("mask")).select("tile_id", "time", "y", "x", "ndvi", "evi")
+    got = merge_all(good)
+    want = _window_merge(good)
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
 
 
 @given(

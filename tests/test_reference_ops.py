@@ -227,6 +227,30 @@ def test_two_stage_merge_weighting_and_mean_timestamp(spark):
     assert row["num_granules_merged"] == 2
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_merge_all_keeps_null_time_row(spark, ansi):
+    """A pixel with a NULL ``time`` has no date: it is not dropped by the
+    join that attaches the date-level columns, it merges to a row with a
+    NULL time and ``num_granules_merged`` 0, and nothing divides by the
+    empty time set (so ANSI mode does not raise)."""
+    rows = [
+        ("T1", T0, 0, 0, 0.2, 1.0),
+        ("T1", None, 0, 1, 0.4, 2.0),
+    ]
+    df = spark.createDataFrame(rows, MERGED_SCHEMA)
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        out = {(r["y"], r["x"]): r for r in merge_all(df).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)
+    assert set(out) == {(0, 0), (0, 1)}
+    assert out[(0, 0)]["time"] == T0 and out[(0, 0)]["num_granules_merged"] == 1
+    assert out[(0, 1)]["time"] is None
+    assert out[(0, 1)]["num_granules_merged"] == 0
+    assert out[(0, 1)]["ndvi"] == pytest.approx(0.4)
+
+
 SERIES_SCHEMA = "time timestamp, date string, v double"
 
 

@@ -52,6 +52,11 @@ def test_frame_and_nan_gaps(spark, tiny_cube):
     assert np.isnan(fr[1, 1])  # observed but NULL ndvi
 
 
+def test_frame_of_absent_date_is_all_nan(spark, tiny_cube):
+    fr = CubeViewer(spark, tiny_cube).frame("2024-03-01")
+    assert fr.shape == (2, 2) and np.isnan(fr).all()
+
+
 def test_pixel_series(spark, tiny_cube):
     s = CubeViewer(spark, tiny_cube).pixel_series(1, 1)
     assert len(s) == 2
